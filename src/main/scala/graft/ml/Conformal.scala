@@ -31,7 +31,7 @@ object Conformal {
     */
   def ols2Interval(df: DataFrame, idCols: Seq[String],
                    x1Col: String, x2Col: String, yCol: String,
-                   alpha: Double = 0.1, shards: Int = 0): DataFrame = {
+                   alpha: Double = 0.1): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
     require(idCols.nonEmpty, "need id columns for the deterministic split")
     val even = conv(substring(md5(concat_ws("_",
@@ -55,14 +55,13 @@ object Conformal {
           + col("b2") * col(x2Col).cast("double"))).as("__r"))
       .localCheckpoint() // histogram + coverage both read it
     val hist = resid.groupBy(col("__r")).agg(count(lit(1)).as("__t"))
-    val n = hist.agg(sum(col("__t")).as("__n"))
-    val cum = RankedStats.withCumulative(hist, Nil, "__r", Seq("__t"), shards)
     // k-th order statistic: smallest residual whose cumulative count
     // reaches k = ceil((n+1)(1-alpha)); k > n (tiny calibration set)
     // degenerates to the max residual
-    val q = cum.crossJoin(broadcast(n))
+    val n = col("__tot___t")
+    val q = RankedStats.withCumulative(hist, Nil, "__r", Seq("__t"))
       .select(col("__r"), col("__cum___t"),
-        least(ceil((col("__n") + 1) * lit(1.0 - alpha)), col("__n")).as("__k"))
+        least(ceil((n + 1) * lit(1.0 - alpha)), n).as("__k"))
       .filter(col("__cum___t") >= col("__k"))
       .agg(min(col("__r")).as("__q"))
     resid.crossJoin(broadcast(q))

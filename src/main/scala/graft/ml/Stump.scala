@@ -32,30 +32,28 @@ object Stump {
     * valid candidate) yields one all-null row — the 1-row aggregate's
     * empty-input shape.
     */
-  def train(df: DataFrame, featureCol: String, labelCol: String,
-            shards: Int = 0): DataFrame = {
+  def train(df: DataFrame, featureCol: String, labelCol: String): DataFrame = {
     val hist = df.select(col(featureCol).cast("double").as("__v"),
         col(labelCol).cast("boolean").cast("long").as("__y"))
       .filter(col("__v").isNotNull && col("__y").isNotNull)
       .groupBy(col("__v"))
       .agg(count(lit(1)).as("__t"), sum(col("__y")).as("__p"))
-      .localCheckpoint() // totals + cumsum both read it: one corpus scan
-    val tot = hist.agg(sum(col("__t")).as("__tn"), sum(col("__p")).as("__tp"))
-    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t", "__p"), shards)
     def gini(pos: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) = {
       val p = pos.cast("double") / n.cast("double")
       lit(1.0) - p * p - (lit(1.0) - p) * (lit(1.0) - p)
     }
     val nl = col("__cum___t")
     val pl = col("__cum___p")
-    val nr = col("__tn") - nl
-    val pr = col("__tp") - pl
-    val split = (nl.cast("double") / col("__tn")) * gini(pl, nl) +
-      (nr.cast("double") / col("__tn")) * gini(pr, nr)
-    val cand = cum.crossJoin(broadcast(tot))
+    val tn = col("__tot___t")
+    val tp = col("__tot___p")
+    val nr = tn - nl
+    val pr = tp - pl
+    val split = (nl.cast("double") / tn) * gini(pl, nl) +
+      (nr.cast("double") / tn) * gini(pr, nr)
+    val cand = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t", "__p"))
       .filter(nr > 0) // the max value splits nothing off
       .select(col("__v"), split.as("__imp"), nl.as("__nl"), nr.as("__nr"),
-        pl.as("__pl"), pr.as("__pr"), col("__tn"), col("__tp"))
+        pl.as("__pl"), pr.as("__pr"), tn.as("__tn"), tp.as("__tp"))
     cand
       .agg(min_by(struct(col("__v"), col("__imp"), col("__nl"), col("__nr"),
           col("__pl"), col("__pr"), col("__tn"), col("__tp")),

@@ -82,26 +82,21 @@ object Calibration {
     * both null when a class is empty — ranking quality is undefined,
     * not zero). Null scores/labels drop; empty input → zero rows.
     */
-  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String,
-             shards: Int = 0): DataFrame = {
+  def rocAuc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val hist = df
       .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(col(scoreCol).cast("double").as("__v"),
         col(labelCol).cast("int").cast("long").as("__y"))
       .groupBy(col("__v"))
       .agg(count(lit(1)).as("__t"), sum(col("__y")).as("__p"))
-    // class sizes from the cheap histogram re-aggregate (1 row,
-    // broadcast), not a window over the cumsum'd table
-    val tot = hist.agg(sum(col("__t")).as("__n"), sum(col("__p")).as("__np"))
-    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t", "__p"), shards)
+    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t", "__p"))
     val t = col("__t").cast("double")
     val midrank = (col("__cum___t") - col("__t")).cast("double") + (t + 1) / 2
-    val tp = col("__np") - (col("__cum___p") - col("__p"))
-    val pp = col("__n") - (col("__cum___t") - col("__t"))
+    val tp = col("__tot___p") - (col("__cum___p") - col("__p"))
+    val pp = col("__tot___t") - (col("__cum___t") - col("__t"))
     val np = col("__np").cast("double")
     val nn = (col("__n") - col("__np")).cast("double")
-    cum.crossJoin(broadcast(tot))
-      .groupBy(col("__n"), col("__np"))
+    cum.groupBy(col("__tot___t").as("__n"), col("__tot___p").as("__np"))
       .agg(sum(col("__p") * midrank).as("__rp"),
         sum(col("__p").cast("double") * tp.cast("double") / pp.cast("double"))
           .as("__apn"))

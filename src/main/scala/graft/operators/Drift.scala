@@ -75,7 +75,7 @@ object Drift {
     * already handles.
     */
   def numericDrift(a: DataFrame, b: DataFrame, valCol: String,
-                   bins: Int = 10, shards: Int = 0): DataFrame = {
+                   bins: Int = 10): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
     // The 1-row edges frame is consumed by BOTH binned sides —
     // materialize the percentile dataflow once. Materializing also lets
@@ -84,7 +84,7 @@ object Drift {
     // crossJoin would silently empty snapshot b too (diverging from the
     // oracle form, which bins all b rows into bin 0).
     val edges = Percentiles.exact(a, Nil, valCol,
-      (1 until bins).map(_.toDouble / bins), out = "__edges", shards = shards)
+      (1 until bins).map(_.toDouble / bins), out = "__edges")
       .localCheckpoint()
     require(!edges.isEmpty,
       s"numericDrift: reference snapshot has no non-null '$valCol' values " +

@@ -81,9 +81,11 @@ object FuzzyJoin {
 
   /** The distinct lengths present on the index side — the probe prune's
     * literal key set. One tiny driver job, output bounded by the longest
-    * string (sorted so the literal is deterministic). */
+    * string (sorted so the literal is deterministic). A NULL string has
+    * no length and no segments, so it joins nothing and is skipped. */
   private def presentLens(strs: DataFrame): Seq[Long] =
-    strs.select(col("len")).distinct().collect().map(_.getLong(0)).sorted.toSeq
+    strs.select(col("len")).filter(col("len").isNotNull).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq
 
   /** Pin the VERIFY stage's parallelism: distribute the deduped probe
     * rows on the segment join key across the session's shuffle

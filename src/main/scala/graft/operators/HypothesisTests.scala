@@ -32,19 +32,15 @@ object HypothesisTests {
     * unguarded 0/0 ratio would produce.
     */
   def ksTest(df: DataFrame, sideCol: String, valueCol: String,
-             sideA: String, sideB: String, shards: Int = 0): DataFrame = {
+             sideA: String, sideB: String): DataFrame = {
     val hist = twoSideHistogram(df, sideCol, valueCol, sideA, sideB)
-    // sample sizes come from the cheap histogram aggregate (1 row,
-    // broadcast) — not a window over the cumsum'd side
-    val tot = hist.agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b"))
-    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__ca", "__cb"), shards)
     val emptySide = col("n_a") === 0 || col("n_b") === 0
-    cum.crossJoin(broadcast(tot))
-      .groupBy(col("n_a"), col("n_b"))
+    RankedStats.withCumulative(hist, Nil, "__v", Seq("__ca", "__cb"))
+      .groupBy(col("__tot___ca").as("n_a"), col("__tot___cb").as("n_b"))
       // try_divide: an empty side's n = 0 must null the ECDF (ANSI mode
       // would throw inside the aggregate, ahead of the output guard)
-      .agg(max(abs(try_divide(col("__cum___ca").cast("double"), col("n_a"))
-        - try_divide(col("__cum___cb").cast("double"), col("n_b")))).as("__d"))
+      .agg(max(abs(try_divide(col("__cum___ca").cast("double"), col("__tot___ca"))
+        - try_divide(col("__cum___cb").cast("double"), col("__tot___cb")))).as("__d"))
       .select(col("n_a"), col("n_b"),
         when(emptySide, lit(null).cast("double"))
           .otherwise(round(col("__d") + lit(1e-12), 6)).as("ks_d"),
@@ -68,9 +64,9 @@ object HypothesisTests {
     * vacuous 0 the raw arithmetic lands on.
     */
   def mannWhitneyU(df: DataFrame, sideCol: String, valueCol: String,
-                   sideA: String, sideB: String, shards: Int = 0): DataFrame = {
+                   sideA: String, sideB: String): DataFrame = {
     val hist = twoSideHistogram(df, sideCol, valueCol, sideA, sideB)
-    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t"), shards)
+    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t"))
     val t = col("__t").cast("double")
     val midrank = (col("__cum___t") - col("__t")).cast("double") + (t + 1) / 2
     cum.agg(
@@ -108,18 +104,15 @@ object HypothesisTests {
     * per-row rank materialization; the corpus is touched by exactly two
     * scans (histogram + flagging).
     */
-  def bhReject(df: DataFrame, pCol: String, q: Double,
-               shards: Int = 0): DataFrame = {
+  def bhReject(df: DataFrame, pCol: String, q: Double): DataFrame = {
     require(q > 0 && q < 1, s"FDR level q must be in (0,1), got $q")
     val hist = df.select(col(pCol).cast("double").as("__p"))
       .filter(col("__p").isNotNull)
       .groupBy(col("__p")).agg(count(lit(1)).as("__t"))
-    val m = hist.agg(sum(col("__t")).as("__m"))
-    val cum = RankedStats.withCumulative(hist, Nil, "__p", Seq("__t"), shards)
     // p ≤ (k/m)·q at the block's top rank k = cum; spelled p·m ≤ k·q so
     // both engines evaluate the same two exact products
-    val cutoff = cum.crossJoin(broadcast(m))
-      .agg(max(when(col("__p") * col("__m")
+    val cutoff = RankedStats.withCumulative(hist, Nil, "__p", Seq("__t"))
+      .agg(max(when(col("__p") * col("__tot___t")
         <= col("__cum___t").cast("double") * q, col("__p"))).as("__pstar"))
     df.crossJoin(broadcast(cutoff))
       .withColumn("rejected",
@@ -139,12 +132,11 @@ object HypothesisTests {
     * One output row: `k`, `n`, `h_stat`, `h_corrected` (rounded 6;
     * `h_corrected` null when every pooled value is tied).
     */
-  def kruskalWallis(df: DataFrame, groupCol: String, valueCol: String,
-                    shards: Int = 0): DataFrame = {
+  def kruskalWallis(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val base = df.select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull && col("__g").isNotNull)
     val pool = base.groupBy(col("__v")).agg(count(lit(1)).as("__t"))
-    val cum = RankedStats.withCumulative(pool, Nil, "__v", Seq("__t"), shards)
+    val cum = RankedStats.withCumulative(pool, Nil, "__v", Seq("__t"))
       .select(col("__v"), col("__t"),
         ((col("__cum___t") - col("__t")).cast("double")
           + (col("__t").cast("double") + 1) / 2).as("__mid"))
@@ -309,8 +301,7 @@ object HypothesisTests {
     * Output: groupCols..., `n`, `rho` (rounded 6; null when either
     * column is constant within the group — rank variance is zero).
     */
-  def spearman(df: DataFrame, groupCols: Seq[String], xCol: String, yCol: String,
-               shards: Int = 0): DataFrame = {
+  def spearman(df: DataFrame, groupCols: Seq[String], xCol: String, yCol: String): DataFrame = {
     val gcols = groupCols.map(col)
     // rows feeds three consumers (both rank-table histograms and the
     // final join) — materialize the narrow projection once instead of
@@ -322,7 +313,7 @@ object HypothesisTests {
       .localCheckpoint()
     def rankTable(c: String, out: String) = {
       val hist = rows.groupBy(gcols :+ col(c): _*).agg(count(lit(1)).as("__t"))
-      RankedStats.withCumulative(hist, groupCols, c, Seq("__t"), shards)
+      RankedStats.withCumulative(hist, groupCols, c, Seq("__t"))
         .select(gcols :+ col(c) :+
           (lit(2L) * (col("__cum___t") - col("__t")) + col("__t") + lit(1L)).as(out): _*)
     }
@@ -474,7 +465,7 @@ object HypothesisTests {
     * Both exact-by-construction, joined as two 1-row broadcasts.
     */
   def effectSizes(df: DataFrame, sideCol: String, valueCol: String,
-                  sideA: String, sideB: String, shards: Int = 0): DataFrame = {
+                  sideA: String, sideB: String): DataFrame = {
     val v = col(valueCol).cast("decimal(18,2)")
     val per = df.filter(col(valueCol).isNotNull && col(sideCol).isin(sideA, sideB))
       .groupBy(col(sideCol).as("__g"))
@@ -487,7 +478,7 @@ object HypothesisTests {
       pick(sideA, "__q").as("__qa"), pick(sideB, "__q").as("__qb"))
     // U from the same midrank cumsum as mannWhitneyU
     val hist = twoSideHistogram(df, sideCol, valueCol, sideA, sideB)
-    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t"), shards)
+    val cum = RankedStats.withCumulative(hist, Nil, "__v", Seq("__t"))
     val t = col("__t").cast("double")
     val midrank = (col("__cum___t") - col("__t")).cast("double") + (t + 1) / 2
     val u = cum.agg(sum(col("__ca") * midrank).as("__ra"))

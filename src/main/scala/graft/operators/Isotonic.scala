@@ -33,7 +33,7 @@ object Isotonic {
     * `digits` ≥ 0 bounds the level count as described above.
     */
   def fit(df: DataFrame, scoreCol: String, labelCol: String,
-          digits: Int = 2, shards: Int = 0): DataFrame = {
+          digits: Int = 2): DataFrame = {
     require(digits >= 0, s"digits must be >= 0, got $digits")
     // +1e-12 before the quantizing round: Spark rounds the shortest
     // decimal string HALF_UP while other engines round the binary
@@ -46,7 +46,7 @@ object Isotonic {
       .groupBy(col("__s"))
       .agg(count(lit(1)).as("__n"), sum(col("__y")).as("__p"))
       .localCheckpoint() // the cumsum AND the final join read it
-    val cum = RankedStats.withCumulative(lev, Nil, "__s", Seq("__n", "__p"), shards)
+    val cum = RankedStats.withCumulative(lev, Nil, "__s", Seq("__n", "__p"))
       .select(col("__s"), col("__n"), col("__p"),
         col("__cum___n").as("__cn"), col("__cum___p").as("__cp"))
       .localCheckpoint() // both sides of the level-pair join read it

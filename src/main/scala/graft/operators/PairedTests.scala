@@ -175,15 +175,14 @@ object PairedTests {
     * so W⁺ and the tie term are order- and partitioning-independent.
     * No global sort, no per-row rank materialization.
     */
-  def wilcoxonSignedRank(df: DataFrame, xCol: String, yCol: String,
-                         shards: Int = 0): DataFrame = {
+  def wilcoxonSignedRank(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val d = col(xCol).cast("double") - col(yCol).cast("double")
     val hist = df.select(d.as("__d"))
       .filter(col("__d").isNotNull && col("__d") =!= 0.0)
       .groupBy(abs(col("__d")).as("__a"))
       .agg(sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__cp"),
         count(lit(1)).as("__t"))
-    val cum = RankedStats.withCumulative(hist, Nil, "__a", Seq("__t"), shards)
+    val cum = RankedStats.withCumulative(hist, Nil, "__a", Seq("__t"))
     val t = col("__t").cast("double")
     val midrank = (col("__cum___t") - col("__t")).cast("double") + (t + 1) / 2
     val nD = col("n").cast("double")

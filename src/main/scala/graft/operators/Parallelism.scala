@@ -22,12 +22,15 @@ import org.apache.spark.sql.DataFrame
   * local-core-count constant. Use immediately before a load-bearing
   * localCheckpoint whose consumers do per-row arithmetic; safe only for
   * consumers that are row-order-free (the repo's exact-sum discipline).
+  * The input must be free of exchanges (a scan plus narrow operators):
+  * under AQE, `df.rdd` runs the jobs of every upstream query stage just
+  * to count partitions.
   */
 object Parallelism {
 
   def widened(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sessionState.conf.numShufflePartitions
-    // partition planning only — no job
+    // partition planning only — no job, given an exchange-free input
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 }

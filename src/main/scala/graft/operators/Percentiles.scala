@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact interpolated percentiles from a distinct-value histogram — the
@@ -13,22 +12,15 @@ import org.apache.spark.sql.functions._
   * bounded by the number of groups (3 tasks for a 3-group corpus). At
   * 100 TB that final stage is the whole job, and a heavy group OOMs it.
   *
-  * This operator computes the identical result as a dataflow:
-  *
-  *   1. histogram: groupBy(group, value) -> count. Parallel everywhere,
-  *      shrinks rows to distinct values, map-side partial aggregation.
-  *   2. range-shard the histogram by (group, value) — contiguous value
-  *      ranges per shard (`repartitionByRange`, materialized once so
-  *      every consumer sees ONE boundary assignment; see the
-  *      localCheckpoint note below).
-  *   3. two-level cumulative count: a window cumsum WITHIN each
-  *      (group, shard) — parallelism = groups x shards, spillable — plus
-  *      a broadcast join of per-shard offsets (a groups x shards -row
-  *      aggregate, cumsum'd over shard ids).
-  *   4. the rows covering rank floor(p*(n-1)) / ceil(p*(n-1)) are
-  *      selected by `cum - cnt <= rank < cum` and interpolated with
-  *      Spark's own formula, so results are bit-identical to
-  *      `percentile(col, p)` (interpolation special cases included).
+  * This operator computes the identical result as a dataflow: a
+  * groupBy(group, value) histogram, the cumulative counts and group
+  * totals of [[RankedStats.withCumulative]] (range-sharded two-level
+  * prefix sum; its scaladoc carries the checkpoint and partition-count
+  * caveats), then interpolation. The rows covering rank
+  * floor(p*(n-1)) / ceil(p*(n-1)) are selected by
+  * `cum - cnt <= rank < cum` and interpolated with Spark's own formula,
+  * so results are bit-identical to `percentile(col, p)` (interpolation
+  * special cases included).
   *
   * No stage buffers more than a shard of distinct values; no stage's
   * parallelism is bounded by the group count alone.
@@ -50,10 +42,8 @@ object Percentiles {
     * values are all null vanish (the aggregate form would emit null).
     */
   def exact(df: DataFrame, groupCols: Seq[String], valCol: String,
-            ps: Seq[Double], out: String = "percentiles",
-            shards: Int = 0): DataFrame =
-    fromHistogram(histogram(df, groupCols, valCol), groupCols, "__v", "__cnt",
-      ps, out, shards)
+            ps: Seq[Double], out: String = "percentiles"): DataFrame =
+    fromHistogram(histogram(df, groupCols, valCol), groupCols, "__v", "__cnt", ps, out)
 
   /** Weighted exact percentiles: each row's value counts `weightCol`
     * times — identical semantics (interpolation included) to the builtin
@@ -65,14 +55,14 @@ object Percentiles {
     */
   def weightedExact(df: DataFrame, groupCols: Seq[String], valCol: String,
                     weightCol: String, ps: Seq[Double],
-                    out: String = "percentiles", shards: Int = 0): DataFrame = {
+                    out: String = "percentiles"): DataFrame = {
     val hist = df.select(groupCols.map(col)
         :+ col(valCol).cast("double").as("__v")
         :+ col(weightCol).cast("long").as("__w"): _*)
       .filter(col("__v").isNotNull && col("__w") > 0)
       .groupBy(groupCols.map(col) :+ col("__v"): _*)
       .agg(sum(col("__w")).as("__cnt"))
-    fromHistogram(hist, groupCols, "__v", "__cnt", ps, out, shards)
+    fromHistogram(hist, groupCols, "__v", "__cnt", ps, out)
   }
 
   /** Percentiles from a pre-aggregated (value, weight) histogram — the
@@ -83,68 +73,27 @@ object Percentiles {
     * must be double-typed and non-null; counts positive.
     */
   def fromHistogram(hist: DataFrame, groupCols: Seq[String], valCol: String,
-                    cntCol: String, ps: Seq[Double], out: String = "percentiles",
-                    shards: Int = 0): DataFrame = {
+                    cntCol: String, ps: Seq[Double],
+                    out: String = "percentiles"): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       "percentiles must be in [0, 1]")
-    val nShards =
-      if (shards > 0) shards
-      else hist.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val gcols = groupCols.map(col)
-    val cnt = col(cntCol).cast("long")
-
-    // Order-preserving shards: contiguous (group, value) ranges. The shard
-    // id must be captured BEFORE the window's hash exchange moves rows,
-    // and the localCheckpoint is LOAD-BEARING: the level-1 and level-2
-    // branches below each read `ranged`, and without materialization
-    // each re-instantiates the range exchange — RangePartitioner SAMPLES
-    // its boundaries with a per-instantiation seed, so the two branches
-    // can assign the same row to different shards and the stitched
-    // cumulative counts silently corrupt (caught by a RankedStats cumsum
-    // diff; the exchanges do NOT get ReusedExchange'd because each
-    // branch prunes different columns). Materializing the histogram
-    // (distinct values, not corpus rows) stays bounded at any SF.
-    val ranged = hist
-      .repartitionByRange(nShards, gcols :+ col(valCol): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-
-    // Level 1: cumulative count within (group, shard), ordered by value.
-    // Explicit partition count on the window's exchange — AQE byte-based
-    // coalescing otherwise merges a byte-small histogram's shards into
-    // one partition and serializes the cumsum (see RankedStats).
-    val wLoc = Window.partitionBy(gcols :+ col("__pid"): _*).orderBy(col(valCol))
-    val local = ranged.repartition(nShards, gcols :+ col("__pid"): _*)
-      .withColumn("__lcum", sum(cnt).over(wLoc))
-
-    // Level 2: shard totals -> exclusive offsets + group totals. Tiny
-    // (groups x shards rows); shares `ranged`'s exchange with level 1.
-    val wOff = Window.partitionBy(gcols: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranged
-      .groupBy(gcols :+ col("__pid"): _*)
-      .agg(sum(cnt).as("__stot"))
-      .select(gcols ++ Seq(col("__pid"),
-        coalesce(sum(col("__stot")).over(wOff), lit(0L)).as("__off"),
-        sum(col("__stot")).over(Window.partitionBy(gcols: _*)).as("__n")): _*)
-
-    val cum = local.join(broadcast(offsets), groupCols :+ "__pid")
-      .withColumn("__cum", col("__lcum") + col("__off"))
+    val cum = col(s"__cum_$cntCol")
+    val n = col(s"__tot_$cntCol")
 
     // Per requested percentile p: 0-indexed position p*(n-1); the rows
     // whose cumulative range covers floor/ceil of it carry the two keys.
-    val n1 = (col("__n") - 1).cast("double")
-    val aggs = max(col("__n")).as("__nn") +: ps.zipWithIndex.flatMap { case (p, i) =>
-      val pos = lit(p) * n1
+    val aggs = max(n).as("__nn") +: ps.zipWithIndex.flatMap { case (p, i) =>
+      val pos = lit(p) * (n - 1).cast("double")
       val loRank = floor(pos).cast("long")
       val hiRank = ceil(pos).cast("long")
-      val from = col("__cum") - col(cntCol)
+      val from = cum - col(cntCol)
       Seq(
-        max(when(from <= loRank && loRank < col("__cum"), col(valCol))).as(s"__vl$i"),
-        max(when(from <= hiRank && hiRank < col("__cum"), col(valCol))).as(s"__vu$i"))
+        max(when(from <= loRank && loRank < cum, col(valCol))).as(s"__vl$i"),
+        max(when(from <= hiRank && hiRank < cum, col(valCol))).as(s"__vu$i"))
     }
-    val agged = cum.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
-
+    val agged = RankedStats.withCumulative(hist, groupCols, valCol, Seq(cntCol))
+      .groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
     // Spark Percentile.getPercentile interpolation, special cases and
     // operation order included: integral position or equal keys -> lower
     // key; else (higher - pos) * lower + (pos - lower) * higher.

@@ -5,13 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Order statistics over a distinct-value histogram — the shared
-  * dataflow under the rank-based operators (two-sample tests, Gini
-  * concentration, BH multiple-testing control).
+  * dataflow under every rank- and percentile-based operator (two-sample
+  * tests, Gini concentration, BH multiple-testing control, exact
+  * percentiles, the Zipf rank fit).
   *
   * The naive formulation of every rank statistic is a GLOBAL window
   * (`row_number() over (order by value)`): one task sorts the corpus. At
-  * 100 TB that task is the job. This helper provides the same cumulative
-  * counts through the [[Percentiles]] discipline:
+  * 100 TB that task is the job. [[withCumulative]] provides the same
+  * cumulative counts as a two-level prefix sum:
   *
   *   1. the caller reduces rows to a distinct-value histogram (groupBy
   *      value — parallel everywhere, map-side partials, output is
@@ -31,53 +32,70 @@ import org.apache.spark.sql.functions._
   */
 object RankedStats {
 
-  /** Appends `__cum_<c>` — the inclusive cumulative sum of each count
-    * column `c`, ordered by `valueCol` ascending within each group — to
-    * a histogram that has at most one row per (group, value). Two-level
-    * cumsum as described above; no global sort, no single hot task.
+  /** The range-sharded two-level prefix sum. Takes a histogram with at
+    * most one row per (group, value) and appends, per count column `c`:
+    *
+    *   - `__cum_<c>`: the inclusive cumulative sum of `c`, ordered by
+    *     `valueCol` ascending within each group;
+    *   - `__tot_<c>`: the group's total of `c`, identical on every row
+    *     of the group. Consumers read it for n instead of
+    *     re-aggregating the histogram; it comes off the groups × shards
+    *     offsets table the kernel builds anyway.
+    *
+    * `valueCol` may be any orderable type. Ranking by a unique key (for
+    * example `struct(-cnt, token)` with a count column of `1L`) makes
+    * `__cum_<c>` a dense 1-based rank. The shard count is the session's
+    * `spark.sql.shuffle.partitions`.
+    *
+    * Two caveats hold for every two-level prefix sum over a RANGE
+    * exchange, and this is the one place that handles them:
+    *
+    *   - The range-sharded frame must be checkpointed. The local-cumsum
+    *     and offsets branches both read it, and unmaterialized each
+    *     would re-instantiate the range exchange. RangePartitioner
+    *     samples its boundaries with a seed per RDD instantiation, so
+    *     two branches can disagree on which shard a row belongs to and
+    *     silently corrupt every stitched cumulative sum (observed:
+    *     ~2500/3310 rows wrong; the two exchanges are not reused because
+    *     each branch prunes different columns). The localCheckpoint
+    *     makes the shard id a fact, not a replay, and costs one
+    *     histogram-sized materialization.
+    *   - The window exchange needs an explicit partition count. The
+    *     local cumsum needs hashpartitioning(group, shard); left
+    *     implicit, AQE's byte-based coalescing merges that exchange's
+    *     read into one partition whenever the histogram is byte-small (a
+    *     ~5 MB histogram of 594k rows measured as ONE task sorting and
+    *     summing everything). The explicit count pins the distribution;
+    *     it is the same single exchange the window already required.
+    *
+    * Two-level prefix sums whose shard id is arithmetic on the key
+    * ([[Sampling.globalShuffleOrder]], [[graft.text.Pack.chunkAssignments]])
+    * have no range exchange and need neither pin.
     */
   def withCumulative(hist: DataFrame, groupCols: Seq[String], valueCol: String,
-                     cntCols: Seq[String], shards: Int = 0): DataFrame = {
-    val nShards =
-      if (shards > 0) shards
-      else hist.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+                     cntCols: Seq[String]): DataFrame = {
+    val nShards = hist.sparkSession.sessionState.conf.numShufflePartitions
     val gcols = groupCols.map(col)
-
-    // Order-preserving shards; capture the shard id BEFORE the window's
-    // hash exchange moves rows. The localCheckpoint is LOAD-BEARING: the
-    // local-cumsum and offsets branches below would otherwise each
-    // re-instantiate this range exchange, and RangePartitioner's
-    // boundary SAMPLING is seeded per RDD instantiation — two branches
-    // can disagree on which shard a row belongs to, silently corrupting
-    // every cumulative sum (observed: ~2500/3310 rows wrong). Pinning
-    // the materialized histogram makes the pid a fact, not a replay.
+    // capture the shard id BEFORE the window's hash exchange moves rows
     val ranged = hist
       .repartitionByRange(nShards, gcols :+ col(valueCol): _*)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint()
 
-    // The local-cumsum window needs hashpartitioning(group, __pid); left
-    // implicit, AQE's BYTE-based coalescing merges that exchange's read
-    // to one partition whenever the histogram is byte-small (a ~5 MB
-    // histogram of 594k rows measured as ONE task sorting+cumsumming
-    // everything — the whole "parallelism = groups × shards" design
-    // silently serialized). An explicit partition count pins the
-    // distribution against the coalesce; it is the same single exchange
-    // the window already required.
-    val sharded = ranged.repartition(nShards, gcols :+ col("__pid"): _*)
     val wLoc = Window.partitionBy(gcols :+ col("__pid"): _*).orderBy(col(valueCol))
-    val local = cntCols.foldLeft(sharded) { (d, c) =>
-      d.withColumn(s"__l_$c", sum(col(c)).over(wLoc))
+    val local = cntCols.foldLeft(ranged.repartition(nShards, gcols :+ col("__pid"): _*)) {
+      (d, c) => d.withColumn(s"__l_$c", sum(col(c)).over(wLoc))
     }
 
-    val wOff = Window.partitionBy(gcols: _*).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val wGroup = Window.partitionBy(gcols: _*)
+    val wOff = wGroup.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)
+    val shardTotals = cntCols.map(c => sum(col(c)).as(s"__t_$c"))
     val offsets = ranged
       .groupBy(gcols :+ col("__pid"): _*)
-      .agg(cntCols.map(c => sum(col(c)).as(s"__t_$c")).head,
-        cntCols.map(c => sum(col(c)).as(s"__t_$c")).tail: _*)
-      .select(gcols ++ (col("__pid") +: cntCols.map(c =>
-        coalesce(sum(col(s"__t_$c")).over(wOff), lit(0L)).as(s"__o_$c"))): _*)
+      .agg(shardTotals.head, shardTotals.tail: _*)
+      .select(gcols ++ (col("__pid") +: cntCols.flatMap(c => Seq(
+        coalesce(sum(col(s"__t_$c")).over(wOff), lit(0L)).as(s"__o_$c"),
+        sum(col(s"__t_$c")).over(wGroup).as(s"__tot_$c")))): _*)
 
     cntCols.foldLeft(local.join(broadcast(offsets), groupCols :+ "__pid")) {
         (d, c) => d.withColumn(s"__cum_$c", col(s"__l_$c") + col(s"__o_$c"))
@@ -99,20 +117,15 @@ object RankedStats {
     * the [[HypothesisTests.spearman]] dataflow for one variable.
     * Midranks are exact half-integers; one double division per row.
     */
-  def quantileNormalize(df: DataFrame, groupCols: Seq[String], valCol: String,
-                        shards: Int = 0): DataFrame = {
+  def quantileNormalize(df: DataFrame, groupCols: Seq[String], valCol: String): DataFrame = {
     val gcols = groupCols.map(col)
     val hist = df.filter(col(valCol).isNotNull)
       .groupBy(gcols :+ col(valCol): _*).agg(count(lit(1)).as("__t"))
-      .localCheckpoint() // cumsum + group totals both read it
-    val cum = withCumulative(hist, groupCols, valCol, Seq("__t"), shards)
-    val tot = hist.groupBy(gcols: _*).agg(sum(col("__t")).as("__n"))
     val t = col("__t").cast("double")
     val midrank = (col("__cum___t") - col("__t")).cast("double") + (t + 1) / 2
-    val ranks = cum.select(gcols :+ col(valCol) :+ midrank.as("__mid"): _*)
-      .join(broadcast(tot), groupCols)
+    val ranks = withCumulative(hist, groupCols, valCol, Seq("__t"))
       .select(gcols :+ col(valCol) :+
-        (col("__mid") / (col("__n") + 1).cast("double")).as("__qu"): _*)
+        (midrank / (col("__tot___t") + 1).cast("double")).as("__qu"): _*)
     df.join(ranks, groupCols :+ valCol)
       .withColumn("q_uniform", round(col("__qu") + lit(1e-12), 6))
       .drop("__qu")
@@ -132,15 +145,14 @@ object RankedStats {
     *
     * Output: groupCols..., `n` (row count), `gini` (rounded to 6).
     */
-  def gini(df: DataFrame, groupCols: Seq[String], valCol: String,
-           shards: Int = 0): DataFrame = {
+  def gini(df: DataFrame, groupCols: Seq[String], valCol: String): DataFrame = {
     val gcols = groupCols.map(col)
     val hist = df
       .select(gcols :+ col(valCol).cast("double").as("__v"): _*)
       .filter(col("__v").isNotNull)
       .groupBy(gcols :+ col("__v"): _*)
       .agg(count(lit(1)).as("__t"))
-    val cum = withCumulative(hist, groupCols, "__v", Seq("__t"), shards)
+    val cum = withCumulative(hist, groupCols, "__v", Seq("__t"))
     val t = col("__t").cast("double")
     val before = (col("__cum___t") - col("__t")).cast("double")
     cum.groupBy(gcols: _*)

@@ -28,7 +28,7 @@ object Rfm {
     * together (both engines identically).
     */
   def scores(df: DataFrame, entityCol: String, orderCol: String,
-             amountCol: String, shards: Int = 0): DataFrame = {
+             amountCol: String): DataFrame = {
     val per = df.filter(col(entityCol).isNotNull && col(orderCol).isNotNull)
       .groupBy(col(entityCol))
       .agg(max(col(orderCol)).as("__last"), count(lit(1)).as("freq"),
@@ -41,7 +41,7 @@ object Rfm {
         col("freq"), col("monetary"))
       .localCheckpoint()
     val qs = Seq(0.2, 0.4, 0.6, 0.8)
-    def edges(c: String) = Percentiles.exact(base, Nil, c, qs, s"__e_$c", shards)
+    def edges(c: String) = Percentiles.exact(base, Nil, c, qs, s"__e_$c")
     def bucket(c: String) =
       size(filter(col(s"__e_$c"), e => col(c).cast("double") >= e)).cast("long")
     base

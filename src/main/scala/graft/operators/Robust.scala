@@ -73,10 +73,9 @@ object Robust {
     * `trimmed_mean` (rounded 6; null when the band is empty).
     */
   def trimmedMean(df: DataFrame, groupCol: String, valCol: String,
-                  lo: Double, hi: Double, shards: Int = 0): DataFrame = {
+                  lo: Double, hi: Double): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi, "need 0 <= lo < hi <= 1")
-    val bounds = Percentiles.exact(df, Seq(groupCol), valCol, Seq(lo, hi),
-        "__b", shards)
+    val bounds = Percentiles.exact(df, Seq(groupCol), valCol, Seq(lo, hi), "__b")
       .select(col(groupCol),
         element_at(col("__b"), 1).as("__lo"), element_at(col("__b"), 2).as("__hi"))
     val v = col(valCol).cast("double")

@@ -137,7 +137,11 @@ object Sampling {
     *      offsets, broadcast back: global_pos = offset + local rank.
     *
     * The two-level rank is the [[graft.text.Pack.chunkAssignments]]
-    * cumulative-sum shape with count in place of token length. Ties in
+    * cumulative-sum shape with count in place of token length. The
+    * shard id is arithmetic on the hash, so there is no range exchange
+    * to pin; [[RankedStats.withCumulative]] documents the range-sharded
+    * variant and its caveats. `shards` overrides the session's
+    * `spark.sql.shuffle.partitions` as the shard count. Ties in
     * the 60-bit prefix break on the key itself, keeping the order total
     * — the oracle replays exactly (prefix, key) ordering.
     *

@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   * over the shard-count-sized totals table and broadcast back. A group
   * no longer pins a single task — parallelism is #groups x #shards
   * instead of #groups. All arithmetic is integral (`div`), exact past
-  * 2^53 tokens.
+  * 2^53 tokens. Because the shard id is arithmetic on the order value,
+  * no range exchange exists and no checkpoint pin is needed — see
+  * [[graft.operators.RankedStats.withCumulative]] for the range-sharded
+  * variant and why it needs one.
   */
 object Pack {
 

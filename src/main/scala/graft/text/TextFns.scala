@@ -322,36 +322,21 @@ object TextFns {
     * boilerplate, truncated tail from a small generator vocabulary), so
     * the (slope, r2) pair is a one-row corpus-health signal.
     *
-    * The exact global frequency rank uses range partitioning + a
-    * per-partition row_number + broadcast partition offsets — the
-    * [[graft.operators.Sampling.globalShuffleOrder]] two-level idiom
-    * adapted to an explicit sort order, so no single-task global sort
-    * exists at any vocabulary size (ranks are exact regardless of where
-    * the sampled range boundaries fall: orders within and across
-    * partitions agree). The regression itself is one moment aggregate.
+    * The exact global frequency rank is a unique-key prefix sum through
+    * [[graft.operators.RankedStats.withCumulative]]: tokens ordered by
+    * `struct(-cnt, token)` (frequency descending, ties by token), each
+    * counting `1L`, so the cumulative count IS the 1-based rank and no
+    * single-task global sort exists at any vocabulary size. The
+    * regression itself is one moment aggregate.
     * Output (1 row): `vocab`, `n_tokens`, `slope`, `intercept`, `r2`.
     */
   def zipfFit(df: org.apache.spark.sql.DataFrame, textCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val counts = df.select(explode(split(lower(col(textCol)), " ")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // localCheckpoint is LOAD-BEARING: `local` and `offsets` both read
-    // `ranged`, and an unmaterialized range exchange re-samples its
-    // boundaries per branch instantiation (seeded per RDD), so the two
-    // branches could disagree on a row's __pid and corrupt the stitched
-    // ranks — see Percentiles.fromHistogram for the full account.
-    val ranged = counts.repartitionByRange(parts, desc("cnt"), col("token"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val wLocal = Window.partitionBy(col("__pid")).orderBy(desc("cnt"), col("token"))
-    val local = ranged.withColumn("__lrk", row_number().over(wLocal).cast("long"))
-    val wOff = Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col("__pid")).agg(count(lit(1)).as("__tot"))
-      .select(col("__pid"), coalesce(sum(col("__tot")).over(wOff), lit(0L)).as("__off"))
+      .select(struct(-col("cnt"), col("token")).as("__k"), col("cnt"), lit(1L).as("__one"))
     val lnF = log(col("cnt").cast("double"))
-    val lnR = log((col("__off") + col("__lrk")).cast("double"))
-    local.join(broadcast(offsets), Seq("__pid"))
+    val lnR = log(col("__cum___one").cast("double"))
+    graft.operators.RankedStats.withCumulative(counts, Nil, "__k", Seq("__one"))
       .agg(count(lit(1)).as("vocab"),
         sum(col("cnt")).as("n_tokens"),
         round(regr_slope(lnF, lnR), 6).as("slope"),

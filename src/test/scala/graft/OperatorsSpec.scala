@@ -695,6 +695,22 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!out.keySet.exists(p => p._1 == 8L || p._2 == 8L)) // zzzzzz matches nothing
   }
 
+  test("editDistanceSelfJoin / editDistanceJoin: a NULL string per side matches the NULL-filtered run") {
+    val left = Seq[(Long, String)](1L -> "kitten", 2L -> "sitten", 3L -> "sitting",
+      4L -> null, 5L -> "ab").toDF("id", "s")
+    val right = Seq[(Long, String)](10L -> "kitten", 11L -> null, 12L -> "abc")
+      .toDF("id", "s")
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val self = FuzzyJoin.editDistanceSelfJoin(left, "s", "id", maxDist = 2)
+    val selfClean = FuzzyJoin.editDistanceSelfJoin(left.filter($"s".isNotNull), "s", "id", 2)
+    assert(same(self, selfClean) && selfClean.count() > 0)
+    val two = FuzzyJoin.editDistanceJoin(left, "s", "id", right, "s", "id", maxDist = 2)
+    val twoClean = FuzzyJoin.editDistanceJoin(left.filter($"s".isNotNull), "s", "id",
+      right.filter($"s".isNotNull), "s", "id", 2)
+    assert(same(two, twoClean) && twoClean.count() > 0)
+  }
+
   test("editDistanceSelfJoin is complete: differential vs brute force on corpus prefixes") {
     val t = Tables.documents(spark, "/root/testdata/sf0.001")
       .select($"doc_id", substring($"text", 1, 10).as("s"))

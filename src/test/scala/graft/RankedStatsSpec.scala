@@ -23,22 +23,74 @@ class RankedStatsSpec extends AnyFunSuite {
     val hist = spark.range(1, 5000)
       .select((col("id") % 997).cast("double").as("v"))
       .groupBy("v").agg(count(lit(1)).as("t"))
-    val got = RankedStats.withCumulative(hist, Nil, "v", Seq("t"), shards = 8)
-      .select(col("v"), col("__cum_t"))
-    val want = hist.withColumn("__cum_t",
-      sum(col("t")).over(Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .select(col("v"), col("__cum_t"))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    TestSpark.withShufflePartitions(8) {
+      val got = RankedStats.withCumulative(hist, Nil, "v", Seq("t"))
+        .select(col("v"), col("__cum_t"))
+      val want = hist.withColumn("__cum_t",
+        sum(col("t")).over(Window.orderBy(col("v"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .select(col("v"), col("__cum_t"))
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    }
   }
 
   test("withCumulative keeps groups independent") {
     val hist = Seq(("a", 1.0, 2L), ("a", 2.0, 3L), ("b", 1.0, 5L), ("b", 3.0, 7L))
       .toDF("g", "v", "t")
-    val got = RankedStats.withCumulative(hist, Seq("g"), "v", Seq("t"), shards = 4)
-      .select(col("g"), col("v"), col("__cum_t")).as[(String, Double, Long)]
-      .collect().toSet
+    val got = TestSpark.withShufflePartitions(4) {
+      RankedStats.withCumulative(hist, Seq("g"), "v", Seq("t"))
+        .select(col("g"), col("v"), col("__cum_t")).as[(String, Double, Long)]
+        .collect().toSet
+    }
     assert(got == Set(("a", 1.0, 2L), ("a", 2.0, 5L), ("b", 1.0, 5L), ("b", 3.0, 12L)))
+  }
+
+  test("withCumulative: __cum and __tot equal a global-window reference under 1, 3 and 8 shards") {
+    // 7 (group, value) rows: 8 shards leaves some empty, 3 splits group
+    // a across shards, and group b is a single row
+    val hist = Seq(("a", 1.0, 2L, 1L), ("a", 2.0, 3L, 0L), ("a", 4.0, 1L, 1L),
+      ("a", 9.0, 5L, 2L), ("b", 3.0, 7L, 7L), ("c", -1.0, 4L, 0L), ("c", 6.0, 2L, 2L))
+      .toDF("g", "v", "t", "p")
+    val byValue = Window.partitionBy(col("g")).orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val byGroup = Window.partitionBy(col("g"))
+    val cols = Seq("g", "v", "__cum_t", "__cum_p", "__tot_t", "__tot_p")
+    val want = hist
+      .withColumn("__cum_t", sum(col("t")).over(byValue))
+      .withColumn("__cum_p", sum(col("p")).over(byValue))
+      .withColumn("__tot_t", sum(col("t")).over(byGroup))
+      .withColumn("__tot_p", sum(col("p")).over(byGroup))
+      .select(cols.map(col): _*).collect().toSet
+    for (n <- Seq(1, 3, 8)) {
+      val got = TestSpark.withShufflePartitions(n) {
+        RankedStats.withCumulative(hist, Seq("g"), "v", Seq("t", "p"))
+          .select(cols.map(col): _*).collect().toSet
+      }
+      assert(got == want, s"diverged at $n shards")
+    }
+  }
+
+  test("Percentiles.exact / weightedExact equal the builtin percentile; an all-NULL group is absent") {
+    import graft.operators.Percentiles
+    val df = Seq(("a", Some(3.0), 2L), ("a", Some(1.0), 1L), ("a", Some(3.0), 4L),
+      ("a", Some(7.5), 1L), ("a", Some(-2.0), 3L), ("a", Some(10.0), 1L), ("a", None, 5L),
+      ("b", Some(4.0), 6L), ("n", None, 1L), ("n", None, 2L))
+      .toDF("g", "v", "w")
+    val ps = Seq(0.0, 0.1, 0.25, 0.5, 0.9, 1.0)
+    val psSql = ps.mkString("array(", ", ", ")")
+    def builtin(args: String) = df.groupBy("g").agg(expr(s"percentile($args)").as("q"))
+      .filter(col("q").isNotNull).as[(String, Seq[Double])].collect().toMap
+    val want = builtin(s"v, $psSql")
+    val wantW = builtin(s"v, $psSql, w")
+    assert(want.keySet == Set("a", "b") && wantW.keySet == Set("a", "b"))
+    for (n <- Seq(1, 3, 8)) TestSpark.withShufflePartitions(n) {
+      val got = Percentiles.exact(df, Seq("g"), "v", ps, "q")
+        .as[(String, Seq[Double])].collect().toMap
+      val gotW = Percentiles.weightedExact(df, Seq("g"), "v", "w", ps, "q")
+        .as[(String, Seq[Double])].collect().toMap
+      assert(got == want, s"exact diverged at $n shards")
+      assert(gotW == wantW, s"weightedExact diverged at $n shards")
+    }
   }
 
   test("gini: uniform mass scores 0, fully concentrated mass scores (n-1)/n") {
@@ -102,8 +154,9 @@ class RankedStatsSpec extends AnyFunSuite {
   test("spearman: monotone gives 1, reversed gives -1, one tie matches sqrt(3)/2") {
     // perfect monotone (nonlinear): rho = 1; reversed: rho = -1
     val mono = Seq((1.0, 1.0), (2.0, 4.0), (3.0, 9.0)).toDF("x", "y")
-    assert(HypothesisTests.spearman(mono, Nil, "x", "y", shards = 2)
-      .head.getAs[Double]("rho") == 1.0)
+    assert(TestSpark.withShufflePartitions(2) {
+      HypothesisTests.spearman(mono, Nil, "x", "y").head.getAs[Double]("rho")
+    } == 1.0)
     val rev = Seq((1.0, 9.0), (2.0, 4.0), (3.0, 1.0)).toDF("x", "y")
     assert(HypothesisTests.spearman(rev, Nil, "x", "y")
       .head.getAs[Double]("rho") == -1.0)
@@ -200,7 +253,9 @@ class RankedStatsSpec extends AnyFunSuite {
     // d = +1,-1,+2: midranks {1.5,1.5,3}, W+ = 4.5, n = 3,
     // sigma^2 = 3*4*7/24 - (2^3-2)/48 = 3.375
     val df = Seq((2.0, 1.0), (1.0, 2.0), (5.0, 3.0)).toDF("x", "y")
-    val r = graft.operators.PairedTests.wilcoxonSignedRank(df, "x", "y", shards = 2).head
+    val r = TestSpark.withShufflePartitions(2) {
+      graft.operators.PairedTests.wilcoxonSignedRank(df, "x", "y").head
+    }
     assert(r.getAs[Long]("n") == 3L)
     assert(r.getAs[Double]("w_plus") == 4.5)
     assert(r.getAs[Double]("wsr_z") == round6(1.5 / math.sqrt(3.375)))

@@ -20,7 +20,9 @@ class StatsModelsSpec extends AnyFunSuite {
     // H = 12/(6*7) * (9/2 + 49/2 + 121/2) - 3*7 = 12/42*89.5 - 21
     val df = Seq(("a", 1.0), ("a", 2.0), ("b", 3.0), ("b", 4.0),
       ("c", 5.0), ("c", 6.0)).toDF("g", "v")
-    val r = HypothesisTests.kruskalWallis(df, "g", "v", shards = 2).head
+    val r = TestSpark.withShufflePartitions(2) {
+      HypothesisTests.kruskalWallis(df, "g", "v").head
+    }
     assert(r.getAs[Long]("k") == 3L && r.getAs[Long]("n") == 6L)
     val want = math.rint((12.0 / 42.0 * 89.5 - 21.0 + 1e-12) * 1e6) / 1e6
     assert(r.getAs[Double]("h_stat") == want)
@@ -32,7 +34,9 @@ class StatsModelsSpec extends AnyFunSuite {
     // H = 12/(4*5)*(9/2+49/2) - 15 = 2.4; ties: two blocks of 2 ->
     // sum(t^3-t)=12, corr = 1 - 12/60 = 0.8 -> H' = 3.0
     val df = Seq(("a", 1.0), ("a", 1.0), ("b", 2.0), ("b", 2.0)).toDF("g", "v")
-    val r = HypothesisTests.kruskalWallis(df, "g", "v", shards = 2).head
+    val r = TestSpark.withShufflePartitions(2) {
+      HypothesisTests.kruskalWallis(df, "g", "v").head
+    }
     assert(r.getAs[Double]("h_stat") == 2.4 && r.getAs[Double]("h_corrected") == 3.0)
     val tied = Seq(("a", 5.0), ("b", 5.0), ("b", 5.0)).toDF("g", "v")
     assert(HypothesisTests.kruskalWallis(tied, "g", "v").head.isNullAt(3))
@@ -148,7 +152,7 @@ class StatsModelsSpec extends AnyFunSuite {
     // AP thresholds desc: 0.9 (P=1/1), 0.7 (P=2/3), 0.5 (P=3/5)
     val df = Seq((0.9, true), (0.7, true), (0.5, true),
       (0.8, false), (0.5, false), (0.3, false), (0.1, false)).toDF("p", "y")
-    val r = Calibration.rocAuc(df, "p", "y", shards = 2).head
+    val r = TestSpark.withShufflePartitions(2)(Calibration.rocAuc(df, "p", "y").head)
     def r6(v: Double) = math.rint((v + 1e-12) * 1e6) / 1e6
     assert(r.getAs[Long]("n") == 7L && r.getAs[Long]("n_pos") == 3L &&
       r.getAs[Long]("n_neg") == 4L)

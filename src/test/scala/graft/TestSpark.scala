@@ -19,4 +19,15 @@ object TestSpark {
     GraftExtensions.register(s) // SQL fns + library optimizer rules
     s
   }
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n` — the
+    * shard count of [[graft.operators.RankedStats.withCumulative]] —
+    * and restores the previous value afterwards. Keep every action that
+    * should see `n` inside `body`. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, prev)
+  }
 }
