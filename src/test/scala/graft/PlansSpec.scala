@@ -504,7 +504,7 @@ class PlansSpec extends AnyFunSuite {
     // in a Filter is likewise fine (q_ann_lsh's bucket probe — pruning
     // drops it downstream). The simhash self-join diamond's legs carry
     // different attribute ids and never collide.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val offenders = TestSpark.sweptQueries.flatMap {
       case (name, fn) =>
         val plan = fn(spark, sfDir).queryExecution.optimizedPlan
         val occ = plan.collect { case node =>
@@ -585,7 +585,7 @@ class PlansSpec extends AnyFunSuite {
       // (<= buckets x frontier rows — Skyline.scala's containment
       // theorem); stage-1 is hash-partitioned and not flagged
       "q_skyline" -> "union of 64 local skylines (frontier-sized)")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val offenders = TestSpark.sweptQueries.flatMap {
       case (name, fn) if !exempt.contains(name) =>
         val plan = fn(spark, sfDir).queryExecution.optimizedPlan
         (plan +: plan.subqueriesAll).flatMap(_.collect {
@@ -639,7 +639,7 @@ class PlansSpec extends AnyFunSuite {
       // level-pair join over the QUANTIZED score table,
       // <= 10^digits levels by construction (Isotonic.scala header)
       "q_isotonic" -> "quantized level table pair join")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val offenders = TestSpark.sweptQueries.flatMap {
       case (name, fn) if !exempt.contains(name) =>
         val plan = fn(spark, sfDir).queryExecution.optimizedPlan
         (plan +: plan.subqueriesAll).flatMap(_.collect {

@@ -107,8 +107,9 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("SasLabels parses every vocabulary block of the reference format file") {
+    assume(TestSpark.refExists("I94_SAS_Labels_Descriptions.SAS"))
     val blocks = graft.sources.SasLabels.parseFile(
-      "/root/reference/I94_SAS_Labels_Descriptions.SAS")
+      TestSpark.ref("I94_SAS_Labels_Descriptions.SAS"))
     // the $ character-format marker is stripped from $i94prtl
     assert(blocks.keySet == Set("i94cntyl", "i94prtl", "i94model", "i94addrl"), blocks.keySet)
     assert(blocks("i94cntyl").size == 289 && blocks("i94prtl").size == 660
@@ -132,8 +133,12 @@ class SourcesSpec extends AnyFunSuite {
     assert(got("codes") == Seq("a" -> "A; still A", "1" -> "one", "q" -> "it's"))
     assert(got("plain") == Seq("2" -> "two"))
     intercept[IllegalArgumentException](graft.sources.SasLabels.parse("value v 'unterminated"))
+    // a format name with no `value` block is refused
+    val file = Files.createTempFile("graft-saslabels", ".sas")
+    Files.write(file, text.getBytes("UTF-8"))
     intercept[IllegalArgumentException](
-      graft.sources.SasLabels.vocab(spark, "/root/reference/I94_SAS_Labels_Descriptions.SAS", "nope"))
+      graft.sources.SasLabels.vocab(spark, file.toString, "nope"))
+    Files.delete(file)
   }
 
   test("compactParquet: many small files become the target count, content identical") {

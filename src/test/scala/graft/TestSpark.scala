@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for all suites (forked test JVM). */
 object TestSpark {
@@ -30,4 +32,30 @@ object TestSpark {
     spark.conf.set(key, n.toLong)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** The reference data lake's bundled inputs (FIXTURES.md §1): read-only,
+    * outside the checkout, and absent on machines that lack the copy.
+    * Tests that read it skip with `assume(refExists(...))`. */
+  val refDir = "/root/reference"
+
+  /** `refDir`-relative path of a reference file or directory. */
+  def ref(rel: String): String = s"$refDir/$rel"
+
+  def refExists(rel: String): Boolean = Files.exists(Paths.get(ref(rel)))
+
+  /** Queries that read a fixed reference file instead of `sfDir`, keyed to
+    * that file (relative to `refDir`). */
+  val fixtureQueries: Map[String, String] =
+    Map("q_sas_labels" -> "I94_SAS_Labels_Descriptions.SAS")
+
+  /** False only for a fixture-backed query whose reference file is absent. */
+  def fixturePresent(query: String): Boolean =
+    fixtureQueries.get(query).forall(refExists)
+
+  /** Every [[SparkEntry.queries]] entry in name order, for whole-query
+    * sweeps. A fixture-backed query is left out only when its reference
+    * file is absent; every other query is always swept, and a query that
+    * throws still fails the sweep. */
+  def sweptQueries: Seq[(String, (SparkSession, String) => DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) => fixturePresent(name) }
 }
