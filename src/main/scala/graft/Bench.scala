@@ -12,6 +12,28 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Time one run of `body`; `None` if it throws, so a failed query is
+    * reported as failed, never as a fast timing. */
+  private[graft] def timed(label: String)(body: => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      body
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $label failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** The `"queries":{...}` map of a bench line (empty if it has none). */
+  private def queryTimes(line: String): Map[String, Double] = {
+    val qStart = line.indexOf("\"queries\":{")
+    if (qStart < 0) Map.empty
+    else "\"([A-Za-z0-9_]+)\":([0-9.]+)".r
+      .findAllMatchIn(line.substring(qStart + 11, line.indexOf('}', qStart)))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  }
+
   /** Re-run `names` in a FRESH JVM (reps=3, per-query median reported —
     * the retry logic in that run is inert at reps>1) and return its
     * per-query numbers. The classpath is reconstructed from this JVM's
@@ -78,12 +100,8 @@ object Bench {
       }
       val lines = scala.concurrent.Await.result(outF,
         scala.concurrent.duration.Duration(30, "s"))
-      lines.lastOption.map { l =>
-        "\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(
-            l.substring(l.indexOf("\"queries\":{")))
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter { case (k, _) => names.contains(k) }.toMap
-      }.getOrElse(Map.empty)
+      lines.lastOption.map(queryTimes(_).filter { case (k, _) => names.contains(k) })
+        .getOrElse(Map.empty)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] cold pass failed: ${e.getMessage}")
       Map.empty
@@ -125,8 +143,9 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run for local
     // iteration on specific plans (the driver contract never sets it).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    selected
       .foreach { case (_, fn) =>
         try graft.sources.CheckpointScope.withScope(spark.sparkContext) {
           fn(spark, "/root/testdata/sf0.001")
@@ -145,40 +164,29 @@ object Bench {
     // it to RETRY outliers (below), the regression gate diffs against it
     // at the end. Read before any overwrite so a reps>1 run never
     // self-compares.
-    val priorRecord: Option[String] = try {
+    val recMedians: Map[String, Double] = try {
       val recPath = java.nio.file.Paths.get("BENCH_MEDIANS.json")
       if (java.nio.file.Files.exists(recPath))
-        Some(new String(java.nio.file.Files.readAllBytes(recPath), "UTF-8"))
-      else None
-    } catch { case _: Throwable => None }
-    val recMedians: Map[String, Double] = priorRecord.map { txt =>
-      val qStart = txt.indexOf("\"queries\":{")
-      if (qStart < 0) Map.empty[String, Double]
-      else {
-        val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-        "\"([A-Za-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }.getOrElse(Map.empty)
-
-    val resultsFirstPass = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
+        queryTimes(new String(java.nio.file.Files.readAllBytes(recPath), "UTF-8"))
+      else Map.empty
+    } catch { case _: Throwable => Map.empty }
+    def over(name: String, dur: Double): Boolean =
+      recMedians.get(name).exists(r => dur > 2 * r && dur - r > 0.5)
+    def run(label: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      timed(label) {
         // query-scoped checkpoint release (see Verify): leaked blocks
         // from 300+ queries in one JVM are measurement noise — storage
         // pressure and GC bursts land on whichever query runs next
-        try graft.sources.CheckpointScope.withScope(spark.sparkContext) {
+        graft.sources.CheckpointScope.withScope(spark.sparkContext) {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
       }
-      val times = (1 to reps).map(_ => once()).sorted
-      val med = times(times.length / 2)
+    // a query with any failed run (rep, retry or cooldown) is listed
+    // under "failed", outside `queries`, the total and the gate
+    val resultsFirstPass = selected.map { case (name, fn) =>
+      val times = Iterator.fill(reps)(run(name, fn)).takeWhile(_.isDefined)
+        .flatten.toVector.sorted
+      val med = Option.when(times.length == reps)(times(reps / 2))
       // Single-shot outlier retry (the driver contract is reps=1, and
       // its per-query numbers historically swing 10x+ under machine
       // load — e.g. r12's 15.9 s one-shot vs a 1.96 s quiet-machine
@@ -188,10 +196,8 @@ object Bench {
       // queries — a real plan regression stays >2x on the rerun, while
       // a transient load spike almost never strikes the same query
       // twice, so the gate's over-2x list stops crying wolf.
-      val dur =
-        if (reps == 1 && recMedians.get(name).exists(r => med > 2 * r && med - r > 0.5))
-          math.min(med, once())
-        else med
+      val dur = med.flatMap(m =>
+        if (reps == 1 && over(name, m)) run(name, fn).map(math.min(m, _)) else Some(m))
       (name, fn, dur)
     }
     // End-of-run COOLDOWN pass (r13 adjudication: 14 false outliers got
@@ -202,21 +208,14 @@ object Bench {
     // later, and gate on the min: a real plan regression stays >2x here
     // too, while machine noise almost never survives a third, delayed
     // strike. One extra run per flagged query, zero for a clean gate.
-    val results = resultsFirstPass.map { case (name, fn, dur) =>
-      val stillFlagged = reps == 1 &&
-        recMedians.get(name).exists(r => dur > 2 * r && dur - r > 0.5)
-      if (!stillFlagged) name -> dur
-      else {
-        val t0 = System.nanoTime()
-        try graft.sources.CheckpointScope.withScope(spark.sparkContext) {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name cooldown failed: ${e.getMessage}")
-        }
-        name -> math.min(dur, (System.nanoTime() - t0) / 1e9)
-      }
+    val outcomes = resultsFirstPass.map { case (name, fn, dur) =>
+      name -> dur.flatMap(d =>
+        if (reps == 1 && over(name, d)) run(s"$name cooldown", fn).map(math.min(d, _))
+        else Some(d))
     }
+    val results = outcomes.collect { case (name, Some(d)) => name -> d }
+    val failed = outcomes.collect { case (name, None) => "\"" + name + "\"" }
+      .mkString("[", ",", "]")
     val total = results.map(_._2).sum
 
     // Full per-query detail: printed early (full stdout) and persisted to
@@ -225,7 +224,7 @@ object Bench {
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"queries":$qsFull,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"queries":$qsFull,"failed":$failed,"sf":"$sfDir"}"""
     println(s"BENCH_FULL $fullLine")
 
     // Subset runs never touch the committed records — a partial queries
@@ -261,9 +260,6 @@ object Bench {
     // later. BENCH_FULL keeps the RAW one-shot numbers (the driver's
     // measurement); only the gate adjudicates.
     try if (recMedians.nonEmpty) {
-      val rec = recMedians
-      def over(k: String, v: Double) =
-        rec.get(k).exists(r => v > 2 * r && v - r > 0.5)
       val flagged = results.filter { case (k, v) => over(k, v) }
       val adjudicated: Map[String, Double] =
         if (flagged.isEmpty || reps > 1 || only.nonEmpty) Map.empty
@@ -277,9 +273,9 @@ object Bench {
         k -> math.min(v, adjudicated.getOrElse(k, v)) }
       val regressed = gated
         .filter { case (k, v) => over(k, v) }
-        .sortBy { case (k, v) => -(v - rec(k)) }
-        .map { case (k, v) => f""""$k":"${rec(k)}%.2f->$v%.2f"""" }
-      val newQ = results.count { case (k, _) => !rec.contains(k) }
+        .sortBy { case (k, v) => -(v - recMedians(k)) }
+        .map { case (k, v) => f""""$k":"${recMedians(k)}%.2f->$v%.2f"""" }
+      val newQ = results.count { case (k, _) => !recMedians.contains(k) }
       println(s"""BENCH_GATE {"vs":"BENCH_MEDIANS.json","over_2x":${regressed.size},""" +
         s""""new_queries":$newQ,"cold_adjudicated":${adjudicated.size},""" +
         s""""detail":{${regressed.take(10).mkString(",")}}}""")
@@ -290,7 +286,7 @@ object Bench {
     // Final line must fit (with sbt's trailing "[success] ..." line) inside
     // a 2000-char tail capture, or downstream parsing fails. Emit the
     // slowest queries first and stop before the line grows past the budget.
-    val budget  = 1400
+    val budget  = 1400 - failed.length
     val slowest = results.sortBy(-_._2)
     val sb      = new StringBuilder
     var n       = 0
@@ -300,7 +296,8 @@ object Bench {
     }
     println(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{${sb.toString}},""" +
-      f""""n_queries":${results.size},"queries_shown":$n,"full":"BENCH_FULL.json","sf":"$sfDir"}""")
+      f""""n_queries":${results.size},"queries_shown":$n,"failed":$failed,""" +
+      f""""full":"BENCH_FULL.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope.{generations, unchanged}
+
 /** Deduplication operators for a 100 TB training-data pipeline. Four
   * families, increasing in fuzziness:
   *
@@ -527,49 +529,40 @@ object Dedup {
     * cap to the deepest chain you expect, or run the converging form off
     * the critical path.
     *
+    * The label vectors are generations of
+    * [[graft.sources.CheckpointScope.generations]].
+    *
     * Returns (id, cluster) where cluster = min id of the component —
     * `id == cluster` marks the canonical document to keep.
     */
   def clusters(ids: DataFrame, pairs: DataFrame, idCol: String,
                aCol: String, bCol: String, maxIters: Int = 50,
                converge: Boolean = true): DataFrame = {
-    // Persist the (static) edge list; each iteration's labels go through
-    // localCheckpoint, which BOTH materializes (without it every action
-    // re-derives the full lineage of all prior iterations — quadratic
-    // recompute) AND truncates the logical plan (the update references
-    // `labels` twice, so the plan otherwise doubles per iteration —
-    // exponential planning/explain cost that OOMs past ~10 rounds). At
-    // cluster scale this is a reliable-storage checkpoint() per
-    // iteration; the structure is identical.
+    // persist the (static) edge list; the initial labels are not pinned
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .persist()
-    var labels = ids.select(col(idCol).cast("long").as("id"),
+    val init = ids.select(col(idCol).cast("long").as("id"),
       col(idCol).cast("long").as("cluster"))
-    var it = 0
-    var done = false
-    while (it < maxIters && !done) {
+    // each generation carries the previous label: the convergence check
+    // is then a filter over the (already materialized) generation
+    // instead of a join back against the old one
+    def fixpoint(g: DataFrame, i: Int): Boolean = converge && i > 0 &&
+      g.filter(col("cluster") =!= col("__prev")).count() == 0
+    val run = generations(init, maxIters, fixpoint) { (labels, _) =>
       val neighborMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("cluster")).as("nmin"))
-      // carry the previous label through the update: the convergence
-      // check is then a filter over the (already materialized)
-      // checkpoint instead of a join back against the old generation
-      val updated = labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
+      labels.join(neighborMin, labels("id") === neighborMin("src"), "left")
         .select(labels("id"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"),
           labels("cluster").as("__prev"))
-        .localCheckpoint()
-      if (converge)
-        done = updated.filter(col("cluster") =!= col("__prev")).count() == 0
-      labels = updated.drop("__prev")
-      it += 1
     }
-    if (converge && !done)
+    if (converge && !run.stopped)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"clusters() hit maxIters=$maxIters before converging — components " +
           "with diameter > maxIters are split; raise maxIters")
     edges.unpersist()
-    labels
+    run.last.drop("__prev")
   }
 
   /** Connected components by alternating large-star / small-star
@@ -587,8 +580,8 @@ object Dedup {
     * round that leaves the signature unchanged ends the loop. Two
     * different edge sets colliding on the signature is ~2^-64; the
     * exact alternative (two except() anti-joins per round) roughly
-    * doubles the per-round cost. Each generation goes through
-    * localCheckpoint for the same lineage reasons as [[clusters]].
+    * doubles the per-round cost. The edge sets are generations of
+    * [[graft.sources.CheckpointScope.generations]].
     */
   def clustersStar(ids: DataFrame, pairs: DataFrame, idCol: String,
                    aCol: String, bCol: String, maxIters: Int = 30): DataFrame =
@@ -599,7 +592,7 @@ object Dedup {
       aCol: String, bCol: String, maxIters: Int = 30): (DataFrame, Int) = {
     val a = col(aCol).cast("long")
     val b = col(bCol).cast("long")
-    var edges = pairs
+    val init = pairs
       .select(greatest(a, b).as("src"), least(a, b).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
       .localCheckpoint()
@@ -635,28 +628,22 @@ object Dedup {
         .distinct()
     }
 
-    var sig = signature(edges)
-    var rounds = 0
-    var done = sig._1 == 0L
-    while (rounds < maxIters && !done) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val nsig = signature(next)
-      done = nsig == sig
-      sig = nsig
-      edges = next
-      rounds += 1
+    // a round that leaves the signature unchanged ends the loop; the empty
+    // edge set's signature as the start lets an edgeless input run none
+    val run = generations(init, maxIters, unchanged((0L, 0L))(signature)) {
+      (edges, _) => smallStar(largeStar(edges))
     }
-    if (!done)
+    if (!run.stopped)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"clustersStar() hit maxIters=$maxIters before the edge set " +
           "stabilized; raise maxIters")
     // fixpoint is a star graph: every non-root src points at its
     // component min; roots and isolated ids label themselves
-    val comp = edges.groupBy(col("src").as("id")).agg(min(col("dst")).as("cluster"))
+    val comp = run.last.groupBy(col("src").as("id")).agg(min(col("dst")).as("cluster"))
     val labels = ids.select(col(idCol).cast("long").as("id"))
       .join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-    (labels, rounds)
+    (labels, run.steps)
   }
 
   /** End-to-end corpus dedup: exact dups + MinHash candidates filtered by

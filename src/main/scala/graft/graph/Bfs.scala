@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope.generations
+
 /** Multi-source breadth-first hop distance over an edge list — the
   * "how far is everything from these nodes?" primitive under reach
   * audits (how much of the similarity graph is within k hops of a
@@ -12,8 +14,8 @@ import org.apache.spark.sql.functions._
   * Scale design: the textbook massively-parallel BFS — one generation
   * dataframe per level, each step a (frontier ⋈ edges on src) shuffle,
   * a groupBy(dst) dedup, and an anti join against the settled set; the
-  * settled set is localCheckpoint'd per level (flat lineage, the
-  * [[graft.dedup.Dedup]] star-contraction discipline) and the
+  * settled sets are generations of
+  * [[graft.sources.CheckpointScope.generations]], one per level, and the
   * early-stop probe is a 1-row count on the already-materialized
   * frontier. Levels are exact integers, so the result is independent
   * of partitioning and join order. At cluster scale, hash-bucketing
@@ -41,23 +43,22 @@ object Bfs {
     // candidate generation (e.g. the k-NN cosine pairs) re-runs per hop
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .localCheckpoint()
-    var settled = sources.distinct.toDF("node")
+    val init = sources.distinct.toDF("node")
       .select(col("node"), lit(0L).as("hop"))
       .localCheckpoint()
-    var frontier = settled
-    var h = 1L
-    while (h <= maxHops && !frontier.isEmpty) {
-      val next = frontier.join(e, col("node") === col("__src"))
+    // a generation per level pins BOTH the settled set and that level's
+    // frontier (read twice: union + next join); level 0's is the seed set
+    def frontier(settled: DataFrame, level: Int) =
+      if (level == 0) settled else settled.filter(col("hop") === level.toLong)
+    def exhausted(settled: DataFrame, level: Int) =
+      level < maxHops && frontier(settled, level).isEmpty
+    generations(init, maxHops, exhausted) { (settled, step) =>
+      val next = frontier(settled, step.gen - 1).join(e, col("node") === col("__src"))
         .select(col("__dst").as("node"))
         .distinct()
         .join(settled.select(col("node")), Seq("node"), "left_anti")
-        .select(col("node"), lit(h).as("hop"))
-      // one checkpoint per level pins BOTH the growing settled set and
-      // this level's frontier (next reads it twice: union + next join)
-      settled = settled.unionByName(next).localCheckpoint()
-      frontier = settled.filter(col("hop") === h)
-      h += 1
-    }
-    settled
+        .select(col("node"), lit(step.gen.toLong).as("hop"))
+      settled.unionByName(next)
+    }.last
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope.generations
+
 /** Parent-pointer hierarchy resolution (org charts, BOM trees, thread
   * reply chains, category taxonomies) by POINTER DOUBLING: after k
   * rounds every row knows its 2^k-th ancestor, so a depth-D hierarchy
@@ -19,8 +21,8 @@ import org.apache.spark.sql.functions._
   * engine-replayable by construction.
   *
   * Each round shuffles on the id key only (two columns wide); rounds
-  * localCheckpoint to cut lineage, the [[graft.dedup.Dedup]] star-
-  * contraction discipline. `maxDepth` bounds the doubling count AND
+  * are generations of [[graft.sources.CheckpointScope.generations]].
+  * `maxDepth` bounds the doubling count AND
   * fail-fasts on unresolved rows after the last round (a cycle or a
   * depth overrun would otherwise silently report a non-root ancestor).
   */
@@ -34,21 +36,18 @@ object Hierarchy {
     val rounds = math.max(1,
       32 - Integer.numberOfLeadingZeros(math.max(1, maxDepth - 1)))
     val isRoot = col(parentCol).isNull || col(parentCol) === col(idCol)
-    var t = df.select(col(idCol).cast("long").as("id"),
+    val init = df.select(col(idCol).cast("long").as("id"),
         when(isRoot, col(idCol).cast("long"))
           .otherwise(col(parentCol).cast("long")).as("anc"),
         when(isRoot, lit(0L)).otherwise(lit(1L)).as("d"))
       .localCheckpoint()
-    var k = 0
-    while (k < rounds) {
+    val t = generations(init, rounds) { (t, _) =>
       val b = t.select(col("id").as("__bid"), col("anc").as("__banc"),
         col("d").as("__bd"))
-      t = t.join(b, t("anc") === b("__bid"))
+      t.join(b, t("anc") === b("__bid"))
         .select(col("id"), col("__banc").as("anc"),
           (col("d") + col("__bd")).as("d"))
-        .localCheckpoint()
-      k += 1
-    }
+    }.last
     // resolved ⇔ the reached ancestor is a TRUE root (its own d = 0).
     // Checking only anc-fixpointness would miss even-length cycles,
     // where doubling lands a row back on ITSELF with d > 0.

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope.{generations, unchanged}
+
 /** k-core decomposition by iterative peeling: repeatedly remove nodes
   * whose degree within the surviving subgraph is < k; the fixpoint is
   * the (unique) maximal subgraph with minimum degree ≥ k — the standard
@@ -12,9 +14,8 @@ import org.apache.spark.sql.functions._
   *
   * Each round is one degree aggregate plus two semi-joins on the
   * SHRINKING edge set — bucket-local by the node key, nothing collected,
-  * no adjacency is ever buffered. Generations go through localCheckpoint
-  * for the same lineage-control reasons as [[graft.dedup.Dedup.clusters]]
-  * (at cluster scale: reliable checkpoint, identical structure). Round
+  * no adjacency is ever buffered. The surviving edge sets are
+  * generations of [[graft.sources.CheckpointScope.generations]]. Round
   * count is bounded by `maxRounds` and in practice by the graph's
   * degeneracy ordering depth — peeling converges in O(peel depth)
   * rounds, not O(n).
@@ -37,30 +38,19 @@ object KCore {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val a = col(aCol).cast("long")
     val b = col(bCol).cast("long")
-    var edges = pairs.select(a.as("src"), b.as("dst"))
+    val init = pairs.select(a.as("src"), b.as("dst"))
       .filter(col("src") =!= col("dst"))
       .unionAll(pairs.select(b.as("src"), a.as("dst"))
         .filter(col("src") =!= col("dst")))
       .distinct()
       .localCheckpoint()
-    var nEdges = edges.count()
-    var it = 0
-    var done = false
-    while (it < maxRounds && !done) {
+    // converged iff nothing was peeled: the edge count did not move
+    generations(init, maxRounds, unchanged(-1L)(_.count())) { (edges, _) =>
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select(col("src").as("node"))
-      val pruned = edges
+      edges
         .join(keep, edges("src") === keep("node"), "left_semi")
         .join(keep, edges("dst") === keep("node"), "left_semi")
-        .localCheckpoint()
-      // converged iff nothing was peeled; one count per round on the
-      // (already materialized) checkpoint, previous count carried over
-      val nPruned = pruned.count()
-      done = nPruned == nEdges
-      nEdges = nPruned
-      edges = pruned
-      it += 1
-    }
-    edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
+    }.last.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope.generations
+
 /** Synchronous label propagation (Raghavan et al. 2007) — community
   * detection over a similarity graph by iterated neighbor-majority
   * vote. Where [[graft.dedup.Dedup.clusters]] finds CONNECTED
@@ -21,8 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per iteration: one (labels ⋈ edges) shuffle on the node
   * id + a groupBy(node, label) count + a per-node argmax window
-  * (partitioned by node — parallelism = nodes). Each generation is
-  * localCheckpoint'd flat, the [[PageRank]] lineage discipline. Hash-
+  * (partitioned by node — parallelism = nodes). The label vectors are
+  * generations of [[graft.sources.CheckpointScope.generations]]. Hash-
   * bucketing labels and edges on node id makes the per-iteration join
   * co-located at cluster scale.
   */
@@ -42,12 +44,12 @@ object LabelProp {
     val sym = e.unionByName(e.select(col("__d").as("__s"), col("__s").as("__d")))
       .distinct()
       .localCheckpoint()
-    var labels = nodes.select(col(nodeCol).cast("long").as("node"))
+    val init = nodes.select(col(nodeCol).cast("long").as("node"))
       .withColumn("label", col("node"))
       .localCheckpoint()
     val byVotes = Window.partitionBy(col("node"))
       .orderBy(col("__votes").desc, col("label"))
-    for (_ <- 1 to iterations) {
+    generations(init, iterations) { (labels, _) =>
       val picked = sym.join(labels, sym("__d") === labels("node"))
         .select(sym("__s").as("node"), col("label"))
         .groupBy(col("node"), col("label"))
@@ -55,10 +57,8 @@ object LabelProp {
         .withColumn("__rn", row_number().over(byVotes))
         .filter(col("__rn") === 1)
         .select(col("node"), col("label").as("__new"))
-      labels = labels.join(picked, Seq("node"), "left")
+      labels.join(picked, Seq("node"), "left")
         .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint()
-    }
-    labels.select(col("node"), col("label").as("community"))
+    }.last.select(col("node"), col("label").as("community"))
   }
 }

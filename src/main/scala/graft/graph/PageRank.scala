@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope.generations
+
 /** Fixed-iteration PageRank over an edge list — the similarity-graph
   * centrality pass a curation pipeline runs on its near-dup/k-NN graph
   * (e.g. to pick the most-central document of a duplicate neighborhood
@@ -15,11 +17,10 @@ import org.apache.spark.sql.functions._
   * aggregates cross-joined back in-plan). Edges are pre-joined with
   * out-degrees ONCE and localCheckpoint'd (they feed every iteration;
   * re-deriving them each step would re-run the upstream candidate
-  * generation), and each iteration's ranks are localCheckpoint'd to keep
-  * the lineage flat — the [[graft.dedup.Dedup]] star-contraction
-  * discipline. At cluster scale, hash-bucketing both ranks and edges on
-  * the node id makes every per-iteration join co-located (no shuffle of
-  * the edge table, which dwarfs the rank vector).
+  * generation); rank vectors are [[graft.sources.CheckpointScope.generations]].
+  * At cluster scale, hash-bucketing both ranks and edges on the node id
+  * makes every per-iteration join co-located (no shuffle of the edge
+  * table, which dwarfs the rank vector).
   *
   * Semantics: r'(v) = (1-d)/N + d * Σ_{u→v} r(u)/outdeg(u). With the
   * default `redistributeDangling = false`, mass at nodes without
@@ -41,9 +42,8 @@ object PageRank {
     *
     * `tolerance` > 0 adds an L1-delta early stop: iteration ends when
     * Σ|r − r_prev| < tolerance (one extra 1-row aggregate per round,
-    * read off the already-materialized checkpoint — the
-    * [[graft.dedup.Dedup.clusters]] convergence idiom). `iterations`
-    * stays the hard bound either way.
+    * read off the already-materialized generation). `iterations` stays
+    * the hard bound either way.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                nodes: DataFrame, nodeCol: String,
@@ -78,21 +78,19 @@ object PageRank {
         col(weightCol).cast("double").as("__w"))
       .join(tot, "__src")
       .localCheckpoint()
-    var ranks = nodes.select(col(nodeCol).as("node")).crossJoin(n1)
+    val init = nodes.select(col(nodeCol).as("node")).crossJoin(n1)
       .select(col("node"), (lit(1.0) / col("__N")).as("r"))
       .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    generations(init, iterations) { (ranks, _) =>
       val contrib = ranks.join(e, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
         .agg(sum(col("r") * col("__w") / col("__tw")).as("__s"))
-      ranks = ranks.select(col("node"))
+      ranks.select(col("node"))
         .join(contrib, Seq("node"), "left")
         .crossJoin(n1)
         .select(col("node"), ((lit(1.0 - damping) / col("__N"))
           + lit(damping) * coalesce(col("__s"), lit(0.0))).as("r"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node"), round(col("r") + lit(1e-12), 6).as("pagerank"))
+    }.last.select(col("node"), round(col("r") + lit(1e-12), 6).as("pagerank"))
   }
 
   /** Personalized PageRank: the teleport vector concentrates on a
@@ -104,8 +102,8 @@ object PageRank {
     * set) and related-item scoring.
     *
     * Same dataflow as [[pageRank]]: per-iteration join + re-aggregate,
-    * degree-joined edges checkpointed once, ranks checkpointed per
-    * iteration; nothing collected. Nodes unreachable from the seeds
+    * degree-joined edges checkpointed once, ranks as generations;
+    * nothing collected. Nodes unreachable from the seeds
     * settle at exactly 0 and ARE emitted (the output is nodes-sized;
     * filter `ppr > 0` downstream if only the reached neighborhood
     * matters). Output: nodeCol, `ppr` (rounded 6).
@@ -123,22 +121,20 @@ object PageRank {
       .localCheckpoint()
     val tele = when(col("node").isin(seeds.distinct: _*),
       lit(1.0 / seeds.distinct.size)).otherwise(lit(0.0))
-    var ranks = nodes.select(col(nodeCol).as("node"))
+    val init = nodes.select(col(nodeCol).as("node"))
       .select(col("node"), tele.as("r"), tele.as("__tele"))
       .localCheckpoint()
-    for (_ <- 1 to iterations) {
+    generations(init, iterations) { (ranks, _) =>
       val contrib = ranks.join(e, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
         .agg(sum(col("r") / col("__deg")).as("__s"))
-      ranks = ranks.select(col("node"), col("__tele"))
+      ranks.select(col("node"), col("__tele"))
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(1.0 - damping) * col("__tele")
             + lit(damping) * coalesce(col("__s"), lit(0.0))).as("r"),
           col("__tele"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node"), round(col("r") + lit(1e-12), 6).as("ppr"))
+    }.last.select(col("node"), round(col("r") + lit(1e-12), 6).as("ppr"))
   }
 
   private[graft] def pageRankWithIters(
@@ -160,14 +156,16 @@ object PageRank {
     // vector through every update, so the per-iteration dangling-mass
     // term is a flat 1-row aggregate over the already-materialized
     // checkpoint — no anti join against the degree table per round
-    var ranks = nodes.select(col(nodeCol).as("node")).crossJoin(n1)
+    val init = nodes.select(col(nodeCol).as("node")).crossJoin(n1)
       .join(deg.select(col("__src")), col("node") === col("__src"), "left")
       .select(col("node"), (lit(1.0) / col("__N")).as("r"),
         col("__src").isNull.as("__dang"))
       .localCheckpoint()
-    var it = 0
-    var converged = false
-    while (it < iterations && !converged) {
+    // each generation carries the previous rank, so the L1-delta check is
+    // a cheap aggregate over the materialized generation
+    def converged(g: DataFrame, i: Int): Boolean = tolerance > 0.0 && i > 0 &&
+      g.agg(sum(abs(col("r") - col("__prev")))).head.getDouble(0) < tolerance
+    val run = generations(init, iterations, converged) { (ranks, _) =>
       val contrib = ranks.join(e, col("node") === col("__src"))
         .groupBy(col("__dst").as("node"))
         .agg(sum(col("r") / col("__deg")).as("__s"))
@@ -183,23 +181,16 @@ object PageRank {
       val inflow = if (redistributeDangling)
         coalesce(col("__s"), lit(0.0)) + col("__D") / col("__N")
       else coalesce(col("__s"), lit(0.0))
-      // carry the previous rank through the checkpoint so the L1-delta
-      // check is a cheap aggregate over the materialized generation
-      val updated = withD.select(col("node"),
-          ((lit(1.0 - damping) / col("__N")) + lit(damping) * inflow).as("r"),
-          col("__dang"), col("__prev"))
-        .localCheckpoint()
-      if (tolerance > 0.0)
-        converged = updated.agg(sum(abs(col("r") - col("__prev"))))
-          .head.getDouble(0) < tolerance
-      ranks = updated.drop("__prev")
-      it += 1
+      withD.select(col("node"),
+        ((lit(1.0 - damping) / col("__N")) + lit(damping) * inflow).as("r"),
+        col("__dang"), col("__prev"))
     }
     // The graph's rational arithmetic ((1-d)/N terms over small integer
     // degrees) lands some exact ranks ON a decimal rounding boundary
     // (…5 at the 7th digit); 1-ulp float noise then flips the rounded
     // digit per engine. +1e-12 (>> accumulated noise ~1e-15, << rank
     // resolution) pushes every true tie consistently upward.
-    (ranks.select(col("node"), round(col("r") + lit(1e-12), 6).as("pagerank")), it)
+    (run.last.select(col("node"), round(col("r") + lit(1e-12), 6).as("pagerank")),
+      run.steps)
   }
 }

@@ -53,8 +53,10 @@ object Mmr {
     def normOf(v: Seq[Double]): Double =
       math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
 
+    // the picks are collected values: free the pinned frame by handle
+    // once the k rounds end, scope or no scope
     var picks = Vector.empty[Pick]
-    while (picks.length < k) {
+    try while (picks.length < k) {
       val red =
         if (picks.isEmpty) lit(0.0)
         else {
@@ -73,7 +75,7 @@ object Mmr {
         .head().getStruct(0)
       picks :+= Pick(picks.length, row.getLong(0), row.getSeq[Double](1),
         row.getDouble(2))
-    }
+    } finally graft.sources.CheckpointScope.release(data)
     picks
   }
 }

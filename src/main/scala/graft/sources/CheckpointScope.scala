@@ -1,42 +1,33 @@
 package graft.sources
 
-import org.apache.spark.SparkContext
+import scala.collection.mutable.ArrayBuffer
 
-/** Deterministic lifecycle for per-batch `localCheckpoint` blocks.
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** Deterministic lifecycle for per-query and per-batch `localCheckpoint`
+  * blocks. Spark frees a checkpoint's blocks only when the application
+  * JVM's GC collects the dropped RDD and the ContextCleaner broadcasts
+  * the removal (in cluster mode the blocks live on executors while the
+  * decision waits on the application's heap pressure). Over a long
+  * single-JVM ingest series tens of frames per batch pile up in executor
+  * storage and cleanup arrives in bursts (the r13 gates-on stress
+  * drifted ~+1 s/batch; scoped, it is flat — BENCH_PIPELINE_GATES_r14.json).
   *
-  * Every ingest batch through [[graft.pipelines.IngestPipeline]] (and
-  * the incremental indexes it composes) materializes a handful of
-  * intermediate frames via `localCheckpoint` — the right call inside
-  * one batch (cut lineage, evaluate once, feed several consumers), but
-  * the blocks it pins in the BlockManager have no explicit release:
-  * Spark frees them only when the DRIVER's garbage collector happens to
-  * collect the unreachable RDD object and the asynchronous
-  * ContextCleaner then broadcasts the removal. On a long-running
-  * single-JVM ingest series that coupling is a real leak-until-GC: tens
-  * of checkpointed frames per batch accumulate in executor storage
-  * memory (in cluster mode the blocks live on EXECUTORS while the
-  * decision to free them waits on DRIVER heap pressure — the classic
-  * footgun), degrading batch times non-monotonically as cleanup arrives
-  * in GC-driven bursts. Measured: the r13 gates-on pipeline stress
-  * drifted ~+1 s/batch with a non-monotone tail; with scoped release
-  * the same series is flat (BENCH_PIPELINE_GATES_r14.json).
+  * A scope snapshots the persisted-RDD ids at open and, at `close()`,
+  * unpersists every RDD persisted since, so it also covers checkpoints
+  * made deep inside composed operators without threading a handle
+  * through every signature. The release work is split in two: iterative
+  * operators free the generations they supersede themselves, by handle,
+  * in [[CheckpointScope.generations]]; the scope frees the rest
+  * (once-pinned inputs, each loop's last generation, every other pin)
+  * at the end of the query or batch it wraps.
   *
-  * A scope snapshots the set of persisted-RDD ids at open and, at
-  * `close()`, unpersists every RDD persisted SINCE — which is exactly
-  * the batch's checkpoints when the scope wraps one batch. Intercepting
-  * at the SparkContext registry (public API) instead of at each
-  * `localCheckpoint` call site means the scope also covers checkpoints
-  * made deep inside composed operators (connected-components
-  * generations, candidate-verify stages) without threading a handle
-  * through every signature.
-  *
-  * Contract: single writer, one scope at a time per SparkContext —
-  * anything persisted while the scope is open is released at close, so
-  * do not create caches you intend to KEEP inside an open scope, and do
-  * not interleave two scoped batches on one context (the serial-batch
-  * discipline every incremental index here already requires).
-  * `close()` is idempotent; unpersist is non-blocking (block removal
-  * proceeds in the background while the next batch starts).
+  * Contract: single writer, one scope at a time per SparkContext — do
+  * not create caches you intend to KEEP inside an open scope, and do not
+  * interleave two scoped batches on one context. `close()` is
+  * idempotent; unpersist is non-blocking.
   */
 final class CheckpointScope(sc: SparkContext) {
   private val before: Set[Int] = sc.getPersistentRDDs.keySet.toSet
@@ -57,5 +48,65 @@ object CheckpointScope {
   def withScope[T](sc: SparkContext)(f: => T): T = {
     val s = new CheckpointScope(sc)
     try f finally s.close()
+  }
+
+  /** Step `gen` (1 for the first) of a [[generations]] loop. */
+  final class Step private[CheckpointScope] (val gen: Int) {
+    private[CheckpointScope] val pinned = ArrayBuffer.empty[DataFrame]
+    /** Pin a scratch frame the step reads twice; freed with its input. */
+    def pin(df: DataFrame): DataFrame = { val p = df.localCheckpoint(); pinned += p; p }
+  }
+
+  final case class Generations(last: DataFrame, steps: Int, stopped: Boolean)
+
+  /** The iterate-and-checkpoint loop of every iterative operator
+    * (PageRank and its variants, LabelProp, Hits, Hierarchy, KCore, Bfs,
+    * Dedup.clusters, clustersStar) and the one account of its rule.
+    * Runs `step` from `init` at most `n` times; returns the `last`
+    * generation (still pinned), the `steps` run and whether `stop` fired.
+    *
+    * Pin: each step's output is `localCheckpoint`ed — eager, so it is
+    * computed once for all its readers, and lineage-cutting, since an
+    * update reading the previous generation twice would double its plan
+    * every step. At cluster scale: a reliable `checkpoint()`.
+    *
+    * Release: once generation g is materialized, generation g−1 (a pinned
+    * `init` included) and the frames step g pinned via [[Step.pin]] are
+    * unpersisted, non-blocking, by handle: the RDD behind each frame's
+    * `LogicalRDD`. Inputs the step closes over and the last generation
+    * are left to the enclosing [[CheckpointScope]].
+    *
+    * Stop: `stop(g, i)` sees every generation, the initial (i = 0) and
+    * the last included, and must answer without an action where it needs
+    * none; built from actions the loop runs anyway, so no job is added.
+    */
+  def generations(init: DataFrame, n: Int,
+                  stop: (DataFrame, Int) => Boolean = (_, _) => false)
+                 (step: (DataFrame, Step) => DataFrame): Generations = {
+    var g = init
+    var i = 0
+    var stopped = stop(g, 0)
+    while (!stopped && i < n) {
+      val s = new Step(i + 1)
+      val next = step(g, s).localCheckpoint()
+      (g +: s.pinned.toSeq).foreach(release)
+      g = next
+      i += 1
+      stopped = stop(g, i)
+    }
+    Generations(g, i, stopped)
+  }
+
+  /** A `stop` firing when `measure` of a generation equals the previous
+    * one's (the initial generation's is compared with `start`). */
+  def unchanged[A](start: A)(measure: DataFrame => A): (DataFrame, Int) => Boolean = {
+    var prev = start
+    (g, _) => { val m = measure(g); val same = m == prev; prev = m; same }
+  }
+
+  /** Unpersist the blocks behind a pinned frame; others are left alone. */
+  private[graft] def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => ()
   }
 }

@@ -19,6 +19,16 @@ class BenchColdSpec extends AnyFunSuite {
       got.toString)
   }
 
+  test("a run that throws has no timing; a clean run is timed") {
+    var ran = false
+    assert(Bench.timed("q_throws") {
+      ran = true
+      throw new IllegalStateException("query failed")
+    }.isEmpty)
+    assert(ran)
+    assert(Bench.timed("q_ok")(()).exists(_ >= 0.0))
+  }
+
   test("coldRerun refuses machine-level flag storms and degrades to empty") {
     // >16 flagged = the whole window was loaded; rerunning them all
     // would measure the same load again

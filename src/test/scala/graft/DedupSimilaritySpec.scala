@@ -208,6 +208,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("Mmr.rerank outside any scope leaves no persisted RDD behind") {
+    import graft.similarity.Mmr
+    val sc = spark.sparkContext
+    val cands = Seq(
+      (1L, Array(1.0f, 0.3f)), (2L, Array(1.0f, 0.3f)),
+      (3L, Array(1.0f, -0.3f))).toDF("vec_id", "embedding")
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val picks = Mmr.rerank(cands, "embedding", "vec_id", Seq(1.0, 0.0), k = 3, lambda = 0.5)
+    assert(picks.map(_.id) == Seq(1L, 3L, 2L))
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    left.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    assert(left.isEmpty, s"rerank left ${left.size} persisted RDDs")
+  }
+
   test("Dbscan: core/border/noise roles, labels flow only through cores, CC contrast") {
     import graft.similarity.Dbscan
     val ids = (1L to 8L).toDF("id")

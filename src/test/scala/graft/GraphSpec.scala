@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -402,20 +403,47 @@ class GraphSpec extends AnyFunSuite {
     (1L to 4L).foreach(i => assert(got(i) == ((0.5, 0.0))))
   }
 
-  test("hits releases half-step and previous-generation checkpoints each iteration") {
+  test("generation loops keep only pinned inputs + last generation") {
+    import graft.dedup.Dedup
+    import graft.graph.{Bfs, Hierarchy, KCore}
     val sc = spark.sparkContext
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("s", "d")
-    val nodes = (1L to 3L).toDF("id")
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = Hits.hits(e, "s", "d", nodes, "id", iterations = 6)
-    out.collect()
-    // 6 iterations pin 2 half-steps + 1 generation each; only the edges
-    // checkpoint and the LAST generation may survive the loop (unpersist
-    // removes ids from the registry synchronously)
-    val survived = sc.getPersistentRDDs.keySet.toSet -- before
-    assert(survived.size <= 3, s"leaked ${survived.size} persisted RDDs")
-    survived.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    // a 12-node path: every loop below runs >= 5 steps on it (PageRank,
+    // LabelProp and Hits by their iteration count; KCore peels two ends
+    // per round at k = 2; Bfs, the one-hop label propagation and the
+    // star contraction advance along it; Hierarchy doubles 5 times)
+    val path = (1L to 11L).map(i => (i, i + 1)).toDF("s", "d")
+    val nodes = (1L to 12L).toDF("id")
+    val parents = (1L to 12L).map(i => (i, if (i == 1L) None else Some(i - 1))).toDF("id", "p")
+    val longPath = (1L to 63L).map(i => (i, i + 1)).toDF("s", "d")
+    // (operator, frames it pins once besides its generations, run)
+    val loops: Seq[(String, Int, () => DataFrame)] = Seq(
+      ("pageRank", 1, () => PageRank.pageRank(path, "s", "d", nodes, "id", iterations = 6)),
+      ("weightedPageRank", 1, () => PageRank.weightedPageRank(
+        path.withColumn("w", lit(2.0)), "s", "d", "w", nodes, "id", iterations = 6)),
+      ("personalizedPageRank", 1, () => PageRank.personalizedPageRank(
+        path, "s", "d", nodes, "id", Seq(1L), iterations = 6)),
+      ("labelPropagation", 1, () => LabelProp.labelPropagation(path, "s", "d", nodes, "id",
+        iterations = 6)),
+      ("hits", 1, () => Hits.hits(path, "s", "d", nodes, "id", iterations = 6)),
+      ("resolve", 0, () => Hierarchy.resolve(parents, "id", "p", maxDepth = 32)),
+      ("kCore", 0, () => KCore.kCore(path, "s", "d", k = 2)),
+      ("hopDistance", 1, () => Bfs.hopDistance(path, "s", "d", Seq(1L), maxHops = 6)),
+      ("clusters", 0, () => Dedup.clusters(nodes, path, "id", "s", "d")),
+      ("clustersStar", 0, () => Dedup.clustersStar(
+        (1L to 64L).toDF("id"), longPath, "id", "s", "d")))
+    val leaks = loops.flatMap { case (name, inputs, run) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      run().collect()
+      // outside any scope nothing else frees blocks (unpersist removes
+      // ids from the registry synchronously), so the survivors are what
+      // the loop kept: its inputs and its last generation
+      val survived = sc.getPersistentRDDs.keySet.toSet -- before
+      survived.foreach(id =>
+        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+      if (survived.size <= inputs + 1) None
+      else Some(s"$name kept ${survived.size} (bound ${inputs + 1})")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
   test("gramMatrix shuffles k^2-bounded partials, not row-scaled data") {

@@ -49,6 +49,20 @@ class ScopeLeaseSpec extends AnyFunSuite {
     s.close(); s.close() // second close must be a no-op
   }
 
+  test("only CheckpointScope.scala reads the persisted-RDD registry in src/main") {
+    import scala.jdk.CollectionConverters._
+    // iterative operators release by handle (CheckpointScope.generations);
+    // diffing the context-wide registry is the scope's job alone
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under the working directory")
+    val readers = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("getPersistentRDDs"))
+      .map(p => root.relativize(p).toString.replace('\\', '/')).toSet
+    assert(readers == Set("graft/sources/CheckpointScope.scala"), readers.toString)
+  }
+
   test("maintenance lease: concurrent claims serialize loudly, release reopens, re-entrancy holds") {
     val t = fresh("graft-lease")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(t))
