@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Plans {
 
-  private val Annotated: Seq[(String, String)] = Seq(
+  private[graft] val Annotated: Seq[(String, String)] = Seq(
     "q_lookup_left" ->
       "Broadcast lookup join: the dimension filter is pushed to its scan (PushedFilters) and the dim side broadcasts — no shuffle of the fact side.",
     "q_cast_project" ->
@@ -160,8 +160,6 @@ object Plans {
       "Pointer-doubling hierarchy: each of the ceil(log2 depth) rounds is a two-long-column self-join on the id key (localCheckpoint'd, so the final plan shows ONE round, not a depth-long lineage) — a depth-D chain resolves in log D shuffles instead of D.",
     "q_unigram_segment" ->
       "Viterbi segmentation: the cost table is a plan-literal map and the DP is a per-row fold — the only exchange is the distinct-word aggregate the corpus collapses to first; segmentation work is vocabulary-sized, never corpus-sized.",
-    "q_holt" ->
-      "Holt smoothing: the corpus collapses to the hourly count aggregate; the coupled level/trend recurrence is a struct-accumulator fold over each row's prefix frame of ONE event_type window — a single exchange + per-partition sort, no stateful UDF, no driver loop.",
     "q_index_lookup" ->
       "Read-only probe of the persisted dedup index via the r13 posting-list layout: the index leg is a parquet scan of the postings sidecar (slim pre-exploded tokens; on a trickle probe the batch's bucket set and the snapshot-version bound land in PushedFilters) — no Generate/posexplode over the doc table anywhere — and the verify payload read is restricted to candidate ids. The probe side is the only thing exchanged.",
     "q_ann_ivfpq_incremental" ->

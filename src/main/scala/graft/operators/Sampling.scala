@@ -140,10 +140,10 @@ object Sampling {
     * cumulative-sum shape with count in place of token length. The
     * shard id is arithmetic on the hash, so there is no range exchange
     * to pin; [[RankedStats.withCumulative]] documents the range-sharded
-    * variant and its caveats. `shards` overrides the session's
-    * `spark.sql.shuffle.partitions` as the shard count. Ties in
-    * the 60-bit prefix break on the key itself, keeping the order total
-    * — the oracle replays exactly (prefix, key) ordering.
+    * variant and its caveats. The shard count is the session's
+    * `spark.sql.shuffle.partitions`; the order does not depend on it.
+    * Ties in the 60-bit prefix break on the key itself, keeping the
+    * order total — the oracle replays exactly (prefix, key) ordering.
     *
     * PRECONDITION: `keyCol` values must be UNIQUE (like the integral-id
     * contracts elsewhere). Duplicate keys share (hash, key) entirely, so
@@ -151,11 +151,9 @@ object Sampling {
     * determinism/replayability contract breaks for exactly those rows —
     * dedup or add a tiebreaker column to the key first.
     */
-  def globalShuffleOrder(df: DataFrame, keyCol: String, shards: Int = 0): DataFrame = {
+  def globalShuffleOrder(df: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nSh =
-      if (shards > 0) shards
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val nSh = df.sparkSession.sessionState.conf.numShufflePartitions
     val h = conv(substring(md5(col(keyCol).cast("string")), 1, 15), 16, 10).cast("long")
     val width = (1L << 60) / nSh + 1
     val sharded = df.withColumn("__h", h)

@@ -215,27 +215,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val t = 0.7
     val rows = IncrementalDedup.indexRows(
       docs.toDF("doc_id", "text"), "text", "doc_id", t).localCheckpoint()
-    val acc = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        acc.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    var nPairs = -1L
+    val shuffled = TestSpark.shuffleRecordsOf {
+      nPairs = IncrementalDedup.batchPairs(rows, None, t,
+        hotTokenCap = 64, hotChunk = 64).count()
     }
-    spark.sparkContext.addSparkListener(l)
-    val nPairs =
-      try {
-        val n = IncrementalDedup.batchPairs(rows, None, t,
-          hotTokenCap = 64, hotChunk = 64).count()
-        var prev = -1L; var stable = 0; var waited = 0
-        while (stable < 3 && waited < 10000) {
-          Thread.sleep(100); waited += 100
-          val cur = acc.get
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-        n
-      } finally spark.sparkContext.removeSparkListener(l)
     assert(nPairs == 0L) // unique tails: nothing verifies
-    val shuffled = acc.get
     val nTokens = rows.agg(sum(size(col("prefix")))).head.getLong(0)
     // tokens ride the exchange a bounded number of times (explodes,
     // freq counts, grid replication); the quadratic bucket would add

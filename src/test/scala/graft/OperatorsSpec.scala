@@ -585,14 +585,18 @@ class OperatorsSpec extends AnyFunSuite {
   test("globalShuffleOrder: a permutation of 0..n-1, partitioning-invariant, no global sort") {
     import graft.operators.Sampling
     val df = Seq.tabulate(700)(i => (i.toLong, s"p$i")).toDF("key", "payload")
-    def order(d: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      Sampling.globalShuffleOrder(d, "key", shards = 8)
-        .select(col("key"), col("global_pos"))
-        .as[(Long, Long)].collect().toMap
+    def order(d: org.apache.spark.sql.DataFrame, shards: Int = 8): Map[Long, Long] =
+      TestSpark.withShufflePartitions(shards) {
+        Sampling.globalShuffleOrder(d, "key")
+          .select(col("key"), col("global_pos"))
+          .as[(Long, Long)].collect().toMap
+      }
     val base = order(df)
     assert(base.values.toSeq.sorted == (0L until 700L)) // exact permutation
     assert(order(df.repartition(13, col("payload"))) == base)
     assert(order(df.repartition(1)) == base)
+    // the shard count (shuffle partitions) moves shard boundaries only
+    Seq(1, 3).foreach(n => assert(order(df, n) == base, s"order differs under $n shards"))
     // matches the single-window reference order (md5-prefix, key)
     val ref = df.select(col("key"))
       .withColumn("__h", conv(substring(md5(col("key").cast("string")), 1, 15), 16, 10).cast("long"))
@@ -600,8 +604,9 @@ class OperatorsSpec extends AnyFunSuite {
     ref.zipWithIndex.foreach { case (k, pos) => assert(base(k) == pos.toLong) }
     // scale shape: the data-sized window is sharded; only the 8-row
     // offsets table sees a no-partition window
-    val plan = Sampling.globalShuffleOrder(df, "key", shards = 8)
-      .queryExecution.executedPlan.toString
+    val plan = TestSpark.withShufflePartitions(8) {
+      Sampling.globalShuffleOrder(df, "key").queryExecution.executedPlan.toString
+    }
     assert(plan.contains("windowspecdefinition(__shard"), plan)
   }
 

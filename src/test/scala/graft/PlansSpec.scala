@@ -15,6 +15,13 @@ class PlansSpec extends AnyFunSuite {
   private def planOf(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
+  test("PLANS.md annotations: one per query, each a SparkEntry query") {
+    val names = Plans.Annotated.map(_._1)
+    assert(names.diff(names.distinct).isEmpty, s"annotated twice: ${names.diff(names.distinct)}")
+    assert(names.filterNot(SparkEntry.queries.contains).isEmpty,
+      s"annotated but not a query: ${names.filterNot(SparkEntry.queries.contains)}")
+  }
+
   test("q_lookup_left: broadcast join with filter pushed into the parquet scan") {
     val p = planOf("q_lookup_left")
     assert(p.contains("BroadcastHashJoin"), p)
@@ -257,42 +264,13 @@ class PlansSpec extends AnyFunSuite {
     assert(!plan.contains("HashAggregate"), plan)
   }
 
-  /** Total shuffle-WRITE RECORDS across every stage a body runs —
-    * listener-based, so it also sees the jobs behind localCheckpoint
-    * boundaries that the final plan's Exchange metrics can't. Record
-    * counts are machine-state-independent (unlike seconds), which makes
-    * these guards the mechanical tiebreaker between "the bench was
-    * noisy" and "the plan regressed": a pair-explosion or lost
-    * pre-aggregation multiplies records, never a CPU governor.
-    */
-  private def shuffleRecordsOf(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        acc.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async — poll until the sum is stable
-      var prev = -1L; var stable = 0; var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        val cur = acc.get
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-    } finally spark.sparkContext.removeSparkListener(l) // even when body throws
-    acc.get
-  }
-
   test("q_bigram_logprob: shuffle records stay linear in the bigram count") {
     val docs = Tables.documents(spark, sf)
     import org.apache.spark.sql.functions.{size => asize}
     val nBigrams = docs
       .select(asize(split(col("text"), " ")).as("n")).filter(col("n") >= 2)
       .agg(org.apache.spark.sql.functions.sum(col("n") - 1)).head.getLong(0)
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_bigram_logprob")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }
@@ -306,7 +284,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("q_cv_ols: the corpus never shuffles — sufficient statistics move, not rows") {
     val n = Tables.lineitem(spark, sf).count()
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_cv_ols")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }
@@ -325,7 +303,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("q_spearman / q_entity_resolution / q_modularity: shuffle records linear in input") {
     val nLi = Tables.lineitem(spark, sf).count()
-    val sp = shuffleRecordsOf {
+    val sp = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_spearman")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }
@@ -335,7 +313,7 @@ class PlansSpec extends AnyFunSuite {
       s"q_spearman shuffled $sp records for $nLi rows")
 
     val nDocs = Tables.documents(spark, sf).count()
-    val er = shuffleRecordsOf {
+    val er = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_entity_resolution")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }
@@ -346,7 +324,7 @@ class PlansSpec extends AnyFunSuite {
       s"q_entity_resolution shuffled $er records for $nDocs docs")
 
     val nVec = Tables.embeddings(spark, sf).count()
-    val mo = shuffleRecordsOf {
+    val mo = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_modularity")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }
@@ -361,7 +339,7 @@ class PlansSpec extends AnyFunSuite {
     val nIds = emb.count()
     val nEdges = graft.similarity.Similarity.cosinePairs(
       emb, "embedding", "vec_id", "label", threshold = 0.35).count()
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_dedup_clusters")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }
@@ -382,7 +360,7 @@ class PlansSpec extends AnyFunSuite {
     val nBuckets = Tables.events(spark, d01)
       .select(col("event_type"), expr("ts div 3600000000000").as("b"))
       .distinct().count()
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_holt")(spark, d01)
         .write.mode("overwrite").format("noop").save()
     }
@@ -401,7 +379,7 @@ class PlansSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d01)
     val nDocs = docs.count()
     val nCand = graft.dedup.Dedup.minhashCandidates(docs, "text", "doc_id").count()
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_dedup_minhash")(spark, d01)
         .write.mode("overwrite").format("noop").save()
     }
@@ -424,7 +402,7 @@ class PlansSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.sum(size(split(lower(col("text")), " "))))
       .head.getLong(0)
     val nPairs = SparkEntry.queries("q_dedup_ngram")(spark, d01).count()
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_dedup_ngram")(spark, d01)
         .write.mode("overwrite").format("noop").save()
     }
@@ -472,87 +450,17 @@ class PlansSpec extends AnyFunSuite {
     // Project, inlining a SECOND full evaluation per row into the
     // Filter. These expressions are signature/array builders — any
     // appearance in a Filter condition is a re-evaluation bug, never a
-    // legitimate predicate. Sweeps every SparkEntry query's optimized
-    // plan (analysis only, nothing executes). Found and fixed this way:
-    // minhashSignatures/simhash sig.isNotNull, markedGrams size filter,
-    // q_pipeline_curation's quality gate over the Gopher fold.
-    val sfDir = sf
-    def expensive(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e.collect {
-      case x: graft.functions.MinHashSig => x
-      case x: graft.functions.SimHash64 => x
-      case x: graft.functions.WordNgrams => x
-      case x: graft.functions.WordShingles => x
-      case x: graft.functions.TitleCase => x
-      case x: graft.functions.JaroWinkler => x
-      case x: graft.functions.DotProduct => x
-      case x: graft.functions.NfcNormalize => x
-    }
-    // Two pathology shapes, both counted on CANONICALLY-IDENTICAL trees:
-    //   1. the same tree in a Filter AND anywhere else — predicate-
-    //      pushdown substitution (incl. the guards
-    //      InferFiltersFromGenerate manufactures around explode): both
-    //      evaluations run over essentially the same rows.
-    //   2. the same tree >= 2x within ONE non-Join node — a lost
-    //      common-subexpression binding (q_array_fns' shingles,
-    //      q_normalize's nfc before their fixes).
-    // NOT flagged, deliberately: a tree in a Join CONDITION recomputed
-    // in the Project above (q_embed_pairs' cosine threshold, fuzzy
-    // joins' jaro) — the condition evaluates over candidates, the
-    // projection only over survivors; a single-eval plan would compute
-    // the same total while shuffling MORE rows. A tree appearing only
-    // in a Filter is likewise fine (q_ann_lsh's bucket probe — pruning
-    // drops it downstream). The simhash self-join diamond's legs carry
-    // different attribute ids and never collide.
-    val offenders = TestSpark.sweptQueries.flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.optimizedPlan
-        val occ = plan.collect { case node =>
-          node.expressions.flatMap(expensive).map(x => (node, x.canonicalized))
-        }.flatten
-        occ.groupBy(_._2).collect {
-          case (tree, os) if {
-            val inFilter = os.exists(
-              _._1.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter])
-            val maxInOneNonJoinNode = os.groupBy(o => o._1).collect {
-              case (n, xs)
-                  if !n.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join] =>
-                xs.size
-            }.maxOption.getOrElse(0)
-            (os.size >= 2 && inFilter) || maxInOneNonJoinNode >= 2
-          } =>
-            (name, s"${tree.prettyName} evaluated ${os.size}x across " +
-              os.map(_._1.nodeName).distinct.mkString("/"))
-        }
-    }
+    // legitimate predicate. Reads every SparkEntry query's optimized
+    // plan from the shared QuerySweep pass, whose doubleEvaluations
+    // documents the two flagged shapes and the deliberate exceptions.
+    // Found and fixed this way: minhashSignatures/simhash sig.isNotNull,
+    // markedGrams size filter, q_pipeline_curation's quality gate over
+    // the Gopher fold.
+    val sweep = QuerySweep.findings
+    assert(sweep.failed.isEmpty, s"swept queries threw: ${sweep.failed}")
+    val offenders = sweep.doubleEvaluations
     assert(offenders.isEmpty,
       s"expensive-expression double evaluations: $offenders")
-  }
-
-  /** Conservative "this subtree's row count does not scale with the
-    * corpus" proof by plan-walk: reach an Aggregate (distinct keys), a
-    * GlobalLimit (top-k head), a generated Range, or a driver-local
-    * relation through nodes that cannot increase cardinality. Joins/
-    * unions OF bounded inputs stay bounded (histogram x totals). Used
-    * by the global-window and no-equi-key-join sweeps below.
-    */
-  private def boundedSubtree(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    p match {
-      case _: Aggregate | _: GlobalLimit | _: LocalRelation |
-           _: OneRowRelation => true
-      // a generated sequence is sized by its author, not by the corpus
-      // (densified grids, digit tables) — every Range in this repo is
-      // require-guarded or literal-tiny
-      case _: Range => true
-      case _: Project | _: Filter | _: Sort | _: Window | _: LocalLimit |
-           _: Distinct | _: Deduplicate | _: SubqueryAlias |
-           _: WithCTE | _: CTERelationDef | _: RepartitionOperation =>
-        p.children.forall(boundedSubtree)
-      case _: Join | _: Union => p.children.forall(boundedSubtree)
-      case _ => false
-    }
   }
 
   test("every unpartitioned Window sits over a provably bounded input") {
@@ -568,9 +476,7 @@ class PlansSpec extends AnyFunSuite {
     // driver-local relation — before any Join/Generate/Union/scan.
     // Every legitimate global window in this repo ranks one of those;
     // a new one over raw rows is a bug this sweep turns into a test
-    // failure instead of a 100 TB incident.
-    val sfDir = sf
-    import org.apache.spark.sql.catalyst.plans.logical._
+    // failure instead of a 100 TB incident (QuerySweep.boundedSubtree).
     // Plan-opaque but bounded by construction — each carries its proof
     // at the implementation site; a NEW query landing here needs the
     // same kind of argument, not a silent pass:
@@ -585,16 +491,9 @@ class PlansSpec extends AnyFunSuite {
       // (<= buckets x frontier rows — Skyline.scala's containment
       // theorem); stage-1 is hash-partitioned and not flagged
       "q_skyline" -> "union of 64 local skylines (frontier-sized)")
-    val offenders = TestSpark.sweptQueries.flatMap {
-      case (name, fn) if !exempt.contains(name) =>
-        val plan = fn(spark, sfDir).queryExecution.optimizedPlan
-        (plan +: plan.subqueriesAll).flatMap(_.collect {
-          case w: Window if w.partitionSpec.isEmpty &&
-              !boundedSubtree(w.child) =>
-            (name, w.windowExpressions.map(_.name).mkString(","))
-        })
-      case _ => Nil
-    }
+    val sweep = QuerySweep.findings
+    assert(sweep.failed.isEmpty, s"swept queries threw: ${sweep.failed}")
+    val offenders = sweep.unboundedWindows.filterNot { case (name, _) => exempt.contains(name) }
     assert(offenders.isEmpty,
       s"unpartitioned Window over unbounded input: $offenders")
   }
@@ -607,28 +506,8 @@ class PlansSpec extends AnyFunSuite {
     // an O(n x m) cluster-killer when both sides scale with the corpus.
     // Sweep every optimized plan: for each Join whose condition carries
     // NO cross-side equality, one side must pass the bounded walk.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.catalyst.expressions.{EqualTo, EqualNullSafe}
-    import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
-    val sfDir = sf
-    def hasEquiKey(j: Join): Boolean = j.condition.exists { c =>
-      c.collect {
-        case e: EqualTo => e
-        case e: EqualNullSafe => e
-      }.exists { e =>
-        val lrefs = e.left.references
-        val rrefs = e.right.references
-        (lrefs.subsetOf(j.left.outputSet) && rrefs.subsetOf(j.right.outputSet)) ||
-        (lrefs.subsetOf(j.right.outputSet) && rrefs.subsetOf(j.left.outputSet))
-      }
-    }
-    // an explicit broadcast() hint is the AUTHOR's bounded declaration
-    // (the ANN query-set side, the decile-edge row): accept it as the
-    // small side — the hint is load-bearing and a dropped one fails
-    // this sweep, which is the point
-    def hintedSmall(j: Join): Boolean =
-      j.hint.leftHint.exists(_.strategy.contains(BROADCAST)) ||
-      j.hint.rightHint.exists(_.strategy.contains(BROADCAST))
+    // An explicit broadcast() hint counts as the author's bounded
+    // declaration (QuerySweep.hintedSmall).
     // Plan-opaque but bounded by construction at the implementation
     // site (both are corpus-independent level/bucket PAIR joins whose
     // input is localCheckpoint'd, so the guard is invisible here):
@@ -639,16 +518,9 @@ class PlansSpec extends AnyFunSuite {
       // level-pair join over the QUANTIZED score table,
       // <= 10^digits levels by construction (Isotonic.scala header)
       "q_isotonic" -> "quantized level table pair join")
-    val offenders = TestSpark.sweptQueries.flatMap {
-      case (name, fn) if !exempt.contains(name) =>
-        val plan = fn(spark, sfDir).queryExecution.optimizedPlan
-        (plan +: plan.subqueriesAll).flatMap(_.collect {
-          case j: Join if !hasEquiKey(j) && !hintedSmall(j) &&
-              !boundedSubtree(j.left) && !boundedSubtree(j.right) =>
-            (name, s"${j.joinType} join, condition=${j.condition.isDefined}")
-        })
-      case _ => Nil
-    }
+    val sweep = QuerySweep.findings
+    assert(sweep.failed.isEmpty, s"swept queries threw: ${sweep.failed}")
+    val offenders = sweep.unboundedNoEquiJoins.filterNot { case (name, _) => exempt.contains(name) }
     assert(offenders.isEmpty,
       s"no-equi-key join with both sides unbounded: $offenders")
   }
@@ -660,7 +532,7 @@ class PlansSpec extends AnyFunSuite {
     val nShingles = docs
       .select(asize(split(lower(col("text")), " ")).as("n"))
       .agg(asum(agreatest(col("n") - 2, lit(1)))).head.getLong(0)
-    val shuffled = shuffleRecordsOf {
+    val shuffled = TestSpark.shuffleRecordsOf {
       SparkEntry.queries("q_dedup_incremental")(spark, sf)
         .write.mode("overwrite").format("noop").save()
     }

@@ -40,22 +40,12 @@ class QueriesSpec extends AnyFunSuite {
   // at the CORRECTNESS gate regardless of value correctness — serialize
   // via array_join / to_json instead (the q_pq_encode lesson, round 6).
   test("no query emits a top-level array/map/struct column (harness contract)") {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    Certificates.enforce = false
-    try {
-      val violations = TestSpark.sweptQueries.flatMap {
-        case (name, fn) =>
-          fn(spark, sf).schema.fields.collect {
-            case f if f.dataType.isInstanceOf[ArrayType] ||
-              f.dataType.isInstanceOf[MapType] ||
-              f.dataType.isInstanceOf[StructType] =>
-              s"$name.${f.name}: ${f.dataType.simpleString}"
-          }
-      }
-      assert(violations.isEmpty,
-        s"non-scalar output columns break the oracle comparator:\n  " +
-          violations.mkString("\n  "))
-    } finally Certificates.enforce = true
+    val sweep = QuerySweep.findings
+    assert(sweep.failed.isEmpty, s"swept queries threw: ${sweep.failed}")
+    val violations = sweep.nonScalarColumns
+    assert(violations.isEmpty,
+      s"non-scalar output columns break the oracle comparator:\n  " +
+        violations.mkString("\n  "))
   }
 
   // Smoke runs uncertified: precondition certificates are calibrated for

@@ -33,6 +33,35 @@ object TestSpark {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Total shuffle-WRITE RECORDS across every stage `body` runs —
+    * listener-based, so it also sees the jobs behind localCheckpoint
+    * boundaries that the final plan's Exchange metrics can't. Record
+    * counts are machine-state-independent (unlike seconds), which makes
+    * these guards the mechanical tiebreaker between "the bench was
+    * noisy" and "the plan regressed": a pair-explosion or lost
+    * pre-aggregation multiplies records, never a CPU governor.
+    */
+  def shuffleRecordsOf(body: => Any): Long = {
+    val acc = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        acc.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // the listener bus is async — poll until the sum is stable
+      var prev = -1L; var stable = 0; var waited = 0
+      while (stable < 3 && waited < 10000) {
+        Thread.sleep(100); waited += 100
+        val cur = acc.get
+        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+      }
+    } finally spark.sparkContext.removeSparkListener(l) // even when body throws
+    acc.get
+  }
+
   /** The reference data lake's bundled inputs (FIXTURES.md §1): read-only,
     * outside the checkout, and absent on machines that lack the copy.
     * Tests that read it skip with `assume(refExists(...))`. */
