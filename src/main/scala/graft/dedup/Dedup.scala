@@ -81,19 +81,6 @@ object Dedup {
       .groupBy(col("id"))
       .agg(graft.functions.MinHashAgg.minhashAgg(col("s"), k).as("sig"))
 
-  /** The k-column composed form MinHashAgg replaces — differential
-    * reference for structure (family values differ; both are valid
-    * MinHash estimators).
-    */
-  private[graft] def minhashSignaturesViaColumns(df: DataFrame, textCol: String,
-                                                idCol: String, k: Int): DataFrame = {
-    val ex = df.select(col(idCol).cast("long").as("id"),
-      explode(shingles(lower(col(textCol)), 3)).as("s"))
-    val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("s"))).as(s"__h$i"))
-    ex.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until k).map(i => col(s"__h$i")): _*).as("sig"))
-  }
-
   /** MinHash + LSH candidate pairs: signatures banded into `bands` groups
     * of `k/bands` rows; docs sharing any band bucket become a candidate
     * pair; estimated Jaccard = fraction of matching signature positions.

@@ -96,35 +96,6 @@ object IncrementalDedup {
         col("prefix").cast("array<string>").as("prefix"))
   }
 
-  /** ONE candidate+verify pass for a batch: every exact-Jaccard ≥ t
-    * pair of (batch doc, batch doc) — tagged `within = true`, emitted
-    * once with `id_new < id_old` — and of (batch doc, indexed doc) —
-    * `within = false`. Fusing the self-join and the index join into a
-    * single shared-prefix equi-join halves the number of shuffle
-    * chains an ingest runs (measured: the split pipelines dominated
-    * the batch wall-time, SCALING.md).
-    *
-    * Candidates come from the shared-prefix equi-join (complete by the
-    * prefix-filter theorem — all prefixes were cut under the same fixed
-    * order), pruned by the size-ratio bound (J ≥ t ⇒ t·|a| ≤ |b| ≤
-    * |a|/t). Verification is filter-then-refine: the long-array hash
-    * intersect (~4× cheaper than string intersect) computes a
-    * hash-Jaccard that can only OVERestimate (collisions merge
-    * elements, and the union term uses the true string-set sizes), so
-    * `hashJ ≥ t` is a complete filter; the string intersect then
-    * confirms the few survivors — exactness never rides on hash
-    * collisionlessness. Output: `id_new, id_old, within, jaccard`.
-    *
-    * Zipf-hot prefix tokens (side frequency > [[DefaultHotTokenCap]])
-    * are routed through an exact size-banded chunk grid instead of the
-    * plain equi-join bucket — bounded per-task pair work with zero
-    * recall loss (see the 5-arg overload's body).
-    */
-  def batchPairs(rows: DataFrame, index: Option[DataFrame],
-                 threshold: Double): DataFrame =
-    batchPairs(rows, index, threshold,
-      hotTokenCap = DefaultHotTokenCap, hotChunk = DefaultHotChunk)
-
   /** A prefix token is HOT when either side of the candidate join holds
     * more than this many rows for it — a Zipf-head shingle landing in
     * millions of prefixes would otherwise make the equi-join's one
@@ -152,22 +123,6 @@ object IncrementalDedup {
     * split stays fully lazy via broadcast anti/semi joins.
     */
   val DefaultMaxHotCollect = 16384
-
-  def batchPairs(rows: DataFrame, index: Option[DataFrame], threshold: Double,
-                 hotTokenCap: Int, hotChunk: Int): DataFrame =
-    batchPairs(rows, index, threshold, hotTokenCap, hotChunk,
-      DefaultMaxHotCollect)
-
-  def batchPairs(rows: DataFrame, index: Option[DataFrame], threshold: Double,
-                 hotTokenCap: Int, hotChunk: Int, maxHotCollect: Int): DataFrame =
-    batchPairs(rows, index, threshold, hotTokenCap, hotChunk, maxHotCollect,
-      indexTokenCounts = None)
-
-  def batchPairs(rows: DataFrame, index: Option[DataFrame], threshold: Double,
-                 hotTokenCap: Int, hotChunk: Int, maxHotCollect: Int,
-                 indexTokenCounts: Option[DataFrame]): DataFrame =
-    batchPairs(rows, index, threshold, hotTokenCap, hotChunk, maxHotCollect,
-      indexTokenCounts, HotInputs())
 
   /** Precomputed hot-detection inputs an ingest loop already has in
     * hand — every field steers PERFORMANCE only (the hot set is a pure
@@ -199,17 +154,41 @@ object IncrementalDedup {
                              batchMaxFreq: Option[Long] = None,
                              indexMaxCnt: Option[Long] = None)
 
-  /** Full-control overload. `indexTokenCounts` (`g: string, cnt: long`,
-    * one row per distinct prefix token of `index`) lets hot-token
-    * detection skip the full pass over the index prefix stream: the
-    * rhs frequency of a token is `f_batch + cnt`, read from the
-    * maintained table ([[processBatch]] keeps one next to the index,
-    * [[tokenFreqTable]]). The counts steer PERFORMANCE only — the hot
-    * set is a pure routing split, every membership is exact — so a
-    * stale or approximate table can never drop a pair: over-counts
-    * route more tokens through the (exact) grid, under-counts leave a
-    * hot token in the (exact) equi-join bucket. Only the provided
-    * `index` frame is ever joined for candidates.
+  /** ONE candidate+verify pass for a batch: every exact-Jaccard ≥ t
+    * pair of (batch doc, batch doc) — tagged `within = true`, emitted
+    * once with `id_new < id_old` — and of (batch doc, indexed doc) —
+    * `within = false`. Fusing the self-join and the index join into a
+    * single shared-prefix equi-join halves the number of shuffle
+    * chains an ingest runs (measured: the split pipelines dominated
+    * the batch wall-time, SCALING.md).
+    *
+    * Candidates come from the shared-prefix equi-join (complete by the
+    * prefix-filter theorem — all prefixes were cut under the same fixed
+    * order), pruned by the size-ratio bound (J ≥ t ⇒ t·|a| ≤ |b| ≤
+    * |a|/t). Verification is filter-then-refine: the long-array hash
+    * intersect (~4× cheaper than string intersect) computes a
+    * hash-Jaccard that can only OVERestimate (collisions merge
+    * elements, and the union term uses the true string-set sizes), so
+    * `hashJ ≥ t` is a complete filter; the string intersect then
+    * confirms the few survivors — exactness never rides on hash
+    * collisionlessness. Output: `id_new, id_old, within, jaccard`.
+    *
+    * Zipf-hot prefix tokens (side frequency > `hotTokenCap`) are routed
+    * through an exact size-banded chunk grid of `hotChunk`-row chunks
+    * instead of the plain equi-join bucket — bounded per-task pair
+    * work with zero recall loss (see [[pairsImpl]]).
+    *
+    * `indexTokenCounts` (`g: string, cnt: long`, one row per distinct
+    * prefix token of `index`) lets hot-token detection skip the full
+    * pass over the index prefix stream: the rhs frequency of a token is
+    * `f_batch + cnt`, read from the maintained table ([[processBatch]]
+    * keeps one next to the index, [[tokenFreqTable]]). The counts steer
+    * PERFORMANCE only — the hot set is a pure routing split, every
+    * membership is exact — so a stale or approximate table can never
+    * drop a pair: over-counts route more tokens through the (exact)
+    * grid, under-counts leave a hot token in the (exact) equi-join
+    * bucket. Only the provided `index` frame is ever joined for
+    * candidates.
     *
     * NOTE an eager job: hot detection runs `collect()` at PLAN-BUILD
     * time (bounded ≤ maxHotCollect+1 rows), so `rows` — and `index` if
@@ -222,9 +201,11 @@ object IncrementalDedup {
     * mis-routing tokens.
     */
   def batchPairs(rows: DataFrame, index: Option[DataFrame], threshold: Double,
-                 hotTokenCap: Int, hotChunk: Int, maxHotCollect: Int,
-                 indexTokenCounts: Option[DataFrame],
-                 hotInputs: HotInputs): DataFrame =
+                 hotTokenCap: Int = DefaultHotTokenCap,
+                 hotChunk: Int = DefaultHotChunk,
+                 maxHotCollect: Int = DefaultMaxHotCollect,
+                 indexTokenCounts: Option[DataFrame] = None,
+                 hotInputs: HotInputs = HotInputs()): DataFrame =
     pairsImpl(rows,
       index.map { idx =>
         IndexSide(
@@ -1250,28 +1231,16 @@ object IncrementalDedup {
                    txn: Option[Long] = None): DataFrame = {
     val rows = indexRows(batch, textCol, idCol, threshold, n).localCheckpoint()
 
-    // Replay detection (the streamingCommitSink rule): this app's
-    // highest committed txn covers ours → the append already happened.
-    // txnMaxes is an O(checkpoint-tail) lookup; the full history walk
-    // to locate the exact prior commit runs only on an actual replay.
-    val replayed = txnApp.zip(txn).exists { case (app, t) =>
-      VersionedTable.txnMaxes(indexTable).get(app).exists(_ >= t)
-    }
-    val replayedAt: Option[Long] =
-      if (!replayed) None
-      else txnApp.zip(txn).flatMap { case (app, t) =>
-        VersionedTable.history(indexTable)
-          .find(c => c.txnApp.contains(app) && c.txn.contains(t))
-          .map(_.version)
-      }
-
-    // the index BEFORE this batch, pinned by version (-1 = empty); on
+    // Replay detection ([[VersionedTable.txnPin]]): this app's highest
+    // committed txn covers ours → the append already happened. The
+    // index BEFORE this batch is pinned by version (-1 = empty); on
     // replay, pinned BELOW the original commit so statuses are pure —
     // a replayed doc never matches its own (or a batch-mate's) index
     // row. (If vacuum has since dropped the original entry, the append
     // is still skipped and statuses fall back to the latest snapshot.)
-    val ver = replayedAt.map(_ - 1)
-      .getOrElse(VersionedTable.latestVersion(indexTable))
+    val pin = VersionedTable.txnPin(indexTable, txnApp, txn)
+    val replayed = pin.replayed
+    val ver = pin.readVersion
     val snap =
       if (ver < 0) None
       else Some(VersionedTable.readVersion(spark, indexTable, ver))
@@ -1283,12 +1252,12 @@ object IncrementalDedup {
     // cheap per-app max-txn check (it can only cover our txn if THIS
     // txn's counts landed and the index commit then crashed — counts
     // commit first); REPLAYED ingests use exact membership on the tf
-    // history (already paid for on the index side) — a pre-upgrade
-    // batch, indexed before the count table existed, is absent from tf
-    // even though later txns are present, and the max check would skip
-    // its partials forever (ADVICE r11). Absent membership on replay
-    // BACKFILLS the partials under the same (app, txn), making the
-    // backfill itself idempotent on any further replay.
+    // history (`committedAt`) — a pre-upgrade batch, indexed before the
+    // count table existed, is absent from tf even though later txns are
+    // present, and the max check would skip its partials forever
+    // (ADVICE r11). Absent membership on replay BACKFILLS the partials
+    // under the same (app, txn), making the backfill itself idempotent
+    // on any further replay.
     val tf = tokenFreqTable(indexTable)
     // Self-healing hint drift (ADVICE r12): direct callers with no
     // compaction cadence let the Σ-of-batch-maxes hint drift past the
@@ -1301,25 +1270,13 @@ object IncrementalDedup {
     if (readMaxCntHint(tf).exists(_ > DefaultHotTokenCap)
         && VersionedTable.appendsSinceOverwrite(tf) >= 16)
       compactTokenFreq(spark, indexTable)
-    // materialized lazily: the index-replay path already paid for the
-    // walk; the FRESH path needs it only in the counts-landed-index-
-    // crashed retry window (tfReplayed via txnMaxes while replayed is
-    // false) — calling .get on a None here wedged that designed
-    // recovery path with a NoSuchElementException on every retry
-    lazy val tfHistoryAll = VersionedTable.history(tf)
+    // The fresh path walks tf's history only in the counts-landed-
+    // index-crashed retry window, where the max covers our txn.
+    // Whenever !tfReplayed, tfVer is the latest tf version.
+    val tfPin = VersionedTable.txnPin(tf, txnApp, txn)
     val tfReplayed =
-      if (replayed) txnApp.zip(txn).exists { case (app, t) =>
-        tfHistoryAll.exists(c => c.txnApp.contains(app) && c.txn.contains(t))
-      } else txnApp.zip(txn).exists { case (app, t) =>
-        VersionedTable.txnMaxes(tf).get(app).exists(_ >= t)
-      }
-    val tfLatest = VersionedTable.latestVersion(tf)
-    val tfVer = (if (!tfReplayed) None
-      else txnApp.zip(txn).flatMap { case (app, t) =>
-        tfHistoryAll
-          .find(c => c.txnApp.contains(app) && c.txn.contains(t))
-          .map(_.version - 1)
-      }).getOrElse(tfLatest)
+      if (replayed) tfPin.committedAt.isDefined else tfPin.replayed
+    val tfVer = tfPin.readVersion
 
     // ONE pass over the batch's prefix tokens, shared by hot-token
     // detection and the partials commit (r11 computed it twice). The
@@ -1345,7 +1302,7 @@ object IncrementalDedup {
       if (!tfReplayed) {
         // per-writer hint file ([[bumpOwnHint]]): monotonic across
         // concurrent writers — a racer can only RAISE the global max
-        (if (tfLatest < 0) Some(nRows) else hint.map(_ + nRows))
+        (if (tfVer < 0) Some(nRows) else hint.map(_ + nRows))
           .foreach(bumpOwnHint(tf, _))
         val obs = org.apache.spark.sql.Observation()
         VersionedTable.commit(
@@ -1353,7 +1310,7 @@ object IncrementalDedup {
             .withColumn("batch", lit(batchId)),
           tf, "append", txn, txnApp, expectedVersion = None)
         val mx = obs.getAsJava.get("mx").asInstanceOf[Long]
-        (if (tfLatest < 0) Some(mx) else hint.map(_ + mx))
+        (if (tfVer < 0) Some(mx) else hint.map(_ + mx))
           .foreach(bumpOwnHint(tf, _))
         mx
       } else { // replay: no commit to observe — one tiny agg instead

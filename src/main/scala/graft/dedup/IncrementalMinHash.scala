@@ -220,19 +220,9 @@ object IncrementalMinHash {
     val docs = batch.select(col(idCol).cast("long").as("__id"),
       col(textCol).as("__text"))
 
-    // replay detection + version pinning — the streamingCommitSink rule
-    val replayed = txnApp.zip(txn).exists { case (app, t) =>
-      VersionedTable.txnMaxes(indexTable).get(app).exists(_ >= t)
-    }
-    val replayedAt: Option[Long] =
-      if (!replayed) None
-      else txnApp.zip(txn).flatMap { case (app, t) =>
-        VersionedTable.history(indexTable)
-          .find(c => c.txnApp.contains(app) && c.txn.contains(t))
-          .map(_.version)
-      }
-    val ver = replayedAt.map(_ - 1)
-      .getOrElse(VersionedTable.latestVersion(indexTable))
+    // replay detection + version pinning ([[VersionedTable.txnPin]])
+    val pin = VersionedTable.txnPin(indexTable, txnApp, txn)
+    val ver = pin.readVersion
 
     val bb = bandRows(sigs, k, bands).localCheckpoint()
     val nRows = sigs.count()
@@ -296,7 +286,7 @@ object IncrementalMinHash {
     val dupIdx = crossVerified.map(_.select(col("id_new")).distinct()
       .withColumn("__dup", lit(true)).localCheckpoint())
 
-    if (!replayed)
+    if (!pin.replayed)
       VersionedTable.commit(
         clusterBands(bb.withColumn("batch", lit(batchId)), nRows * bands),
         indexTable, "append", txn, txnApp, expectedVersion = None)
@@ -375,28 +365,6 @@ object IncrementalMinHash {
       .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
         col("jaccard"), col("n_shared_bands"))
   }
-
-  /** Structured Streaming ingest: [[processBatch]] per micro-batch
-    * under `(appId, batchId)` txn identity; statuses land
-    * hive-partitioned by `__batch` with dynamic partition overwrite —
-    * both sides exactly-once, the [[IncrementalDedup.streamingSink]]
-    * recipe.
-    */
-  def streamingSink(docs: DataFrame, textCol: String, idCol: String,
-                    indexTable: String, docStore: DataFrame,
-                    resultsDir: String, appId: String, threshold: Double,
-                    k: Int = 64, bands: Int = 16, n: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        processBatch(s, batch, textCol, idCol, indexTable, docStore,
-            threshold, batchId, k, bands, n,
-            txnApp = Some(appId), txn = Some(batchId))
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite").partitionBy("__batch").parquet(resultsDir)
-    }
 
   /** Compact the index: fold every commit into one bucket-range-
     * clustered overwrite (conflict-checked RMW via

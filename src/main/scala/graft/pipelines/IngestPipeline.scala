@@ -151,7 +151,6 @@ object IngestPipeline {
     appId: String,
     centroids: Seq[Ivf.Centroid],
     threshold: Double = 0.8,
-    shingleN: Int = 3,
     oovGate: Double = 0.5,
     // OOV gate routing (VERDICT r12 finding #2): vocabularies up to
     // this many terms take the broadcast-join path; above it the gate
@@ -185,14 +184,13 @@ object IngestPipeline {
     // DECONTAMINATION gate (opt-in): a persisted benchmark fingerprint
     // index (Decontaminate.buildBenchIndex — built once, eval sets
     // change rarely) probed per batch; the decision record gains
-    // `contam_flagged` (shares >= contamMinOverlap distinct n-grams
-    // with some benchmark doc), `contam_overlap`, and `contam_bench_id`
+    // `contam_flagged` (shares >= 2 distinct n-grams with some
+    // benchmark doc), `contam_overlap`, and `contam_bench_id`
     // (the worst-overlapping benchmark doc, null when clean). Flags,
     // never drops. The index is a STATIC input like `centroids`:
     // rebuild it at a quiesce, or replayed batches report against the
     // rebuilt index.
     benchIndex: Option[String] = None,
-    contamMinOverlap: Int = 2,
     // AUTO-RETRAIN of the IVF index (opt-in, single-writer cadences
     // only — the retrainInPlace contract): at the optimize cadence,
     // when mean rows-per-cell exceeds this target, retrain in place
@@ -298,22 +296,6 @@ object IngestPipeline {
     // text must be fetchable). Required iff dedupBackend is MinHash.
     docStore: Option[String] = None)
 
-  /** The stats-table version this batch's OOV gate must read: the
-    * latest on a fresh ingest, the version just BELOW this txn's
-    * original commit on a replay — same pinning rule as the dedup
-    * index, so replayed gates are pure.
-    */
-  private def pinnedStatsVersion(table: String, appId: String,
-                                 batchId: Long): Long = {
-    val replayed = VersionedTable.txnMaxes(table)
-      .get(appId).exists(_ >= batchId)
-    (if (!replayed) None
-     else VersionedTable.history(table)
-       .find(c => c.txnApp.contains(appId) && c.txn.contains(batchId))
-       .map(_.version - 1))
-      .getOrElse(VersionedTable.latestVersion(table))
-  }
-
   /** OOV-route memo per stats table: routing verdicts are PLAN
     * choices (both paths return identical rows — spec-pinned), so a
     * JVM-local memo is sound. `OovSalted` is permanent — the
@@ -365,23 +347,19 @@ object IngestPipeline {
     * contam_bench_id], __batch` (the sem columns appear when
     * `Config.semanticThreshold` is set; the contam columns when
     * `Config.benchIndex` is).
-    */
-  def processBatch(spark: SparkSession, batch: DataFrame, cfg: Config,
-                   batchId: Long): DataFrame =
-    processBatch(spark, batch, cfg, batchId, onStage = None)
-
-  /** Stage-instrumented face: `onStage` receives `(stage, seconds)` per
-    * pipeline stage. Instrumentation changes EVALUATION, not results:
-    * the lazy gates (oov / sem / contam) are materialized eagerly so
-    * each stage's cost is attributable — sound because every gate reads
-    * a version PINNED below this batch's own commits, so eager vs
-    * write-time evaluation sees byte-identical inputs. This is the
-    * measurement face the stress harness drives; production callers use
-    * the 4-arg form (gates stay lazy, folded into the record write).
+    *
+    * `onStage`, when set, receives `(stage, seconds)` per pipeline
+    * stage. Instrumentation changes EVALUATION, not results: the lazy
+    * gates (oov / sem / contam) are materialized eagerly so each
+    * stage's cost is attributable — sound because every gate reads a
+    * version PINNED below this batch's own commits, so eager vs
+    * write-time evaluation sees byte-identical inputs. The stress
+    * harness drives this face; production callers leave it None (gates
+    * stay lazy, folded into the record write).
     */
   def processBatch(spark: SparkSession, batch: DataFrame, cfg: Config,
                    batchId: Long,
-                   onStage: Option[(String, Double) => Unit]): DataFrame = {
+                   onStage: Option[(String, Double) => Unit] = None): DataFrame = {
     require(cfg.pqCodebook.isEmpty || cfg.autoRetrainCellFill.isEmpty,
       "pqCodebook and autoRetrainCellFill are mutually exclusive: codes " +
         "pair with a codebook era as rows pair with centroids, and the " +
@@ -396,6 +374,9 @@ object IngestPipeline {
         cb(name, (System.nanoTime() - t0) / 1e9)
         r
     }
+    // every commit below carries this batch's transaction identity
+    val txnApp = Some(cfg.appId)
+    val txn = Some(batchId)
     // one deterministic snapshot of the micro-batch: every consumer
     // below (dedup shingling, OOV tokenizing, kept-join, IVF assign)
     // reads THIS materialization, so no re-evaluation can diverge
@@ -417,7 +398,7 @@ object IngestPipeline {
     // it doesn't (r12 finding #2 — the pipeline previously hardwired
     // the broadcast path and a production-sized vocab hit the
     // unsplittable join oovRateSalted exists to fix).
-    val statsVer = pinnedStatsVersion(cfg.statsIndex, cfg.appId, batchId)
+    val statsVer = VersionedTable.txnPin(cfg.statsIndex, txnApp, txn).readVersion
     val oovLazy =
       if (statsVer < 0)
         // empty vocabulary: every token is unseen, by definition
@@ -481,7 +462,7 @@ object IngestPipeline {
     // possibly after the ivf future commits) but version-pinned, so the
     // late evaluation reads exactly the pre-batch snapshot.
     val sem = cfg.semanticThreshold.map { t =>
-      val ivfVer = pinnedStatsVersion(cfg.ivfIndex, cfg.appId, batchId)
+      val ivfVer = VersionedTable.txnPin(cfg.ivfIndex, txnApp, txn).readVersion
       val probeCents =
         if (cfg.autoRetrainCellFill.isEmpty || ivfVer < 0) appendCents
         else IncrementalIvf.centroidsFor(spark, cfg.ivfIndex, ivfVer)
@@ -530,8 +511,8 @@ object IngestPipeline {
     val status = timed("dedup")((cfg.dedupBackend match {
       case DedupBackend.Exact =>
         IncrementalDedup.processBatch(spark, docs, "__text",
-          "__id", cfg.dedupIndex, cfg.threshold, batchId, cfg.shingleN,
-          txnApp = Some(cfg.appId), txn = Some(batchId))
+          "__id", cfg.dedupIndex, cfg.threshold, batchId,
+          txnApp = txnApp, txn = txn)
       case DedupBackend.MinHash(k, bands) =>
         val storeTbl = cfg.docStore.getOrElse(throw new IllegalArgumentException(
           "the MinHash dedup backend requires cfg.docStore — candidate " +
@@ -543,15 +524,12 @@ object IngestPipeline {
         // replays the batch: the store skips its append, the band
         // commit redoes. Files are id-sorted and data-sized so the
         // verify stage's In(id) pushdown prunes at row-group level.
-        val storeReplayed = VersionedTable.txnMaxes(storeTbl)
-          .get(cfg.appId).exists(_ >= batchId)
-        if (!storeReplayed) {
+        if (!VersionedTable.txnPin(storeTbl, txnApp, txn).replayed) {
           VersionedTable.commit(
             docs.select(col("__id").as("id"), col("__text").as("text"))
               .coalesce(math.max(1L, nDocs / 200000L).toInt)
               .sortWithinPartitions(col("id")),
-            storeTbl, "append", Some(batchId), Some(cfg.appId),
-            expectedVersion = None)
+            storeTbl, "append", txn, txnApp)
         }
         // unpinned read is sound: the store is append-only immutable-
         // by-id, and candidate ids come from the INDEX snapshot pinned
@@ -560,7 +538,7 @@ object IngestPipeline {
           .select(col("id").as("__id"), col("text").as("__text"))
         IncrementalMinHash.processBatch(spark, docs, "__text", "__id",
           cfg.dedupIndex, store, cfg.threshold, batchId, k, bands,
-          cfg.shingleN, txnApp = Some(cfg.appId), txn = Some(batchId))
+          txnApp = txnApp, txn = txn)
     }).select(col("id"), col("status")).localCheckpoint())
 
     // the kept subset feeds the corpus-statistics and vector indexes:
@@ -587,14 +565,14 @@ object IngestPipeline {
     timed("stats_ivf") {
       val statsF = Future(IncrementalStats.addBatch(spark, kept, "__text",
         "__id", cfg.statsIndex, batchId,
-        txnApp = Some(cfg.appId), txn = Some(batchId)))
+        txnApp = txnApp, txn = txn))
       val ivfF = Future(IncrementalIvf.addBatch(spark, kept, "__emb", "__id",
         appendCents, cfg.ivfIndex, batchId,
-        txnApp = Some(cfg.appId), txn = Some(batchId),
+        txnApp = txnApp, txn = txn,
         codebook = cfg.pqCodebook))
       // BOTH futures must settle before this batch can fail: a detached
       // survivor racing a checkpoint replay could land its commit AFTER
-      // the replay's txnMaxes check and double-append the same
+      // the replay's txnPin check and double-append the same
       // (appId, batchId). Await.ready (not result) on each, THEN rethrow
       // the first failure — no zombie outlives the batch attempt.
       Await.ready(statsF, Duration.Inf)
@@ -607,7 +585,7 @@ object IngestPipeline {
     // other stage — computed over the SAME checkpointed docs snapshot
     val contam = cfg.benchIndex.map { t =>
       val probe = graft.dedup.Decontaminate.probeBenchIndex(spark, docs,
-        "__text", "__id", t, cfg.contamMinOverlap, keepClean = false)
+        "__text", "__id", t, keepClean = false)
       if (onStage.isEmpty) probe
       else timed("contam")(probe.localCheckpoint())
     }

@@ -38,8 +38,8 @@ import graft.sources.VersionedTable
 object IncrementalIvf {
 
   /** Assign `batch` against the pinned centroids and append it to the
-    * index atomically. `(txnApp, txn)` makes re-ingest idempotent (the
-    * streamingCommitSink rule): a replayed batch appends nothing.
+    * index atomically. `(txnApp, txn)` makes re-ingest idempotent
+    * ([[VersionedTable.txnPin]]): a replayed batch appends nothing.
     *
     * With `codebook` the rows also carry the PQ codes
     * (`codes: array<int>`, [[Pq.encodeCol]] against the pinned
@@ -58,10 +58,7 @@ object IncrementalIvf {
                batchId: Long, txnApp: Option[String] = None,
                txn: Option[Long] = None,
                codebook: Option[Pq.Codebook] = None): Unit = {
-    val replayed = txnApp.zip(txn).exists { case (app, t) =>
-      VersionedTable.txnMaxes(table).get(app).exists(_ >= t)
-    }
-    if (!replayed) {
+    if (!VersionedTable.txnPin(table, txnApp, txn).replayed) {
       codebook.foreach(pinCodebook(spark, _, codebookTable(table)))
       val base = batch
         .select(col(idCol).cast("long").as("id"),

@@ -225,13 +225,19 @@ object VersionedTable {
     case None => history(table).lastOption.map(_.version).getOrElse(-1L)
   }
 
-  /** Per-app highest committed txn — the streaming replay guard's
-    * lookup. Checkpointed map merged with a fold over the probe tail
-    * when a checkpoint exists (O(tail)); full-log fold otherwise.
+  /** Per-app highest committed txn — [[txnPin]]'s replay lookup.
+    * Checkpointed map merged with a fold over the probe tail when a
+    * checkpoint exists (O(tail)); full-log fold otherwise.
     * Checkpoint maps carry forward transitively, so txns survive
     * vacuum exactly like Delta's SetTransaction records do.
     */
-  private[graft] def txnMaxes(table: String): Map[String, Long] = {
+  private[graft] def txnMaxes(table: String): Map[String, Long] =
+    txnState(table)._1
+
+  /** [[txnMaxes]] and the latest version (-1 when empty) from ONE read
+    * of the checkpoint and its probe tail.
+    */
+  private def txnState(table: String): (Map[String, Long], Long) = {
     def fold(cs: Seq[Commit], base: Map[String, Long]): Map[String, Long] =
       cs.foldLeft(base) {
         case (m, Commit(_, _, _, Some(t), Some(app))) =>
@@ -240,8 +246,40 @@ object VersionedTable {
       }
     lastCheckpointVersion(table).flatMap(cp =>
       readCheckpoint(table, cp).map { case (_, txns) =>
-        fold(probeAbove(table, cp), txns)
-      }).getOrElse(fold(history(table), Map.empty))
+        val tail = probeAbove(table, cp)
+        (fold(tail, txns), tail.lastOption.fold(cp)(_.version))
+      }).getOrElse {
+        val all = history(table)
+        (fold(all, Map.empty), all.lastOption.fold(-1L)(_.version))
+      }
+  }
+
+  /** Where a `(txnApp, txn)`-tagged writer stands on `table`.
+    * `replayed`: this app's highest committed txn covers `txn` — batch
+    * ids are monotonic per app, so the append already happened (Delta's
+    * rule; an O(checkpoint-tail) lookup). `committedAt`: the version of
+    * the exact `(txnApp, txn)` entry — a full history walk, run only
+    * when `replayed`; None for a txn the max covers but the log lacks
+    * (committed before this table tracked it, or vacuumed away).
+    * `readVersion`: the snapshot the writer's reads pin — just BELOW the
+    * original commit on a replay, so a replayed batch sees what its
+    * first attempt saw; otherwise the latest (-1 = empty).
+    */
+  final case class TxnPin(replayed: Boolean, committedAt: Option[Long],
+                          readVersion: Long)
+
+  private[graft] def txnPin(table: String, txnApp: Option[String],
+                            txn: Option[Long]): TxnPin = {
+    val (maxes, latest) = txnState(table)
+    val id = txnApp.zip(txn)
+    val replayed = id.exists { case (app, t) => maxes.get(app).exists(_ >= t) }
+    val committedAt =
+      if (!replayed) None
+      else id.flatMap { case (app, t) =>
+        history(table).find(c => c.txnApp.contains(app) && c.txn.contains(t))
+          .map(_.version)
+      }
+    TxnPin(replayed, committedAt, committedAt.fold(latest)(_ - 1))
   }
 
   /** Snapshot the replay closure at `v` into `<v>.checkpoint` and point
@@ -298,22 +336,13 @@ object VersionedTable {
     * a version race retry at the next number with the SAME staged data,
     * so every commit lands exactly once — safe because an append's (or
     * caller-computed overwrite's) content does not depend on the
-    * version it lands at. Read-modify-write callers must pass
-    * `expectedVersion` via the 5-arg overload instead.
-    */
-  def commit(df: DataFrame, table: String, mode: String): Long =
-    commit(df, table, mode, txn = None)
-
-  def commit(df: DataFrame, table: String, mode: String,
-             txn: Option[Long]): Long =
-    commit(df, table, mode, txn, txnApp = None, expectedVersion = None)
-
-  /** [[commit]] carrying a transaction identity — the Delta
-    * `(txnAppId, txnVersion)` idempotency device: a committer that may
-    * replay (a restarted streaming batch) tags its commit with its app
-    * identity and batch number, and [[streamingCommitSink]] skips any
-    * batch whose PAIR already appears in the log — two queries writing
-    * the same table do not collide on bare batch ids.
+    * version it lands at.
+    *
+    * `(txnApp, txn)`: the Delta `(txnAppId, txnVersion)` idempotency
+    * device — a committer that may replay (a restarted streaming batch)
+    * tags its commit with its app identity and batch number, and checks
+    * [[txnPin]] before committing, so a replayed PAIR is skipped — two
+    * queries writing the same table do not collide on bare batch ids.
     *
     * `expectedVersion`: Delta's conflict check for read-modify-write.
     * When set, the commit lands at exactly `expectedVersion + 1` or
@@ -321,8 +350,9 @@ object VersionedTable {
     * up) — the caller re-reads and recomputes. When None, losers retry
     * blindly at the next version (append semantics).
     */
-  def commit(df: DataFrame, table: String, mode: String, txn: Option[Long],
-             txnApp: Option[String], expectedVersion: Option[Long]): Long = {
+  def commit(df: DataFrame, table: String, mode: String,
+             txn: Option[Long] = None, txnApp: Option[String] = None,
+             expectedVersion: Option[Long] = None): Long = {
     require(mode == "overwrite" || mode == "append",
       s"mode must be overwrite|append, got $mode")
     // schema-on-write (Delta's append contract): an append whose
@@ -529,11 +559,7 @@ object VersionedTable {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // Delta's rule: batch ids are monotonic per app, so "this app's
-        // highest committed txn >= batchId" IS the replay test — an
-        // O(tail) checkpoint-map lookup, never a full log scan per batch
-        val replayed = txnMaxes(table).get(appId).exists(_ >= batchId)
-        if (!replayed) {
+        if (!txnPin(table, Some(appId), Some(batchId)).replayed) {
           commit(batch, table, mode, txn = Some(batchId),
             txnApp = Some(appId), expectedVersion = None)
           ()

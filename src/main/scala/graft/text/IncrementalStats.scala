@@ -52,17 +52,14 @@ object IncrementalStats {
   }
 
   /** Aggregate one batch and append its partials atomically.
-    * `(txnApp, txn)` makes re-ingest idempotent (the
-    * streamingCommitSink rule): a replayed batch appends nothing.
+    * `(txnApp, txn)` makes re-ingest idempotent
+    * ([[VersionedTable.txnPin]]): a replayed batch appends nothing.
     */
   def addBatch(spark: SparkSession, batch: DataFrame, textCol: String,
                idCol: String, table: String, batchId: Long,
                txnApp: Option[String] = None,
                txn: Option[Long] = None): Unit = {
-    val replayed = txnApp.zip(txn).exists { case (app, t) =>
-      VersionedTable.txnMaxes(table).get(app).exists(_ >= t)
-    }
-    if (!replayed)
+    if (!VersionedTable.txnPin(table, txnApp, txn).replayed)
       VersionedTable.commit(
         batchPartials(batch, textCol, idCol).withColumn("batch", lit(batchId)),
         table, "append", txn, txnApp, expectedVersion = None)

@@ -554,6 +554,45 @@ class SourcesSpec extends AnyFunSuite {
     assert(VersionedTable.txnMaxes(t) == Map("s" -> 12L))
   }
 
+  test("VersionedTable.txnPin: replay flag, original commit and pinned read version for each writer state") {
+    import graft.sources.VersionedTable
+    import VersionedTable.TxnPin
+    // log entries only: txnPin reads metadata, never data
+    def table(entries: (String, Option[(String, Long)])*): String = {
+      val t = Files.createTempDirectory("graft-txnpin").toString + "/tbl"
+      entries.foreach { case (mode, id) =>
+        VersionedTable.claimSlot(t, mode, s"data/${java.util.UUID.randomUUID()}",
+          id.map(_._2), id.map(_._1), None)
+      }
+      t
+    }
+    val base = None
+    def a(t: Long) = Some(("a", t))
+    val vacuumed = {
+      val t = table(("overwrite", base), ("append", a(1)),
+        ("overwrite", base), ("append", a(2)))
+      VersionedTable.vacuum(t, keepAfter = 2L, orphanGraceMs = 0L)
+      assert(VersionedTable.history(t).map(_.version) == Seq(2L, 3L)) // (a, 1) gone
+      t
+    }
+    val cases = Seq(
+      // (case, table, txnApp, txn, expected pin)
+      ("untagged", table(("overwrite", base), ("append", a(1))),
+        None, None, TxnPin(replayed = false, None, 1L)),
+      ("fresh (a, 2)", table(("overwrite", base), ("append", a(1))),
+        Some("a"), Some(2L), TxnPin(replayed = false, None, 1L)),
+      ("replayed (a, 1)", table(("overwrite", base), ("append", a(1)), ("append", a(2))),
+        Some("a"), Some(1L), TxnPin(replayed = true, Some(1L), 0L)),
+      ("pre-upgrade (a, 3): covered by the max, absent from the log",
+        table(("overwrite", base), ("append", a(5))),
+        Some("a"), Some(3L), TxnPin(replayed = true, None, 1L)),
+      ("replayed (a, 1) after vacuum dropped its entry", vacuumed,
+        Some("a"), Some(1L), TxnPin(replayed = true, None, 3L)))
+    cases.foreach { case (name, t, app, txn, want) =>
+      assert(VersionedTable.txnPin(t, app, txn) == want, name)
+    }
+  }
+
   test("VersionedTable: cross-JVM writers race the log — every commit lands exactly once") {
     import graft.sources.VersionedTable
     val t = Files.createTempDirectory("graft-vt").toString + "/tbl"
