@@ -111,21 +111,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples partition count from core
-    // count for scaling experiments (a cluster scales partitions with
-    // data; local[32] with 32 partitions saturates at ~30x sf0.1 — see
-    // BENCH_DEDUP_STRESS_r09 curve_note). Driver contract never sets it.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark) // SQL fns + library optimizer rules
 
     // Time production plans: precondition certificates (recall margin,
     // probe coverage) belong to correctness runs, where the oracle makes
@@ -257,8 +244,9 @@ object Bench {
     // competing for cores — and the gate diffs the adjudicated value.
     // A real plan regression stays >2x in the cold JVM too; machine
     // noise almost never survives a min-of-3 in a fresh process minutes
-    // later. BENCH_FULL keeps the RAW one-shot numbers (the driver's
-    // measurement); only the gate adjudicates.
+    // later. BENCH_FULL records `results` — per query the min of the
+    // one-shot, inline-retry and cooldown runs; only this cold-JVM
+    // rerun stays out of it and feeds the gate alone.
     try if (recMedians.nonEmpty) {
       val flagged = results.filter { case (k, v) => over(k, v) }
       val adjudicated: Map[String, Double] =

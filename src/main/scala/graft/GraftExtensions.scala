@@ -50,6 +50,24 @@ object GraftExtensions {
     "word_shingles"   -> (exprs => WordShingles(exprs(0),
       exprs(1).eval().asInstanceOf[Int]))) // n must be a literal
 
+  /** The session every main runs queries in (Verify, Bench, Explain,
+    * Plans): `local[cores]` with as many shuffle partitions, UTC, no
+    * UI, nanosecond parquet timestamps readable as longs, and the graft
+    * functions and rules registered.
+    */
+  def localSession(cores: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    register(spark)
+    spark
+  }
+
   def register(spark: SparkSession): Unit = {
     All.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(

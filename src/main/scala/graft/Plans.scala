@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md: the formatted physical plans of the headline
@@ -172,15 +171,8 @@ object Plans {
       "The CODED near-dup probe (r14): the coarse leg reads (id, cell_id, codes) ONLY — ReadSchema has no vec column, the floats that ARE the scan cost at 100 TB stay unread — with In(cell_id) pushed and the probe side broadcast; each probe's m-by-k ADC lookup table is one scan-side expression, the per-pair distance an m-lookup fold; the exact re-rank reads floats for the ADC-surviving candidate ids only (In(id) pushed), then the float path's threshold + top-1 window finish identically.")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark) // SQL fns + library optimizer rules
     val sf = "/root/testdata/sf0.001"
 
     val sections = Annotated.map { case (name, note) =>

@@ -644,6 +644,15 @@ object Dedup {
     val fuzzy = minhashCandidates(df, textCol, idCol)
       .filter(col("est_jaccard") >= minEstJaccard)
       .select(col("id_a"), col("id_b"))
+    withExactPairs(df, textCol, idCol, fuzzy)
+  }
+
+  /** The tail shared by the corpus dedups: `near` pairs (`id_a`,
+    * `id_b`) union the md5 exact-duplicate pairs, clustered into
+    * components with the minimum-id doc kept.
+    */
+  private def withExactPairs(df: DataFrame, textCol: String, idCol: String,
+                             near: DataFrame): DataFrame = {
     val exact = exactByContent(df, textCol, idCol)
       .filter(col("n_copies") > 1)
     // exact dups may hash-group docs whose shingle sets LSH would also
@@ -653,7 +662,7 @@ object Dedup {
       .join(exact, "text_hash")
       .filter(col("other_id") > col("keep_id"))
       .select(col("keep_id").as("id_a"), col("other_id").as("id_b"))
-    val comp = clusters(df.select(col(idCol)), fuzzy.unionAll(exactPairs),
+    val comp = clusters(df.select(col(idCol)), near.unionAll(exactPairs),
       idCol, "id_a", "id_b")
     comp.withColumn("keep", col("id") === col("cluster"))
   }
@@ -674,15 +683,7 @@ object Dedup {
     val verified = jaccardOnPairs(df, textCol, idCol, candidates, "id_a", "id_b", n)
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"))
-    val exact = exactByContent(df, textCol, idCol).filter(col("n_copies") > 1)
-    val exactPairs = df.select(md5(col(textCol)).as("text_hash"),
-        col(idCol).cast("long").as("other_id"))
-      .join(exact, "text_hash")
-      .filter(col("other_id") > col("keep_id"))
-      .select(col("keep_id").as("id_a"), col("other_id").as("id_b"))
-    val comp = clusters(df.select(col(idCol)), verified.unionAll(exactPairs),
-      idCol, "id_a", "id_b")
-    comp.withColumn("keep", col("id") === col("cluster"))
+    withExactPairs(df, textCol, idCol, verified)
   }
 
   /** Canonical selection by QUALITY: given near-dup components
@@ -717,7 +718,23 @@ object Dedup {
     */
   def jaccardOnPairs(df: DataFrame, textCol: String, idCol: String,
                      pairs: DataFrame, aCol: String, bCol: String, n: Int,
-                     carry: Seq[String] = Nil): DataFrame = {
+                     carry: Seq[String] = Nil): DataFrame =
+    shinglePairs(df, textCol, idCol, pairs, aCol, bCol, n, carry)(inter =>
+      Seq(jaccardOf(inter).as("jaccard")))
+
+  private def jaccardOf(inter: Column): Column =
+    inter.cast("double") / (size(col("__sh_a")) + size(col("__sh_b")) - inter)
+
+  /** The two shingle joins behind [[jaccardOnPairs]] and
+    * [[containmentOnPairs]]: each candidate pair (ids cast to long, the
+    * `carry` columns kept) gets both sides' distinct lowered n-gram
+    * arrays `__sh_a`/`__sh_b`, and `scores` maps their intersection size
+    * to the output columns placed between the ids and `carry`.
+    */
+  private def shinglePairs(df: DataFrame, textCol: String, idCol: String,
+                           pairs: DataFrame, aCol: String, bCol: String,
+                           n: Int, carry: Seq[String])
+                          (scores: Column => Seq[Column]): DataFrame = {
     val sh = df.select(col(idCol).cast("long").as("__id"),
       shingles(lower(col(textCol)), n).as("__sh"))
     val inter = size(array_intersect(col("__sh_a"), col("__sh_b")))
@@ -725,10 +742,7 @@ object Dedup {
           +: carry.map(col): _*)
       .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
       .join(sh.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .select(col("id_a") +: col("id_b") +:
-        (inter.cast("double") /
-          (size(col("__sh_a")) + size(col("__sh_b")) - inter)).as("jaccard") +:
-        carry.map(col): _*)
+      .select(Seq(col("id_a"), col("id_b")) ++ scores(inter) ++ carry.map(col): _*)
   }
 
   /** Shingle-set CONTAINMENT for explicit candidate pairs — the
@@ -744,21 +758,11 @@ object Dedup {
     */
   def containmentOnPairs(df: DataFrame, textCol: String, idCol: String,
                          pairs: DataFrame, aCol: String, bCol: String, n: Int,
-                         carry: Seq[String] = Nil): DataFrame = {
-    val sh = df.select(col(idCol).cast("long").as("__id"),
-      shingles(lower(col(textCol)), n).as("__sh"))
-    val inter = size(array_intersect(col("__sh_a"), col("__sh_b")))
-    pairs.select(col(aCol).cast("long").as("id_a") +: col(bCol).cast("long").as("id_b")
-          +: carry.map(col): _*)
-      .join(sh.select(col("__id").as("id_a"), col("__sh").as("__sh_a")), Seq("id_a"))
-      .join(sh.select(col("__id").as("id_b"), col("__sh").as("__sh_b")), Seq("id_b"))
-      .select(col("id_a") +: col("id_b") +:
-        (inter.cast("double") / size(col("__sh_a"))).as("containment_a") +:
-        (inter.cast("double") / size(col("__sh_b"))).as("containment_b") +:
-        (inter.cast("double") /
-          (size(col("__sh_a")) + size(col("__sh_b")) - inter)).as("jaccard") +:
-        carry.map(col): _*)
-  }
+                         carry: Seq[String] = Nil): DataFrame =
+    shinglePairs(df, textCol, idCol, pairs, aCol, bCol, n, carry)(inter => Seq(
+      (inter.cast("double") / size(col("__sh_a"))).as("containment_a"),
+      (inter.cast("double") / size(col("__sh_b"))).as("containment_b"),
+      jaccardOf(inter).as("jaccard")))
 
   /** Exact n-gram Jaccard similarity for pairs inside coarse buckets
     * (e.g. same lang+source). Shingle-explode + self-join on shingle

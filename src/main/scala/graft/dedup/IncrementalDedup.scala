@@ -716,8 +716,7 @@ object IncrementalDedup {
   def tokenCounts(spark: SparkSession, indexTable: String,
                   version: Option[Long] = None): DataFrame = {
     val tf = tokenFreqTable(indexTable)
-    version.map(v => VersionedTable.readVersion(spark, tf, v))
-      .getOrElse(VersionedTable.read(spark, tf))
+    VersionedTable.read(spark, tf, version)
       .groupBy(col("g")).agg(sum(col("cnt")).as("cnt"))
   }
 

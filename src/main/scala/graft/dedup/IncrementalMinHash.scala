@@ -237,47 +237,11 @@ object IncrementalMinHash {
     // ---- vs-index pairs: band equi-join + exact verify --------------
     val crossVerified: Option[DataFrame] =
       if (ver < 0) { lastIndexBands = None; None }
-      else Some {
-        // trickle-regime bucket prune (the postings-probe gate): a
-        // small batch collects its ≤ nRows×bands bucket hashes (bounded
-        // by the pushdown conversion limit) and pushes them to the
-        // index scan; a bulk batch's vocabulary covers the bucket space
-        // anyway, so it reads the slim band rows whole.
-        val idx0 = VersionedTable.readVersion(spark, indexTable, ver)
-        val idx =
-          if (nRows * bands > IncrementalDedup.MaxPayloadIdCollect) idx0
-          else {
-            val bs = bb.select(col("bucket")).distinct()
-              .collect().map(_.getLong(0)).toSeq
-            if (bs.isEmpty) idx0.filter(lit(false))
-            else idx0.filter(col("bucket").isin(bs: _*))
-          }
+      else {
+        val (idx, verified) = probeIndex(spark, indexTable, ver, bb, nRows,
+          bands, docs, docStore, textCol, idCol, threshold, n)
         lastIndexBands = Some(idx)
-        val cand = bb.join(
-            idx.select(col("band"), col("bucket"), col("id").as("id_old")),
-            Seq("band", "bucket"))
-          .groupBy(col("id").as("id_new"), col("id_old"))
-          .agg(count(lit(1)).as("n_shared_bands"))
-          .localCheckpoint()
-        // exact verify: fetch ONLY the candidate index docs' text from
-        // the doc store (bounded In-pushdown; id equi-join past the
-        // bound), union the batch docs, one jaccardOnPairs pass
-        val candIds = cand.select(col("id_old")).distinct()
-          .limit(IncrementalDedup.MaxPayloadIdCollect + 1).collect()
-          .map(_.getLong(0))
-        val store = docStore.select(col(idCol).cast("long").as("__id"),
-          col(textCol).as("__text"))
-        val fetched =
-          if (candIds.isEmpty) store.filter(lit(false))
-          else if (candIds.length <= IncrementalDedup.MaxPayloadIdCollect)
-            store.filter(col("__id").isin(candIds.toSeq: _*))
-          else store.join(cand.select(col("id_old").as("__id")).distinct(),
-            Seq("__id"), "leftsemi")
-        Dedup.jaccardOnPairs(docs.unionByName(fetched), "__text", "__id",
-            cand, "id_new", "id_old", n, carry = Seq("n_shared_bands"))
-          .filter(col("jaccard") >= threshold)
-          .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
-            col("jaccard"), col("n_shared_bands"))
+        Some(verified)
       }
 
     val withinCk = withinEdges.localCheckpoint()
@@ -332,7 +296,28 @@ object IncrementalMinHash {
     val docs = probe.select(col(idCol).cast("long").as("__id"),
       col(textCol).as("__text"))
     val bb = bandRows(sigs, k, bands).localCheckpoint()
-    val nRows = sigs.count()
+    probeIndex(spark, indexTable, ver, bb, sigs.count(), bands, docs,
+      docStore, textCol, idCol, threshold, n)._2
+  }
+
+  /** The index side of a probe, shared by [[processBatch]] and
+    * [[lookupPairs]]: the batch's band rows `bb` (of `nRows` docs)
+    * against the index pinned at `ver`, exact-verified through the doc
+    * store. Returns the index band scan it read (bucket-pruned for a
+    * trickle batch) and the verified pairs `id_new, id_old, jaccard,
+    * n_shared_bands` with exact Jaccard ≥ `threshold`. `docs` carries
+    * the probe's own `__id, __text`.
+    */
+  private def probeIndex(spark: SparkSession, indexTable: String, ver: Long,
+                         bb: DataFrame, nRows: Long, bands: Int,
+                         docs: DataFrame, docStore: DataFrame, textCol: String,
+                         idCol: String, threshold: Double,
+                         n: Int): (DataFrame, DataFrame) = {
+    // trickle-regime bucket prune (the postings-probe gate): a small
+    // batch collects its ≤ nRows×bands bucket hashes (bounded by the
+    // pushdown conversion limit) and pushes them to the index scan; a
+    // bulk batch's vocabulary covers the bucket space anyway, so it
+    // reads the slim band rows whole.
     val idx0 = VersionedTable.readVersion(spark, indexTable, ver)
     val idx =
       if (nRows * bands > IncrementalDedup.MaxPayloadIdCollect) idx0
@@ -348,6 +333,9 @@ object IncrementalMinHash {
       .groupBy(col("id").as("id_new"), col("id_old"))
       .agg(count(lit(1)).as("n_shared_bands"))
       .localCheckpoint()
+    // exact verify: fetch ONLY the candidate index docs' text from the
+    // doc store (bounded In-pushdown; id equi-join past the bound),
+    // union the probe docs, one jaccardOnPairs pass
     val candIds = cand.select(col("id_old")).distinct()
       .limit(IncrementalDedup.MaxPayloadIdCollect + 1).collect()
       .map(_.getLong(0))
@@ -359,11 +347,12 @@ object IncrementalMinHash {
         store.filter(col("__id").isin(candIds.toSeq: _*))
       else store.join(cand.select(col("id_old").as("__id")).distinct(),
         Seq("__id"), "leftsemi")
-    Dedup.jaccardOnPairs(docs.unionByName(fetched), "__text", "__id",
-        cand, "id_new", "id_old", n, carry = Seq("n_shared_bands"))
+    val verified = Dedup.jaccardOnPairs(docs.unionByName(fetched), "__text",
+        "__id", cand, "id_new", "id_old", n, carry = Seq("n_shared_bands"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a").as("id_new"), col("id_b").as("id_old"),
         col("jaccard"), col("n_shared_bands"))
+    (idx, verified)
   }
 
   /** Compact the index: fold every commit into one bucket-range-

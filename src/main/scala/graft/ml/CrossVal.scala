@@ -45,15 +45,7 @@ object CrossVal {
         .select(fold.as("fold"), d2(x1Col).as("__x1"), d2(x2Col).as("__x2"),
           d2(yCol).as("__y")))
       .localCheckpoint() // the sums aggregate and the scoring join share it
-    val sums = Seq(
-      count(lit(1)).as("n"),
-      sum(col("__x1")).as("s1"), sum(col("__x2")).as("s2"),
-      sum(col("__x1") * col("__x1")).as("s11"),
-      sum(col("__x2") * col("__x2")).as("s22"),
-      sum(col("__x1") * col("__x2")).as("s12"),
-      sum(col("__y")).as("sy"),
-      sum(col("__x1") * col("__y")).as("s1y"),
-      sum(col("__x2") * col("__y")).as("s2y"))
+    val sums = Ols.sums("")
     val perFold = base.groupBy(col("fold")).agg(sums.head, sums.tail: _*)
     val names = Seq("n", "s1", "s2", "s11", "s22", "s12", "sy", "s1y", "s2y")
     val tot = perFold.agg(names.map(c => sum(col(c)).as(s"t_$c")).head,
@@ -62,26 +54,10 @@ object CrossVal {
     val train = perFold.crossJoin(broadcast(tot))
       .select(col("fold") +: col("n").as("n_test") +:
         names.map(c => (col(s"t_$c") - col(c)).as(s"tr_$c")): _*)
-    def dd(c: String) = col(s"tr_$c").cast("double")
-    val nD = col("tr_n").cast("double")
-    def det3(a11: Column, a12: Column, a13: Column,
-             a21: Column, a22: Column, a23: Column,
-             a31: Column, a32: Column, a33: Column): Column =
-      a11 * (a22 * a33 - a23 * a32) - a12 * (a21 * a33 - a23 * a31) +
-        a13 * (a21 * a32 - a22 * a31)
-    val det = det3(nD, dd("s1"), dd("s2"),
-      dd("s1"), dd("s11"), dd("s12"), dd("s2"), dd("s12"), dd("s22"))
-    val det0 = det3(dd("sy"), dd("s1"), dd("s2"),
-      dd("s1y"), dd("s11"), dd("s12"), dd("s2y"), dd("s12"), dd("s22"))
-    val det1 = det3(nD, dd("sy"), dd("s2"),
-      dd("s1"), dd("s1y"), dd("s12"), dd("s2"), dd("s2y"), dd("s22"))
-    val det2 = det3(nD, dd("s1"), dd("sy"),
-      dd("s1"), dd("s11"), dd("s1y"), dd("s2"), dd("s12"), dd("s2y"))
-    def b(dc: Column) = when(det === 0.0, lit(null).cast("double"))
-      .otherwise(round(dc / det + lit(1e-12), 6))
+    val (det, b0, b1, b2) = Ols.cramer(c => col(s"tr_$c").cast("double"))
     val models = train.select(col("fold"), col("n_test"),
-      col("tr_n").as("n_train"), b(det0).as("b0"), b(det1).as("b1"),
-      b(det2).as("b2"))
+      col("tr_n").as("n_train"), Ols.coef(det, b0).as("b0"),
+      Ols.coef(det, b1).as("b1"), Ols.coef(det, b2).as("b2"))
     // exact-decimal residuals from the 6-dp coefficients. Each b·x
     // product is cast down to DECIMAL(18,8) BEFORE the subtraction
     // chain: the naive three-term sum pushes Spark's add-precision

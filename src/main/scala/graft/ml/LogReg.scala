@@ -57,9 +57,22 @@ object LogReg {
               positive: Int, dim: Int, iters: Int, lr: Double): Array[Long] = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val base = df.select(xlCol(embCol).as("xl"),
-        when(col(labelCol) === positive, lit(Scale)).otherwise(lit(0L)).as("yl"))
-      .localCheckpoint()
+    fixedPointGd(df.select(xlCol(embCol).as("xl"),
+        when(col(labelCol) === positive, lit(Scale)).otherwise(lit(0L)).as("yl")),
+      dim + 1, iters, lr)(z => round(lit(1000000.0) / (lit(1.0) + exp(-z))).cast("long"))
+  }
+
+  /** The fixed-point gradient-descent loop shared by the GLMs here and
+    * in [[Poisson]]: `xy` holds the quantized features `xl` (bias
+    * first) and the 1e-6-scaled target `yl`; `link` maps the double
+    * margin z to the prediction snapped to the 1e-6 long grid (the
+    * model's ONLY float step). Checkpoints `xy`, checks the
+    * exact-integer margin headroom, then runs `iters` updates of
+    * w −= lr·Σ(pred − y)·x / n, each re-snapped HALF_UP.
+    */
+  private[ml] def fixedPointGd(xy: DataFrame, dims: Int, iters: Int, lr: Double)
+                              (link: Column => Column): Array[Long] = {
+    val base = xy.localCheckpoint()
     val stats = base.agg(count(lit(1)), max(aggregate(
       transform(col("xl"), x => abs(x)), lit(0L), (a, x) => greatest(a, x)))).head()
     val n = stats.getLong(0)
@@ -67,7 +80,7 @@ object LogReg {
     require(stats.getLong(1) <= 100000000L,
       "trainFp: a quantized feature exceeds 1e8 — the exact-integer " +
         "margin headroom assumes O(1)-magnitude features; normalize first")
-    val w = Array.fill(dim + 1)(0L)
+    val w = Array.fill(dims)(0L)
     var t = 0
     while (t < iters) {
       val wLit = typedLit(w.toSeq)
@@ -75,16 +88,15 @@ object LogReg {
       // interpreted aggregate(zip_with) fold this replaces boxed every
       // element per row per iteration; values/NULLs identical
       val zfp = graft.functions.LongDot.longDot(col("xl"), wLit)
-      val z = zfp.cast("double") / lit(1.0e12)
-      val pl = round(lit(1000000.0) / (lit(1.0) + exp(-z))).cast("long")
+      val pl = link(zfp.cast("double") / lit(1.0e12))
       // single-pass gradient ([[graft.functions.GradAgg]]): the explode
-      // form it replaces materialized (dim+1) aggregation rows per input
-      // row and shuffled (dim+1) groups per partition; this folds rl·x
+      // form it replaces materialized (dims) aggregation rows per input
+      // row and shuffled (dims) groups per partition; this folds rl·x
       // into one exact 128-bit accumulator blob per partition. Values
       // identical: exact integer sums are order-free, and eval converts
       // to the same DECIMAL(38,0).
       val g = base.select((pl - col("yl")).as("rl"), col("xl"))
-        .agg(graft.functions.GradAgg.gradAgg(col("rl"), col("xl"), dim + 1))
+        .agg(graft.functions.GradAgg.gradAgg(col("rl"), col("xl"), dims))
         .head().getSeq[org.apache.spark.sql.Row](0)
       g.foreach { r =>
         val j = r.getInt(0)

@@ -20,67 +20,87 @@ import org.apache.spark.sql.functions._
   */
 object Ols {
 
-  private[ml] def det3(a11: Column, a12: Column, a13: Column,
-                       a21: Column, a22: Column, a23: Column,
-                       a31: Column, a32: Column, a33: Column): Column =
+  private def det3(a11: Column, a12: Column, a13: Column,
+                   a21: Column, a22: Column, a23: Column,
+                   a31: Column, a32: Column, a33: Column): Column =
     a11 * (a22 * a33 - a23 * a32) - a12 * (a21 * a33 - a23 * a31) +
       a13 * (a21 * a32 - a22 * a31)
+
+  /** The nine sufficient statistics of a two-regressor fit over
+    * `__x1`, `__x2`, `__y`: `n` plus the sums named `<prefix>s1`,
+    * `s2`, `s11`, `s22`, `s12`, `sy`, `s1y`, `s2y`.
+    */
+  private[ml] def sums(prefix: String): Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    sum(col("__x1")).as(s"${prefix}s1"), sum(col("__x2")).as(s"${prefix}s2"),
+    sum(col("__x1") * col("__x1")).as(s"${prefix}s11"),
+    sum(col("__x2") * col("__x2")).as(s"${prefix}s22"),
+    sum(col("__x1") * col("__x2")).as(s"${prefix}s12"),
+    sum(col("__y")).as(s"${prefix}sy"),
+    sum(col("__x1") * col("__y")).as(s"${prefix}s1y"),
+    sum(col("__x2") * col("__y")).as(s"${prefix}s2y"))
+
+  /** Cramer solve of the 3×3 normal equations A·b = rhs with
+    * A = [[n, s1, s2], [s1, s11, s12], [s2, s12, s22]] and
+    * rhs = (sy, s1y, s2y); `stat` reads one statistic by its bare name
+    * as a double. `lambda` (ridge) adds to the two feature diagonal
+    * entries only. Returns `det` and the unrounded (b0, b1, b2); det3
+    * spells the cofactor expansion identically in the SQL oracles.
+    */
+  private[ml] def cramer(stat: String => Column, lambda: Option[Double] = None)
+      : (Column, Column, Column, Column) = {
+    val nD = stat("n")
+    val (r11, r22) = lambda.fold((stat("s11"), stat("s22")))(l =>
+      (stat("s11") + l, stat("s22") + l))
+    val det = det3(nD, stat("s1"), stat("s2"),
+      stat("s1"), r11, stat("s12"), stat("s2"), stat("s12"), r22)
+    val det0 = det3(stat("sy"), stat("s1"), stat("s2"),
+      stat("s1y"), r11, stat("s12"), stat("s2y"), stat("s12"), r22)
+    val det1 = det3(nD, stat("sy"), stat("s2"),
+      stat("s1"), stat("s1y"), stat("s12"), stat("s2"), stat("s2y"), r22)
+    val det2 = det3(nD, stat("s1"), stat("sy"),
+      stat("s1"), r11, stat("s1y"), stat("s2"), stat("s12"), stat("s2y"))
+    (det, det0 / det, det1 / det, det2 / det)
+  }
+
+  /** A reported coefficient: null when the design is singular, else
+    * rounded 6 with the exact-tie nudge. */
+  private[ml] def coef(det: Column, b: Column): Column =
+    when(det === 0.0, lit(null).cast("double"))
+      .otherwise(round(b + lit(1e-12), 6))
+
+  /** The one fit behind [[ols2]], [[ridge2]] and [[ols2By]]: a (possibly
+    * ungrouped — `df.agg` is `groupBy().agg`) aggregate of the
+    * sufficient statistics plus Σy², then the Cramer solve per row.
+    */
+  private def fit2(df: DataFrame, groupCols: Seq[String], x1Col: String,
+                   x2Col: String, yCol: String,
+                   lambda: Option[Double]): DataFrame = {
+    def d2(c: String) = col(c).cast("decimal(18,2)")
+    val gcols = groupCols.map(col)
+    val base = df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull
+        && col(yCol).isNotNull)
+      .select(gcols :+ d2(x1Col).as("__x1") :+ d2(x2Col).as("__x2")
+        :+ d2(yCol).as("__y"): _*)
+    val aggs = sums("__") :+ sum(col("__y") * col("__y")).as("__syy")
+    val totals = base.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
+    def dd(c: String) = col(if (c == "n") c else s"__$c").cast("double")
+    val (det, b0, b1, b2) = cramer(dd, lambda)
+    val sse = dd("syy") - b0 * dd("sy") - b1 * dd("s1y") - b2 * dd("s2y")
+    val sst = dd("syy") - dd("sy") * dd("sy") / dd("n")
+    totals.select(gcols ++ Seq(col("n"),
+      coef(det, b0).as("b0"), coef(det, b1).as("b1"), coef(det, b2).as("b2"),
+      when(det === 0.0 || sst === 0.0, lit(null).cast("double"))
+        .otherwise(round(lit(1.0) - sse / sst + lit(1e-12), 6)).as("r2")): _*)
+  }
 
   /** One output row: `n`, `b0` (intercept), `b1`, `b2`, `r2` (rounded
     * 6). Null coefficients when the design is singular (|det| = 0 —
     * e.g. a constant or perfectly collinear feature); `r2` null then
     * too, or when SST = 0 (constant target).
     */
-  def ols2(df: DataFrame, x1Col: String, x2Col: String, yCol: String): DataFrame = {
-    def d2(c: String) = col(c).cast("decimal(18,2)")
-    val base = df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull
-        && col(yCol).isNotNull)
-      .select(d2(x1Col).as("__x1"), d2(x2Col).as("__x2"), d2(yCol).as("__y"))
-    val sums = base.agg(
-      count(lit(1)).as("n"),
-      sum(col("__x1")).as("__s1"), sum(col("__x2")).as("__s2"),
-      sum(col("__x1") * col("__x1")).as("__s11"),
-      sum(col("__x2") * col("__x2")).as("__s22"),
-      sum(col("__x1") * col("__x2")).as("__s12"),
-      sum(col("__y")).as("__sy"),
-      sum(col("__x1") * col("__y")).as("__s1y"),
-      sum(col("__x2") * col("__y")).as("__s2y"),
-      sum(col("__y") * col("__y")).as("__syy"))
-    val nD = col("n").cast("double")
-    def dd(c: String) = col(c).cast("double")
-    // A = [[n, s1, s2], [s1, s11, s12], [s2, s12, s22]], rhs = (sy, s1y, s2y);
-    // det3 spells the cofactor expansion identically in the SQL oracle
-    def det3(a11: Column, a12: Column, a13: Column,
-             a21: Column, a22: Column, a23: Column,
-             a31: Column, a32: Column, a33: Column): Column =
-      a11 * (a22 * a33 - a23 * a32) - a12 * (a21 * a33 - a23 * a31) +
-        a13 * (a21 * a32 - a22 * a31)
-    val det = det3(nD, dd("__s1"), dd("__s2"),
-      dd("__s1"), dd("__s11"), dd("__s12"),
-      dd("__s2"), dd("__s12"), dd("__s22"))
-    val det0 = det3(dd("__sy"), dd("__s1"), dd("__s2"),
-      dd("__s1y"), dd("__s11"), dd("__s12"),
-      dd("__s2y"), dd("__s12"), dd("__s22"))
-    val det1 = det3(nD, dd("__sy"), dd("__s2"),
-      dd("__s1"), dd("__s1y"), dd("__s12"),
-      dd("__s2"), dd("__s2y"), dd("__s22"))
-    val det2 = det3(nD, dd("__s1"), dd("__sy"),
-      dd("__s1"), dd("__s11"), dd("__s1y"),
-      dd("__s2"), dd("__s12"), dd("__s2y"))
-    val (b0, b1, b2) = (det0 / det, det1 / det, det2 / det)
-    val sse = dd("__syy") - b0 * dd("__sy") - b1 * dd("__s1y") - b2 * dd("__s2y")
-    val sst = dd("__syy") - dd("__sy") * dd("__sy") / nD
-    val singular = det === 0.0
-    sums.select(col("n"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b0 + lit(1e-12), 6)).as("b0"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b1 + lit(1e-12), 6)).as("b1"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b2 + lit(1e-12), 6)).as("b2"),
-      when(singular || sst === 0.0, lit(null).cast("double"))
-        .otherwise(round(lit(1.0) - sse / sst + lit(1e-12), 6)).as("r2"))
-  }
+  def ols2(df: DataFrame, x1Col: String, x2Col: String, yCol: String): DataFrame =
+    fit2(df, Nil, x1Col, x2Col, yCol, None)
 
   /** Ridge variant of [[ols2]]: the normal matrix gets +λ on the two
     * FEATURE diagonal entries (s11, s22 — the intercept is
@@ -96,44 +116,7 @@ object Ols {
   def ridge2(df: DataFrame, x1Col: String, x2Col: String, yCol: String,
              lambda: Double): DataFrame = {
     require(lambda > 0, s"lambda must be > 0, got $lambda (use ols2 for 0)")
-    def d2(c: String) = col(c).cast("decimal(18,2)")
-    val base = df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull
-        && col(yCol).isNotNull)
-      .select(d2(x1Col).as("__x1"), d2(x2Col).as("__x2"), d2(yCol).as("__y"))
-    val sums = base.agg(
-      count(lit(1)).as("n"),
-      sum(col("__x1")).as("__s1"), sum(col("__x2")).as("__s2"),
-      sum(col("__x1") * col("__x1")).as("__s11"),
-      sum(col("__x2") * col("__x2")).as("__s22"),
-      sum(col("__x1") * col("__x2")).as("__s12"),
-      sum(col("__y")).as("__sy"),
-      sum(col("__x1") * col("__y")).as("__s1y"),
-      sum(col("__x2") * col("__y")).as("__s2y"),
-      sum(col("__y") * col("__y")).as("__syy"))
-    val nD = col("n").cast("double")
-    def dd(c: String) = col(c).cast("double")
-    val (r11, r22) = (dd("__s11") + lambda, dd("__s22") + lambda)
-    val det = det3(nD, dd("__s1"), dd("__s2"),
-      dd("__s1"), r11, dd("__s12"), dd("__s2"), dd("__s12"), r22)
-    val det0 = det3(dd("__sy"), dd("__s1"), dd("__s2"),
-      dd("__s1y"), r11, dd("__s12"), dd("__s2y"), dd("__s12"), r22)
-    val det1 = det3(nD, dd("__sy"), dd("__s2"),
-      dd("__s1"), dd("__s1y"), dd("__s12"), dd("__s2"), dd("__s2y"), r22)
-    val det2 = det3(nD, dd("__s1"), dd("__sy"),
-      dd("__s1"), r11, dd("__s1y"), dd("__s2"), dd("__s12"), dd("__s2y"))
-    val (b0, b1, b2) = (det0 / det, det1 / det, det2 / det)
-    val sse = dd("__syy") - b0 * dd("__sy") - b1 * dd("__s1y") - b2 * dd("__s2y")
-    val sst = dd("__syy") - dd("__sy") * dd("__sy") / nD
-    val singular = det === 0.0
-    sums.select(col("n"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b0 + lit(1e-12), 6)).as("b0"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b1 + lit(1e-12), 6)).as("b1"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b2 + lit(1e-12), 6)).as("b2"),
-      when(singular || sst === 0.0, lit(null).cast("double"))
-        .otherwise(round(lit(1.0) - sse / sst + lit(1e-12), 6)).as("r2"))
+    fit2(df, Nil, x1Col, x2Col, yCol, Some(lambda))
   }
 
   /** Per-group [[ols2]]: one grouped aggregate of the sufficient
@@ -145,44 +128,6 @@ object Ols {
   def ols2By(df: DataFrame, groupCols: Seq[String], x1Col: String,
              x2Col: String, yCol: String): DataFrame = {
     require(groupCols.nonEmpty, "use ols2 for the ungrouped fit")
-    def d2(c: String) = col(c).cast("decimal(18,2)")
-    val gcols = groupCols.map(col)
-    val base = df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull
-        && col(yCol).isNotNull)
-      .select(gcols :+ d2(x1Col).as("__x1") :+ d2(x2Col).as("__x2")
-        :+ d2(yCol).as("__y"): _*)
-    val sums = base.groupBy(gcols: _*).agg(
-      count(lit(1)).as("n"),
-      sum(col("__x1")).as("__s1"), sum(col("__x2")).as("__s2"),
-      sum(col("__x1") * col("__x1")).as("__s11"),
-      sum(col("__x2") * col("__x2")).as("__s22"),
-      sum(col("__x1") * col("__x2")).as("__s12"),
-      sum(col("__y")).as("__sy"),
-      sum(col("__x1") * col("__y")).as("__s1y"),
-      sum(col("__x2") * col("__y")).as("__s2y"),
-      sum(col("__y") * col("__y")).as("__syy"))
-    val nD = col("n").cast("double")
-    def dd(c: String) = col(c).cast("double")
-    val det = det3(nD, dd("__s1"), dd("__s2"),
-      dd("__s1"), dd("__s11"), dd("__s12"), dd("__s2"), dd("__s12"), dd("__s22"))
-    val det0 = det3(dd("__sy"), dd("__s1"), dd("__s2"),
-      dd("__s1y"), dd("__s11"), dd("__s12"), dd("__s2y"), dd("__s12"), dd("__s22"))
-    val det1 = det3(nD, dd("__sy"), dd("__s2"),
-      dd("__s1"), dd("__s1y"), dd("__s12"), dd("__s2"), dd("__s2y"), dd("__s22"))
-    val det2 = det3(nD, dd("__s1"), dd("__sy"),
-      dd("__s1"), dd("__s11"), dd("__s1y"), dd("__s2"), dd("__s12"), dd("__s2y"))
-    val (b0, b1, b2) = (det0 / det, det1 / det, det2 / det)
-    val sse = dd("__syy") - b0 * dd("__sy") - b1 * dd("__s1y") - b2 * dd("__s2y")
-    val sst = dd("__syy") - dd("__sy") * dd("__sy") / nD
-    val singular = det === 0.0
-    sums.select(gcols ++ Seq(col("n"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b0 + lit(1e-12), 6)).as("b0"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b1 + lit(1e-12), 6)).as("b1"),
-      when(singular, lit(null).cast("double"))
-        .otherwise(round(b2 + lit(1e-12), 6)).as("b2"),
-      when(singular || sst === 0.0, lit(null).cast("double"))
-        .otherwise(round(lit(1.0) - sse / sst + lit(1e-12), 6)).as("r2")): _*)
+    fit2(df, groupCols, x1Col, x2Col, yCol, None)
   }
 }

@@ -28,49 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object Poisson {
 
-  private val Scale = 1000000L
-
   /** Train `dims` fixed-point weights over quantized features. */
   def trainFp(df: DataFrame, xlCol: String, ylCol: String,
               dims: Int, iters: Int, lr: Double,
               zClip: Double = 5.0): Array[Long] = {
     require(iters >= 1 && dims >= 1, s"bad iters=$iters dims=$dims")
     require(zClip > 0, s"zClip must be > 0, got $zClip")
-    val base = df.select(col(xlCol).as("xl"), col(ylCol).cast("long").as("yl"))
-      .localCheckpoint()
-    val stats = base.agg(count(lit(1)), max(aggregate(
-      transform(col("xl"), x => abs(x)), lit(0L), (a, x) => greatest(a, x)))).head()
-    val n = stats.getLong(0)
-    require(n > 0, "trainFp: empty input")
-    require(stats.getLong(1) <= 100000000L,
-      "trainFp: a quantized feature exceeds 1e8 — normalize first")
-    val w = Array.fill(dims)(0L)
-    var t = 0
-    while (t < iters) {
-      val wLit = typedLit(w.toSeq)
-      // codegen fixed-point dot ([[graft.functions.LongDot]]) — values
-      // and NULL semantics identical to the aggregate(zip_with) fold
-      val zfp = graft.functions.LongDot.longDot(col("xl"), wLit)
-      val z = zfp.cast("double") / lit(1.0e12)
-      val ll = round(lit(1000000.0) * exp(least(z, lit(zClip)))).cast("long")
-      // single-pass gradient ([[graft.functions.GradAgg]]) — see
-      // [[LogReg.trainFp]]: one exact 128-bit blob per partition instead
-      // of (dims)× exploded aggregation rows; values identical.
-      val g = base.select((ll - col("yl")).as("rl"), col("xl"))
-        .agg(graft.functions.GradAgg.gradAgg(col("rl"), col("xl"), dims))
-        .head().getSeq[org.apache.spark.sql.Row](0)
-      g.foreach { r =>
-        val j = r.getInt(0)
-        if (!r.isNullAt(1)) {
-          val gd = r.getDecimal(1).doubleValue
-          val wNew = (w(j).toDouble / 1000000.0 - lr * (gd / 1.0e12 / n)) * 1000000.0
-          w(j) = new java.math.BigDecimal(wNew)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-        }
-      }
-      t += 1
-    }
-    w
+    // the shared [[LogReg.fixedPointGd]] loop with the clipped-exp link
+    LogReg.fixedPointGd(df.select(col(xlCol).as("xl"), col(ylCol).cast("long").as("yl")),
+      dims, iters, lr)(z => round(lit(1000000.0) * exp(least(z, lit(zClip)))).cast("long"))
   }
 
   /** Score rows with trained weights: `score_fp` (exact 1e-12 margin)

@@ -88,19 +88,12 @@ object FuzzyJoin {
       .collect().map(_.getLong(0)).sorted.toSeq
 
   /** Pin the VERIFY stage's parallelism: distribute the deduped probe
-    * rows on the segment join key across the session's shuffle
-    * partitions, with the count EXPLICIT so AQE cannot byte-coalesce
-    * the read. The per-candidate levenshtein behind the join is
-    * CPU-dense but byte-light — AQE's size-based coalescing collapsed
-    * the post-prune probe side to ONE partition and ran every verify
-    * single-threaded (measured at sf0.1: 5 → 1 verify tasks, +83% query
-    * wall, while total executor time FELL). This exchange is not extra
-    * work at scale: it is exactly the segment-key distribution a
-    * non-broadcast PassJoin candidate join requires anyway, so a
-    * shuffle-strategy join absorbs it, and under a broadcast join it
-    * moves only the deduped probe rows once. */
+    * rows on the segment join key over [[Parallelism.shards]] (the AQE
+    * byte-coalescing trap, explained there; measured at sf0.1: 5 → 1
+    * verify tasks, +83% query wall). It is the segment-key distribution
+    * a non-broadcast PassJoin candidate join requires anyway. */
   private def pinVerifyParallelism(probe: DataFrame): DataFrame =
-    probe.repartition(probe.sparkSession.sessionState.conf.numShufflePartitions,
+    probe.repartition(Parallelism.shards(probe.sparkSession),
       col("lt"), col("i"), col("seg"))
 
   private def normalized(df: DataFrame, strCol: String, idCol: String): DataFrame =

@@ -317,15 +317,11 @@ object HypothesisTests {
         .select(gcols :+ col(c) :+
           (lit(2L) * (col("__cum___t") - col("__t")) + col("__t") + lit(1L)).as(out): _*)
     }
-    // Pin ROWS as the join spine with an explicit-count distribution on
-    // the first rank key: left to estimates, the planner streamed the
-    // SMALLEST side (a 150-row rank table) and broadcast both rows and
-    // the big rank table, so the 600k-pair join + moment aggregation ran
-    // as ONE task (~1.4 s measured). The explicit exchange is the
-    // distribution a non-broadcast value join needs at scale anyway
-    // (a continuous column's rank table is corpus-sized — never
-    // broadcastable at 100 TB).
-    val nShards = rows.sparkSession.sessionState.conf.numShufflePartitions
+    // Pin ROWS as the join spine, distributed on the first rank key
+    // over Parallelism.shards (see there): left to estimates, the
+    // planner broadcast rows and the big rank table, so the 600k-pair
+    // join + moment aggregation ran as ONE task (~1.4 s measured).
+    val nShards = Parallelism.shards(rows.sparkSession)
     val ranked = rows.repartition(nShards, (gcols :+ col("__x")): _*)
       .join(rankTable("__x", "__sx"), groupCols :+ "__x")
       .join(rankTable("__y", "__sy"), groupCols :+ "__y")

@@ -1,35 +1,58 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Scan-parallelism guard for CPU-dense small-input operators.
+/** Session parallelism for CPU-dense operators.
   *
-  * Parquet split planning packs files by BYTES (`maxPartitionBytes`,
-  * with a 4 MB `openCostInBytes` floor per file), so a ~10 MB table
-  * scans as ~3 splits — and every downstream stage of an operator that
-  * pins that scan with `localCheckpoint` inherits 3-way parallelism,
-  * even on a 32-core session running decimal-heavy aggregation passes
+  * [[shards]] is the one read of the session's shuffle-partition count
+  * (`spark.sql.shuffle.partitions`) behind every explicit partition
+  * count in the operators.
+  *
+  * The AQE byte-coalescing trap is why those counts are explicit. AQE
+  * sizes a shuffle read by BYTES (`advisoryPartitionSizeInBytes`), so
+  * an exchange whose rows are byte-light but CPU-dense — a verify join
+  * running a per-pair levenshtein, a window sorting and summing a
+  * histogram, a rank join feeding a moment aggregate — gets its read
+  * merged into one or a few partitions, and the per-row work runs on
+  * one task while the other cores idle. `repartition(shards(spark),
+  * keys)` pins the distribution: AQE never coalesces a repartition
+  * with an explicit count. At scale this is the same exchange the join
+  * or window needs anyway, so it adds no work. Measured cases:
+  * [[FuzzyJoin]]'s verify stage and [[RankedStats.withCumulative]]'s
+  * window exchange. [[HypothesisTests.spearman]]'s join spine pins the
+  * same way against the estimate-driven variant: a broadcast of both
+  * big sides that left the whole join on one task.
+  *
+  * Scan parallelism has the same blindness at the other end. Parquet
+  * split planning packs files by BYTES (`maxPartitionBytes`, with a
+  * 4 MB `openCostInBytes` floor per file), so a ~10 MB table scans as
+  * ~3 splits — and every downstream stage of an operator that pins
+  * that scan with `localCheckpoint` inherits 3-way parallelism, even on
+  * a 32-core session running decimal-heavy aggregation passes
   * (measured: q_cv_ols ran its checkpoint + two aggregate passes as
   * 3-task stages of ~1 s executor time each). Bytes-based splitting is
-  * right at scale; it is blind to per-row CPU on small inputs — the
-  * same blindness class as the AQE byte-coalescing trap in
-  * [[FuzzyJoin]]'s verify stage.
+  * right at scale; it is blind to per-row CPU on small inputs.
   *
-  * `widened` round-robin-repartitions a frame up to the session's
-  * shuffle parallelism ONLY when the planned partition count is below
-  * it — at production scale a real corpus plans thousands of splits and
-  * this is a no-op, so the knob stays scale-adaptive rather than a
-  * local-core-count constant. Use immediately before a load-bearing
-  * localCheckpoint whose consumers do per-row arithmetic; safe only for
-  * consumers that are row-order-free (the repo's exact-sum discipline).
-  * The input must be free of exchanges (a scan plus narrow operators):
-  * under AQE, `df.rdd` runs the jobs of every upstream query stage just
-  * to count partitions.
+  * `widened` round-robin-repartitions a frame up to [[shards]] ONLY
+  * when the planned partition count is below it — at production scale
+  * a real corpus plans thousands of splits and this is a no-op, so the
+  * knob stays scale-adaptive rather than a local-core-count constant.
+  * Use immediately before a load-bearing localCheckpoint whose
+  * consumers do per-row arithmetic; safe only for consumers that are
+  * row-order-free (the repo's exact-sum discipline). The input must be
+  * free of exchanges (a scan plus narrow operators): under AQE,
+  * `df.rdd` runs the jobs of every upstream query stage just to count
+  * partitions.
   */
 object Parallelism {
 
+  /** The session's shuffle-partition count: the shard count of every
+    * explicitly partitioned exchange in the operators. */
+  def shards(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
   def widened(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sessionState.conf.numShufflePartitions
+    val p = shards(df.sparkSession)
     // partition planning only — no job, given an exchange-free input
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }

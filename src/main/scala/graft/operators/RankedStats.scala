@@ -44,8 +44,8 @@ object RankedStats {
     *
     * `valueCol` may be any orderable type. Ranking by a unique key (for
     * example `struct(-cnt, token)` with a count column of `1L`) makes
-    * `__cum_<c>` a dense 1-based rank. The shard count is the session's
-    * `spark.sql.shuffle.partitions`.
+    * `__cum_<c>` a dense 1-based rank. The shard count is
+    * [[Parallelism.shards]].
     *
     * Two caveats hold for every two-level prefix sum over a RANGE
     * exchange, and this is the one place that handles them:
@@ -60,13 +60,10 @@ object RankedStats {
     *     each branch prunes different columns). The localCheckpoint
     *     makes the shard id a fact, not a replay, and costs one
     *     histogram-sized materialization.
-    *   - The window exchange needs an explicit partition count. The
-    *     local cumsum needs hashpartitioning(group, shard); left
-    *     implicit, AQE's byte-based coalescing merges that exchange's
-    *     read into one partition whenever the histogram is byte-small (a
-    *     ~5 MB histogram of 594k rows measured as ONE task sorting and
-    *     summing everything). The explicit count pins the distribution;
-    *     it is the same single exchange the window already required.
+    *   - The window exchange needs an explicit partition count
+    *     ([[Parallelism.shards]], the AQE byte-coalescing trap): a ~5 MB
+    *     histogram of 594k rows otherwise measured as ONE task sorting
+    *     and summing everything.
     *
     * Two-level prefix sums whose shard id is arithmetic on the key
     * ([[Sampling.globalShuffleOrder]], [[graft.text.Pack.chunkAssignments]])
@@ -74,7 +71,7 @@ object RankedStats {
     */
   def withCumulative(hist: DataFrame, groupCols: Seq[String], valueCol: String,
                      cntCols: Seq[String]): DataFrame = {
-    val nShards = hist.sparkSession.sessionState.conf.numShufflePartitions
+    val nShards = Parallelism.shards(hist.sparkSession)
     val gcols = groupCols.map(col)
     // capture the shard id BEFORE the window's hash exchange moves rows
     val ranged = hist

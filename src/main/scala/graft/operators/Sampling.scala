@@ -140,8 +140,8 @@ object Sampling {
     * cumulative-sum shape with count in place of token length. The
     * shard id is arithmetic on the hash, so there is no range exchange
     * to pin; [[RankedStats.withCumulative]] documents the range-sharded
-    * variant and its caveats. The shard count is the session's
-    * `spark.sql.shuffle.partitions`; the order does not depend on it.
+    * variant and its caveats. The shard count is
+    * [[Parallelism.shards]]; the order does not depend on it.
     * Ties in the 60-bit prefix break on the key itself, keeping the
     * order total — the oracle replays exactly (prefix, key) ordering.
     *
@@ -153,7 +153,7 @@ object Sampling {
     */
   def globalShuffleOrder(df: DataFrame, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val nSh = df.sparkSession.sessionState.conf.numShufflePartitions
+    val nSh = Parallelism.shards(df.sparkSession)
     val h = conv(substring(md5(col(keyCol).cast("string")), 1, 15), 16, 10).cast("long")
     val width = (1L << 60) / nSh + 1
     val sharded = df.withColumn("__h", h)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,36 +37,63 @@ import org.apache.spark.sql.functions._
   */
 object Survival {
 
-  def kaplanMeier(df: DataFrame, subjectCol: String, tsCol: String,
-                  horizon: Long, bucketWidth: Long): DataFrame = {
+  private val wAll = Window.partitionBy()
+    .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+  private val wPre = Window.orderBy(col("dur"))
+    .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The lifetime table shared by the three estimators. Per subject,
+    * one checkpointed min/max of `tsCol`; per distinct bucketed
+    * duration `dur`, observed churns `d`, censorings `c` and the risk
+    * set `__n` (total − exclusive prefix, via the `__tot`/`__cum`
+    * windows). With `group = Some((groupCol, groupA))`, subjects with
+    * a null group drop, and group A's `da`, `ca` and risk set `__na`
+    * (windows `__tota`/`__cuma`) ride along.
+    */
+  private def lifetimes(df: DataFrame, subjectCol: String, tsCol: String,
+                        horizon: Long, bucketWidth: Long,
+                        group: Option[(String, String)] = None): DataFrame = {
     require(horizon >= 0, s"horizon must be >= 0, got $horizon")
     require(bucketWidth > 0, s"bucketWidth must be > 0, got $bucketWidth")
     // localCheckpoint: `per` feeds both the study-end scalar and the
     // lifetime projection — without it the 1-row max re-aggregates the
     // corpus from the scan (AQE can't reuse a min+max exchange for a
     // max-only subtree), doubling the corpus cost at scale
-    val per = df.filter(col(subjectCol).isNotNull && col(tsCol).isNotNull)
+    val per = df.filter(group.foldLeft(col(subjectCol).isNotNull
+          && col(tsCol).isNotNull)((p, g) => p && col(g._1).isNotNull))
       .groupBy(col(subjectCol))
-      .agg(min(col(tsCol)).as("__t0"), max(col(tsCol)).as("__t1"))
+      .agg(min(col(tsCol)).as("__t0"), max(col(tsCol)).as("__t1") +:
+        group.map(g => min(col(g._1)).as("__g")).toSeq: _*)
       .localCheckpoint()
     val mx = per.agg(max(col("__t1")).as("__mx"))
     val subj = per.crossJoin(broadcast(mx)).select(
-      expr(s"(__t1 - __t0) div ${bucketWidth}L").as("dur"),
-      (col("__t1") > col("__mx") - lit(horizon)).as("__cens"))
+      expr(s"(__t1 - __t0) div ${bucketWidth}L").as("dur") +:
+        (col("__t1") > col("__mx") - lit(horizon)).as("__cens") +:
+        group.map(g => (col("__g") === g._2).as("__a")).toSeq: _*)
+    def cnt(p: Column) = sum(when(p, 1L).otherwise(0L))
     val byDur = subj.groupBy(col("dur")).agg(
       sum(when(col("__cens"), 0L).otherwise(1L)).as("d"),
-      sum(when(col("__cens"), 1L).otherwise(0L)).as("c"))
-    val wAll = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wPre = Window.orderBy(col("dur"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val n = col("__tot") - col("__cum") + (col("d") + col("c"))
-    val lnTerm = when(col("d") < col("__n"),
-      log(lit(1.0) - col("d").cast("double") / col("__n").cast("double")))
-    byDur
+      sum(when(col("__cens"), 1L).otherwise(0L)).as("c") +:
+        (if (group.isEmpty) Nil
+         else Seq(cnt(!col("__cens") && col("__a")).as("da"),
+           cnt(col("__cens") && col("__a")).as("ca"))): _*)
+    val withN = byDur
       .withColumn("__tot", sum(col("d") + col("c")).over(wAll))
       .withColumn("__cum", sum(col("d") + col("c")).over(wPre))
+    val n = col("__tot") - col("__cum") + (col("d") + col("c"))
+    if (group.isEmpty) withN.withColumn("__n", n)
+    else withN
+      .withColumn("__tota", sum(col("da") + col("ca")).over(wAll))
+      .withColumn("__cuma", sum(col("da") + col("ca")).over(wPre))
       .withColumn("__n", n)
+      .withColumn("__na", col("__tota") - col("__cuma") + (col("da") + col("ca")))
+  }
+
+  def kaplanMeier(df: DataFrame, subjectCol: String, tsCol: String,
+                  horizon: Long, bucketWidth: Long): DataFrame = {
+    val lnTerm = when(col("d") < col("__n"),
+      log(lit(1.0) - col("d").cast("double") / col("__n").cast("double")))
+    lifetimes(df, subjectCol, tsCol, horizon, bucketWidth)
       .withColumn("__lnS", sum(lnTerm).over(wPre))
       .withColumn("__z",
         max(when(col("d") === col("__n"), 1).otherwise(0)).over(wPre))
@@ -88,35 +115,13 @@ object Survival {
     * `censored`, `cum_hazard` (rounded 6).
     */
   def nelsonAalen(df: DataFrame, subjectCol: String, tsCol: String,
-                  horizon: Long, bucketWidth: Long): DataFrame = {
-    require(horizon >= 0, s"horizon must be >= 0, got $horizon")
-    require(bucketWidth > 0, s"bucketWidth must be > 0, got $bucketWidth")
-    val per = df.filter(col(subjectCol).isNotNull && col(tsCol).isNotNull)
-      .groupBy(col(subjectCol))
-      .agg(min(col(tsCol)).as("__t0"), max(col(tsCol)).as("__t1"))
-      .localCheckpoint()
-    val mx = per.agg(max(col("__t1")).as("__mx"))
-    val subj = per.crossJoin(broadcast(mx)).select(
-      expr(s"(__t1 - __t0) div ${bucketWidth}L").as("dur"),
-      (col("__t1") > col("__mx") - lit(horizon)).as("__cens"))
-    val byDur = subj.groupBy(col("dur")).agg(
-      sum(when(col("__cens"), 0L).otherwise(1L)).as("d"),
-      sum(when(col("__cens"), 1L).otherwise(0L)).as("c"))
-    val wAll = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wPre = Window.orderBy(col("dur"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val n = col("__tot") - col("__cum") + (col("d") + col("c"))
-    byDur
-      .withColumn("__tot", sum(col("d") + col("c")).over(wAll))
-      .withColumn("__cum", sum(col("d") + col("c")).over(wPre))
-      .withColumn("__n", n)
+                  horizon: Long, bucketWidth: Long): DataFrame =
+    lifetimes(df, subjectCol, tsCol, horizon, bucketWidth)
       .withColumn("__H",
         sum(col("d").cast("double") / col("__n").cast("double")).over(wPre))
       .select(col("dur").as("duration"), col("__n").as("at_risk"),
         col("d").as("events"), col("c").as("censored"),
         round(col("__H") + lit(1e-12), 6).as("cum_hazard"))
-  }
 
   /** Two-group log-rank test under the [[kaplanMeier]] lifetime model:
     * did cohort A churn on a different schedule than cohort B? At each
@@ -136,42 +141,14 @@ object Survival {
   def logRank(df: DataFrame, subjectCol: String, tsCol: String,
               groupCol: String, groupA: String,
               horizon: Long, bucketWidth: Long): DataFrame = {
-    require(horizon >= 0, s"horizon must be >= 0, got $horizon")
-    require(bucketWidth > 0, s"bucketWidth must be > 0, got $bucketWidth")
-    val per = df.filter(col(subjectCol).isNotNull && col(tsCol).isNotNull
-        && col(groupCol).isNotNull)
-      .groupBy(col(subjectCol))
-      .agg(min(col(tsCol)).as("__t0"), max(col(tsCol)).as("__t1"),
-        min(col(groupCol)).as("__g"))
-      .localCheckpoint()
-    val mx = per.agg(max(col("__t1")).as("__mx"))
-    val subj = per.crossJoin(broadcast(mx)).select(
-      expr(s"(__t1 - __t0) div ${bucketWidth}L").as("dur"),
-      (col("__t1") > col("__mx") - lit(horizon)).as("__cens"),
-      (col("__g") === groupA).as("__a"))
-    def cnt(p: org.apache.spark.sql.Column) = sum(when(p, 1L).otherwise(0L))
-    val byDur = subj.groupBy(col("dur")).agg(
-      cnt(!col("__cens")).as("d"), cnt(col("__cens")).as("c"),
-      cnt(!col("__cens") && col("__a")).as("da"),
-      cnt(col("__cens") && col("__a")).as("ca"))
-    val wAll = Window.partitionBy()
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wPre = Window.orderBy(col("dur"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val n = col("__tot") - col("__cum") + (col("d") + col("c"))
-    val na = col("__tota") - col("__cuma") + (col("da") + col("ca"))
     val frac = col("__na").cast("double") / col("__n").cast("double")
     val eTerm = col("d").cast("double") * frac
     val vTerm = when(col("__n") > 1,
       col("d").cast("double") * frac * (lit(1.0) - frac)
         * (col("__n") - col("d")).cast("double") / (col("__n") - 1).cast("double"))
       .otherwise(lit(0.0))
-    val terms = byDur
-      .withColumn("__tot", sum(col("d") + col("c")).over(wAll))
-      .withColumn("__cum", sum(col("d") + col("c")).over(wPre))
-      .withColumn("__tota", sum(col("da") + col("ca")).over(wAll))
-      .withColumn("__cuma", sum(col("da") + col("ca")).over(wPre))
-      .withColumn("__n", n).withColumn("__na", na)
+    val terms = lifetimes(df, subjectCol, tsCol, horizon, bucketWidth,
+      Some((groupCol, groupA)))
     val z = (col("o_a").cast("double") - col("__e")) / sqrt(col("__v"))
     terms.agg(sum(col("da")).as("o_a"), sum(eTerm).as("__e"), sum(vTerm).as("__v"))
       .select(col("o_a"), round(col("__e") + lit(1e-12), 6).as("e_a"),

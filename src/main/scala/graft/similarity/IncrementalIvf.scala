@@ -97,16 +97,9 @@ object IncrementalIvf {
                  cents: Seq[Ivf.Centroid], query: DataFrame,
                  queryEmbCol: String, k: Int, nProbe: Int,
                  version: Option[Long] = None): DataFrame = {
-    val df = version
-      .map(v => VersionedTable.readVersion(spark, table, v))
-      .getOrElse(VersionedTable.read(spark, table))
-    val qVec = query.select(Similarity.toDouble(col(queryEmbCol)).as("__q"))
-      .head().getSeq[Double](0)
-    val probes = cents
-      .map(c => c.cellId -> c.values.zip(qVec)
-        .map { case (a, b) => (a - b) * (a - b) }.sum)
-      .sortBy { case (id, dd) => (dd, id) }
-      .take(nProbe).map(_._1)
+    val df = VersionedTable.read(spark, table, version)
+    val qVec = Ivf.queryVector(query, queryEmbCol)
+    val probes = Ivf.nearestCellIds(cents, qVec, nProbe)
     val q = broadcast(query
       .select(Similarity.toDouble(col(queryEmbCol)).as("__q"))
       .withColumn("__qn", Similarity.norm(col("__q"))))
@@ -432,8 +425,7 @@ object IncrementalIvf {
 
   def loadCentroids(spark: SparkSession, table: String,
                     version: Option[Long] = None): Seq[Ivf.Centroid] = {
-    val df = version.map(v => VersionedTable.readVersion(spark, table, v))
-      .getOrElse(VersionedTable.read(spark, table))
+    val df = VersionedTable.read(spark, table, version)
     df.select(col("cell_id"), col("values")).collect()
       .map(r => Ivf.Centroid(r.getInt(0), r.getSeq[Double](1)))
       .sortBy(_.cellId).toSeq
@@ -460,8 +452,7 @@ object IncrementalIvf {
 
   def loadCodebook(spark: SparkSession, table: String,
                    version: Option[Long] = None): Pq.Codebook = {
-    val df = version.map(v => VersionedTable.readVersion(spark, table, v))
-      .getOrElse(VersionedTable.read(spark, table))
+    val df = VersionedTable.read(spark, table, version)
     val rows = df.select(col("s"), col("code"), col("values")).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toIndexedSeq)
       .toMap
@@ -516,16 +507,9 @@ object IncrementalIvf {
                     cents: Seq[Ivf.Centroid], cb: Pq.Codebook,
                     query: DataFrame, queryEmbCol: String, k: Int,
                     nProbe: Int, version: Option[Long] = None): DataFrame = {
-    val df = version
-      .map(v => VersionedTable.readVersion(spark, table, v))
-      .getOrElse(VersionedTable.read(spark, table))
-    val qVec = query.select(Similarity.toDouble(col(queryEmbCol)).as("__q"))
-      .head().getSeq[Double](0)
-    val probes = cents
-      .map(c => c.cellId -> c.values.zip(qVec)
-        .map { case (a, b) => (a - b) * (a - b) }.sum)
-      .sortBy { case (id, dd) => (dd, id) }
-      .take(nProbe).map(_._1)
+    val df = VersionedTable.read(spark, table, version)
+    val qVec = Ivf.queryVector(query, queryEmbCol)
+    val probes = Ivf.nearestCellIds(cents, qVec, nProbe)
     df.select(col("id"), col("cell_id"), col("codes"))
       // codes can only be null for a row whose embedding was null at
       // ingest (the append-schema contract forbids mixing codeless and
@@ -791,13 +775,7 @@ object IncrementalIvf {
     */
   def assignStats(spark: SparkSession, table: String,
                   cents: Seq[Ivf.Centroid]): DataFrame = {
-    val arr = {
-      import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
-      import org.apache.spark.sql.types.{ArrayType, DoubleType}
-      org.apache.spark.sql.graft.bridge.toColumn(
-        CatLit.create(cents.map(_.values.toArray).toArray,
-          ArrayType(ArrayType(DoubleType, false), false)))
-    }
+    val arr = Ivf.centroidMatrix(cents)
     val dist = sqrt(aggregate(
       zip_with(col("vec"), element_at(arr, col("cell_id") + 1),
         (x, y) => (x - y) * (x - y)),

@@ -37,7 +37,7 @@ object Ivf {
   // the giant initializer for every new centroid set), and it dodges
   // typedLit's runtime reflection (which degrades to an untyped
   // Object-array literal under REPL-style classloaders).
-  private def centroidMatrix(cents: Seq[Centroid]): Column = {
+  private[similarity] def centroidMatrix(cents: Seq[Centroid]): Column = {
     // empty centroids must fail HERE, loudly: the 0..n-1 check below is
     // vacuous on Nil, and downstream `sequence(lit(0), lit(-1))` builds
     // a descending [0, -1] array — probeCells would silently emit bogus
@@ -130,16 +130,26 @@ object Ivf {
     cents
   }
 
-  /** Top-k cosine within the nProbe cells nearest to the query vector. */
-  def searchTopK(df: DataFrame, cents: Seq[Centroid], embCol: String, idCol: String,
-                 query: DataFrame, queryEmbCol: String, k: Int, nProbe: Int): DataFrame = {
-    val qVec = query.select(Similarity.toDouble(col(queryEmbCol)).as("__q"))
+  /** The first row of a one-vector query frame, as doubles. */
+  private[similarity] def queryVector(query: DataFrame, queryEmbCol: String): Seq[Double] =
+    query.select(Similarity.toDouble(col(queryEmbCol)).as("__q"))
       .head().getSeq[Double](0)
-    val probes = cents
-      .map(c => c.cellId -> c.values.zip(qVec).map { case (a, b) => (a - b) * (a - b) }.sum)
+
+  /** The `nProbe` cell ids nearest `q` by squared Euclidean distance,
+    * computed driver-side over the centroids (ties → lower cell id) —
+    * the probe set of every single-vector search.
+    */
+  private[similarity] def nearestCellIds(cents: Seq[Centroid], q: Seq[Double],
+                                         nProbe: Int): Seq[Int] =
+    cents
+      .map(c => c.cellId -> c.values.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum)
       .sortBy { case (id, d) => (d, id) }
       .take(nProbe).map(_._1)
 
+  /** Top-k cosine within the nProbe cells nearest to the query vector. */
+  def searchTopK(df: DataFrame, cents: Seq[Centroid], embCol: String, idCol: String,
+                 query: DataFrame, queryEmbCol: String, k: Int, nProbe: Int): DataFrame = {
+    val probes = nearestCellIds(cents, queryVector(query, queryEmbCol), nProbe)
     val q = broadcast(query.select(Similarity.toDouble(col(queryEmbCol)).as("__q"))
       .withColumn("__qn", Similarity.norm(col("__q"))))
     df.select(col(idCol), Similarity.toDouble(col(embCol)).as("__e"))

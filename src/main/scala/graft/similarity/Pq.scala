@@ -226,11 +226,7 @@ object Pq {
   def ivfPqTopK(df: DataFrame, embCol: String, idCol: String,
                 coarse: Seq[Ivf.Centroid], cb: Codebook,
                 query: Seq[Double], topK: Int, nProbe: Int): DataFrame = {
-    val probes = coarse
-      .map(c => c.cellId -> c.values.zip(query).foldLeft(0.0) {
-        case (acc, (y, x)) => acc + (x - y) * (x - y) })
-      .sortBy { case (id, d) => (d, id) }
-      .take(nProbe).map(_._1)
+    val probes = Ivf.nearestCellIds(coarse, query, nProbe)
     val emb = Similarity.toDouble(col(embCol))
     df.select(col(idCol), emb.as("__e"))
       .withColumn("cell_id", Ivf.assignCell(col("__e"), coarse))

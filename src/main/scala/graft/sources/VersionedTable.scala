@@ -513,9 +513,10 @@ object VersionedTable {
     spark.read.schema(newest).parquet(dirs: _*)
   }
 
-  /** Latest committed snapshot. */
-  def read(spark: SparkSession, table: String): DataFrame =
-    readVersion(spark, table, Long.MaxValue)
+  /** The snapshot at `version`, or the latest committed one. */
+  def read(spark: SparkSession, table: String,
+           version: Option[Long] = None): DataFrame =
+    readVersion(spark, table, version.getOrElse(Long.MaxValue))
 
   /** MERGE INTO: apply a CDC change set to the latest snapshot via
     * [[graft.operators.Cdc.applyChanges]] and commit the result as an

@@ -71,9 +71,7 @@ object IncrementalStats {
     */
   def termStats(spark: SparkSession, table: String,
                 version: Option[Long] = None): DataFrame = {
-    val df = version
-      .map(v => VersionedTable.readVersion(spark, table, v))
-      .getOrElse(VersionedTable.read(spark, table))
+    val df = VersionedTable.read(spark, table, version)
     df.groupBy(col("term"))
       .agg(sum(col("df")).as("df"), sum(col("tf")).as("tf"))
   }

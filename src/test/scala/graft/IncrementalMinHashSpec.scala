@@ -344,4 +344,34 @@ class IncrementalMinHashSpec extends AnyFunSuite {
     }
     assert(damaged.getMessage.contains("no pinned geometry"), damaged.getMessage)
   }
+
+  test("lookupPairs and processBatch agree") {
+    // three batches over planted families: members of one family differ
+    // only in a trailing token (3-gram Jaccard 13/15), so each batch
+    // mixes index dups, within-batch dups and new docs
+    val families = Seq(Seq(0, 1, 2, 0, 1, 2), Seq(0, 3, 3, 4, 1, 5),
+      Seq(5, 6, 2, 6, 7, 4))
+    val batches = families.zipWithIndex.map { case (fs, b) =>
+      fs.zipWithIndex.map { case (f, j) =>
+        val id = (b * fs.length + j).toLong
+        (id, s"document family $f " +
+          (0 until 12).map(w => s"tok${f}w$w").mkString(" ") + s" v$id")
+      }.toDF("doc_id", "text")
+    }
+    val docs = batches.reduce(_.unionByName(_))
+    val t = freshTable()
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      // a fresh batch pins the latest version before its own commit
+      val pinned = VersionedTable.latestVersion(t)
+      val dupOfIndex = statuses(IncrementalMinHash.processBatch(spark, batch,
+          "text", "doc_id", t, docs, threshold = 0.5, batchId = b.toLong))
+        .collect { case (id, "dup_of_index") => id }.toSet
+      // (version -1 = the empty index before the first commit)
+      val looked = IncrementalMinHash.lookupPairs(spark, t, batch, "text",
+          "doc_id", docs, threshold = 0.5, version = Some(pinned))
+        .select(col("id_new")).distinct().collect().map(_.getLong(0)).toSet
+      assert(looked == dupOfIndex, s"batch $b")
+      if (b > 0) assert(dupOfIndex.nonEmpty, s"batch $b probes nothing")
+    }
+  }
 }

@@ -217,6 +217,32 @@ class MlSpec extends AnyFunSuite {
     }
   }
 
+  test("cvOls2: each fold's model equals ols2 fitted on that fold's complement") {
+    // a noisy plane on the 2-decimal grid, so every fit has residuals
+    val pts = (0 until 60).map { i =>
+      val (x1, x2) = ((i % 7) + 0.25 * (i % 3), (i * i % 11) * 0.5)
+      val noise = ((i * 37) % 5 - 2) * 0.01
+      (i.toLong, x1, x2, math.rint((1.5 + 2.0 * x1 - 0.75 * x2 + noise) * 100) / 100)
+    }
+    val df = pts.toDF("id", "x1", "x2", "y")
+    val folds = 3
+    val cv = graft.ml.CrossVal.cvOls2(df, Seq("id"), "x1", "x2", "y", folds)
+      .collect()
+    assert(cv.length == folds)
+    // the fold rule cvOls2 documents: md5 arithmetic on the id columns
+    val fold = conv(substring(md5(concat_ws("_", col("id").cast("string"))),
+      1, 8), 16, 10).cast("long") % folds
+    cv.foreach { r =>
+      val f = r.getAs[Long]("fold")
+      val ref = graft.ml.Ols.ols2(df.filter(fold =!= f), "x1", "x2", "y").head
+      assert(r.getAs[Long]("n_train") == ref.getAs[Long]("n"), s"fold $f")
+      Seq("b0", "b1", "b2").foreach { b =>
+        assert(!ref.isNullAt(ref.fieldIndex(b)), s"fold $f $b")
+        assert(r.getAs[Double](b) == ref.getAs[Double](b), s"fold $f $b")
+      }
+    }
+  }
+
   test("poisson trainFp: hand-computed first step; bias-only model converges to ln(mean)") {
     import graft.ml.Poisson
     // y = {3, 5}, bias-only: iter 1 from w=0 has lambda=1, rl=(1-y)*1e6,
