@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** Loaders for the harness star schema (TESTDATA.md): one parquet per table
-  * under `\$dir`. Explicit helper per table keeps call sites readable.
+  * under `\$dir`, read through [[graft.sources.Parquet.read]]. Explicit
+  * helper per table keeps call sites readable.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -18,7 +19,7 @@ object Tables {
       // which Spark cannot represent natively; read as epoch-nanos long.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.Parquet.read(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }
 

@@ -34,9 +34,8 @@ object Decontaminate {
     * with a different width — a (table, version)-only key would then
     * silently serve the stale width and every contamination probe would
     * shingle at the wrong n. The UUID is minted per commit, so a
-    * rebuild always misses the memo. Size-capped like
-    * VersionedTable.dirSchemaCache (a long-running driver touching many
-    * bench indexes must not grow it without bound).
+    * rebuild always misses the memo. Size-capped (a long-running driver
+    * touching many bench indexes must not grow it without bound).
     */
   private val widthMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.VersionedTable
+import graft.sources.{Parquet, VersionedTable}
 
 /** Incremental corpus dedup against a persisted signature index —
   * the 100 TB operating mode. A production corpus is not deduped by
@@ -925,7 +925,7 @@ object IncrementalDedup {
         && belowVer.forall(c.version < _))
       .map { c =>
         postingsFor(
-          spark.read.parquet(
+          Parquet.read(spark,
             java.nio.file.Paths.get(indexTable, c.dataDir).toString)
             .select(col("id"), col("sz"), col("prefix")),
           nb, c.version)
@@ -1041,7 +1041,7 @@ object IncrementalDedup {
                 toVersion: Long, threshold: Double): DataFrame = {
     val window = VersionedTable.snapshotClosure(indexTable, toVersion)
       .filter(_.version > fromVersion)
-      .map(c => spark.read.parquet(
+      .map(c => Parquet.read(spark,
         java.nio.file.Paths.get(indexTable, c.dataDir).toString))
       .reduceOption(_.unionByName(_))
       .map(_.select(col("id"), col("sz"), col("sh"), col("shh"),
@@ -1080,13 +1080,19 @@ object IncrementalDedup {
     * (dup_within_batch, dup_of_index) are untouched, and a cluster with
     * no kept member (every copy already resolved against an older
     * canonical outside the window) changes nothing.
+    *
+    * The correction set holds only the race window's multi-member
+    * clusters, so it and the keepers derived from it are the broadcast
+    * sides of both LeftOuter joins by contract: AQE's runtime choice
+    * of which join to broadcast depends on stage timing, and with it
+    * the plan and its job count.
     */
   def applyReconciliation(decisions: DataFrame,
                           corrections: DataFrame): DataFrame = {
-    val cl = corrections.select(col("id"), col("cluster").as("__rc"))
-    val keeper = decisions.join(cl, Seq("id"))
+    val cl = broadcast(corrections.select(col("id"), col("cluster").as("__rc")))
+    val keeper = broadcast(decisions.join(cl, Seq("id"))
       .filter(col("status") === "kept")
-      .groupBy(col("__rc")).agg(min(col("id")).as("__keep"))
+      .groupBy(col("__rc")).agg(min(col("id")).as("__keep")))
     decisions.join(cl, Seq("id"), "left")
       .join(keeper, Seq("__rc"), "left")
       .withColumn("status",

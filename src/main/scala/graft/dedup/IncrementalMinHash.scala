@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.VersionedTable
+import graft.sources.{Parquet, VersionedTable}
 
 /** Incremental MinHash-LSH dedup index — the APPROXIMATE-candidate
   * member of the incremental ingest family (exact AllPairs prefix
@@ -125,7 +125,7 @@ object IncrementalMinHash {
                 maxBucket: Int = 1000): DataFrame = {
     val window = VersionedTable.snapshotClosure(indexTable, toVersion)
       .filter(_.version > fromVersion)
-      .map(c => spark.read.parquet(
+      .map(c => Parquet.read(spark,
         java.nio.file.Paths.get(indexTable, c.dataDir).toString))
       .reduceOption(_.unionByName(_))
       .map(_.select(col("id"), col("batch")).distinct().localCheckpoint())

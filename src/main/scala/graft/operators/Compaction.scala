@@ -21,7 +21,7 @@ object Compaction {
   def compactParquet(spark: SparkSession, srcDir: String, dstDir: String,
                      targetRowsPerFile: Long): Int = {
     require(srcDir != dstDir, "compact into a new directory, then swap")
-    val df = spark.read.parquet(srcDir)
+    val df = graft.sources.Parquet.read(spark, srcDir)
     val parts = math.max(1L, math.ceil(df.count().toDouble / targetRowsPerFile).toLong).toInt
     df.repartition(parts).write.mode("overwrite").parquet(dstDir)
     parts

@@ -49,8 +49,8 @@ object RefSchemas {
     spark.read.option("header", "true").schema(temperatures).csv(path)
 
   /** sas_data immigration parquet — self-describing 28-col schema
-    * (FIXTURES.md §1); read as-is.
+    * (FIXTURES.md §1); read as-is through [[Parquet.read]].
     */
   def readImmigration(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Parquet.read(spark, path)
 }

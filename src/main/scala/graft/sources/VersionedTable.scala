@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Minimal Delta-style transactional table on plain parquet: an ordered
   * commit log of immutable JSON entries under `_graft_log/`, each
@@ -370,8 +369,7 @@ object VersionedTable {
       val latest = latestVersion(table)
       if (latest >= 0) {
         val newestDir = snapshotCommits(table, latest).last.dataDir
-        val want = df.sparkSession.read
-          .parquet(Paths.get(table, newestDir).toString).schema
+        val want = Parquet.schemaOf(df.sparkSession, Paths.get(table, newestDir).toString)
           .fields.map(f => (f.name, f.dataType)).toSet
         val got = df.schema.fields.map(f => (f.name, f.dataType)).toSet
         require(got == want,
@@ -463,55 +461,24 @@ object VersionedTable {
     * below it plus every append after that overwrite, as ONE multi-path
     * parquet relation — partition pruning and filter pushdown reach
     * every member dir. One relation, not a union of per-dir relations:
-    * each relation pays its own file listing + schema inference, so the
-    * union form made every snapshot read O(commits) in plan-build cost
-    * — a visible per-ingest ramp in long append chains. Parquet files
-    * are self-describing and resolved by column NAME, and the append
+    * each relation pays its own file listing, so the union form made
+    * every snapshot read O(commits) in plan-build cost — a visible
+    * per-ingest ramp in long append chains. Parquet files are
+    * self-describing and resolved by column NAME, and the append
     * contract pins every dir in the closure to one (name, type) set, so
     * the single relation reads exactly what the union did.
+    *
+    * The schema is the NEWEST commit's dir's ([[Parquet.read]] pins a
+    * multi-path read to its last path), not whichever file inference
+    * happens to sample: on any table honoring the append contract this
+    * is the schema of every dir; on a table that somehow violates it
+    * (hand-built dirs, external writers) the snapshot deterministically
+    * reads the newest shape — older dirs resolve by column name (absent
+    * -> null) and a same-name type conflict fails loudly in the reader.
     */
-  // committed data dirs are immutable, so a dir's schema can be cached
-  // for the dir's lifetime: the pinning read below costs one footer
-  // inference per (session, dir) instead of per snapshot read (ingest
-  // loops call readVersion many times per batch — an uncached extra
-  // relation here measured ~2s/query on the composed-pipeline bench).
-  // Keyed by SESSION as well as dir (a StructType inferred under one
-  // session's parquet-read configs — nanosAsLong, caseSensitive — must
-  // not leak into a session with different ones), size-bounded (a
-  // long-running driver touching many tables can't grow it without
-  // limit), and evicted when vacuum() deletes the dir.
-  private[graft] val dirSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private val DirSchemaCacheCap = 8192
-
-  private[graft] def schemaCacheKey(spark: SparkSession, dir: String): String =
-    s"${System.identityHashCode(spark.sessionState)}:$dir"
-
-  private def evictSchemaCache(dir: Path): Unit = {
-    val suffix = s":${dir.toString}"
-    dirSchemaCache.keySet.removeIf(_.endsWith(suffix))
-  }
-
-  def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
-    val dirs = snapshotCommits(table, version)
-      .map(c => Paths.get(table, c.dataDir).toString)
-    // single-dir snapshot: the relation IS the newest dir — no pinning
-    // needed (and nothing to diverge from)
-    if (dirs.lengthCompare(1) == 0) return spark.read.parquet(dirs.head)
-    // schema pinned to the NEWEST commit's dir, not left to whichever
-    // file the multi-path relation happens to sample: on any table
-    // honoring the append contract this is the schema of every dir; on
-    // a table that somehow violates it (hand-built dirs, external
-    // writers) the snapshot deterministically reads the newest shape —
-    // older dirs resolve by column name (absent -> null) and a same-
-    // name type conflict fails loudly in the reader instead of
-    // depending on inference sampling order.
-    if (dirSchemaCache.size > DirSchemaCacheCap) dirSchemaCache.clear()
-    val newest = dirSchemaCache.computeIfAbsent(
-      schemaCacheKey(spark, dirs.last),
-      _ => spark.read.parquet(dirs.last).schema)
-    spark.read.schema(newest).parquet(dirs: _*)
-  }
+  def readVersion(spark: SparkSession, table: String, version: Long): DataFrame =
+    Parquet.read(spark, snapshotCommits(table, version)
+      .map(c => Paths.get(table, c.dataDir).toString): _*)
 
   /** The snapshot at `version`, or the latest committed one. */
   def read(spark: SparkSession, table: String,
@@ -614,7 +581,7 @@ object VersionedTable {
     val dirs = entries.select("dataDir").collect().map(_.getString(0))
     if (dirs.isEmpty) None
     else Some(dirs.map(d =>
-        spark.read.parquet(Paths.get(table, d).toString))
+        Parquet.read(spark, Paths.get(table, d).toString))
       .reduce(_.unionByName(_)))
   }
 
@@ -704,7 +671,6 @@ object VersionedTable {
     val dead = all.filterNot(c => live.contains(c.dataDir))
     dead.foreach { c =>
       val dir = Paths.get(table, c.dataDir)
-      evictSchemaCache(dir) // a deleted dir's cached schema must not outlive it
       deleteRecursively(dir)
       Files.deleteIfExists(logPath(table).resolve(entryName(c.version)))
     }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.Parquet
+
 /** Structured Streaming operators (north-star — the reference is batch-
   * only, SURVEY.md §2.10). The same event-time semantics as the batch
   * queries (`q_events_hourly`, `q_sessionize`), expressed over an
@@ -17,6 +19,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *     event-time timeout — state is one small Session per active key,
   *     emitted when the watermark passes (start of the gap), so state
   *     size is O(active users), not O(events).
+  *
+  * Every state read is [[graft.sources.Parquet.read]]: re-reading a
+  * versioned `v<batch>` state dir starts no schema-inference job, while
+  * the `__batch`-partitioned doc and drop stores take its fallback.
   */
 object StreamingOps {
 
@@ -265,7 +271,7 @@ object StreamingOps {
         val hits = b.select(col("doc_id"),
           explode(bandBucketKeys(col("text"), bands)).as("bucket"))
         val prevBuckets = latestVersion(s"$stateDir/buckets", before = Some(batchId)) match {
-          case Some(v) => s.read.parquet(s"$stateDir/buckets/v$v")
+          case Some(v) => Parquet.read(s, s"$stateDir/buckets/v$v")
           case None => s.createDataFrame(
             s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             org.apache.spark.sql.types.StructType(Seq(
@@ -288,7 +294,7 @@ object StreamingOps {
           .filter(col("doc_id") =!= col("first_id"))
           .select(col("first_id").as("id_a"), col("doc_id").as("id_b"))
         val candidates = cross.unionByName(inBatch).distinct()
-        val docStore = scala.util.Try(s.read.parquet(s"$stateDir/docs"))
+        val docStore = scala.util.Try(Parquet.read(s, s"$stateDir/docs"))
           .map(_.select(col("doc_id"), col("text"))).getOrElse(b.limit(0))
         val corpus = docStore.unionByName(b).dropDuplicates("doc_id")
         val verified = graft.dedup.Dedup
@@ -315,8 +321,8 @@ object StreamingOps {
     * every doc ever ingested, minus the verified drop-list.
     */
   def currentKeepList(spark: SparkSession, stateDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$stateDir/docs")
-    val drops = scala.util.Try(spark.read.parquet(s"$stateDir/drops"))
+    val docs = Parquet.read(spark, s"$stateDir/docs")
+    val drops = scala.util.Try(Parquet.read(spark, s"$stateDir/drops"))
       .getOrElse(docs.limit(0))
     docs.join(drops.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("text"))
@@ -354,7 +360,7 @@ object StreamingOps {
       (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val snap = latestVersion(dir, before = Some(batchId)) match {
-          case Some(v) => s.read.parquet(s"$dir/v$v")
+          case Some(v) => Parquet.read(s, s"$dir/v$v")
           case None =>
             s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               org.apache.spark.sql.types.StructType(
@@ -403,7 +409,7 @@ object StreamingOps {
           batch, Seq(partCol), idCol, contentCol)
         val merged = latestVersion(dir, before = Some(batchId)) match {
           case Some(v) =>
-            s.read.parquet(s"$dir/v$v").unionByName(bm)
+            Parquet.read(s, s"$dir/v$v").unionByName(bm)
               .groupBy(col(partCol))
               .agg(sum(col("n_rows")).as("n_rows"),
                 min(col("min_id")).as("min_id"), max(col("max_id")).as("max_id"),
@@ -421,7 +427,7 @@ object StreamingOps {
 
   /** The current CDC snapshot (highest version under `dir`). */
   def latestSnapshot(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/v${latestVersion(dir, None).get}")
+    Parquet.read(spark, s"$dir/v${latestVersion(dir, None).get}")
 
   private def latestVersion(dir: String, before: Option[Long]): Option[Long] = {
     val d = new java.io.File(dir)

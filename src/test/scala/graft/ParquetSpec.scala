@@ -1,0 +1,151 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.Parquet
+
+/** [[graft.sources.Parquet]]: the driver-side footer reader gives the
+  * schema Spark's own inference gives, starts no job, and hands every
+  * case it does not cover to `spark.read.parquet` unchanged.
+  */
+class ParquetSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  private val sf = "/root/testdata/sf0.001"
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def session(settings: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  private def fresh(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Jobs `body` starts: the ids between a start and an end marker job,
+    * so events still queued from earlier work are not counted and every
+    * job of `body` has been seen once the end marker's end arrives. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.parquetspec.marker"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]
+    val ended = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add((e.jobId, e.properties != null && e.properties.getProperty(key) != null))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (starts.asScala.exists { case (id, m) => m && id == e.jobId } &&
+            starts.asScala.count(_._2) == 2) ended.countDown()
+    }
+    def marker(): Unit = {
+      sc.setLocalProperty(key, "1")
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker(); body; marker()
+      assert(ended.await(60, TimeUnit.SECONDS), "end marker job never ended on the listener")
+      val all = starts.asScala.toSeq
+      val Seq(from, to) = all.filter(_._2).map(_._1).sorted
+      all.count { case (id, m) => !m && id > from && id < to }
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Same outcome as `spark.read.parquet`: an equal schema, or a failure
+    * of the same class (and error condition, for Spark's own errors). */
+  private def assertSameSchema(mine: => org.apache.spark.sql.DataFrame,
+                               theirs: => org.apache.spark.sql.DataFrame): Unit = {
+    def outcome(df: => org.apache.spark.sql.DataFrame) = Try(df.schema).toEither.left.map { e =>
+      (e.getClass.getName, e match {
+        case t: org.apache.spark.SparkThrowable => Option(t.getCondition)
+        case _ => None
+      })
+    }
+    assert(outcome(mine) == outcome(theirs))
+  }
+
+  test("Parquet.read gives spark.read.parquet's schema for every star-schema table and a nanos file, nanosAsLong on and off") {
+    val nanos = fresh("graft-pq-nanos")
+    TestSpark.writeNanosParquet(s"$nanos/part-0.parquet", Seq((1L, 10L)))
+    for (flag <- Seq("true", "false");
+         path <- Tables.names.map(n => s"$sf/$n.parquet") :+ nanos) {
+      val s = session(nanosAsLong -> flag)
+      withClue(s"$path nanosAsLong=$flag: ") {
+        assertSameSchema(Parquet.read(s, path), s.read.parquet(path))
+      }
+    }
+    // the nanos file is the case the setting decides
+    assert(Parquet.schemaOf(session(nanosAsLong -> "true"), nanos)("ts").dataType == LongType)
+    assert(Try(Parquet.read(session(nanosAsLong -> "false"), nanos)).isFailure)
+  }
+
+  test("Parquet.read and schemaOf start no Spark job; spark.read.parquet starts one") {
+    val nanos = fresh("graft-pq-nojob")
+    TestSpark.writeNanosParquet(s"$nanos/part-0.parquet", Seq((1L, 10L)))
+    val paths = Tables.names.map(n => s"$sf/$n.parquet") :+ nanos
+    val s = session(nanosAsLong -> "true")
+    assert(jobsDuring(paths.foreach(p => Parquet.read(s, p).schema)) == 0)
+    assert(jobsDuring(paths.foreach(p => Parquet.schemaOf(s, p))) == 0)
+    // positive control: the counter sees the inference job the reader avoids
+    assert(jobsDuring(s.read.parquet(paths.head).schema) == 1)
+  }
+
+  test("a missing path and an empty directory fail as spark.read.parquet fails") {
+    val missing = fresh("graft-pq-missing") + "/nope"
+    assertSameSchema(Parquet.read(spark, missing), spark.read.parquet(missing))
+    val empty = fresh("graft-pq-empty")
+    Files.createFile(Paths.get(empty, "_SUCCESS")) // hidden: still no data file
+    assertSameSchema(Parquet.read(spark, empty), spark.read.parquet(empty))
+    assert(Try(Parquet.read(spark, missing)).isFailure && Try(Parquet.read(spark, empty)).isFailure)
+  }
+
+  test("a partitionBy directory keeps its partition columns and rows") {
+    import spark.implicits._
+    val dir = fresh("graft-pq-parts") + "/t"
+    Seq((1L, "a", 2020), (2L, "b", 2021)).toDF("k", "v", "yr").write.partitionBy("yr").parquet(dir)
+    val df = Parquet.read(spark, dir)
+    assert(df.schema == spark.read.parquet(dir).schema)
+    assert(df.columns.toSeq == Seq("k", "v", "yr"))
+    assert(df.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
+      Seq((1L, "a", 2020), (2L, "b", 2021)))
+  }
+
+  test("a two-directory read takes the newest directory's schema; mergeSchema merges both") {
+    import spark.implicits._
+    val root = fresh("graft-pq-two")
+    val (old, newest) = (s"$root/b_old", s"$root/a_new") // newest sorts first
+    Seq((1L, "x")).toDF("k", "s").write.parquet(old)
+    Seq((2L, 9.5)).toDF("k", "d").write.parquet(newest)
+    val df = Parquet.read(spark, old, newest)
+    assert(df.schema.map(f => (f.name, f.dataType)) == Seq("k" -> LongType, "d" -> DoubleType))
+    assert(df.orderBy("k").collect().map(r => (r.getLong(0), Option(r.get(1)))).toSeq ==
+      Seq((1L, None), (2L, Some(9.5))))
+    val merged = Parquet.read(session("spark.sql.parquet.mergeSchema" -> "true"), old, newest)
+    assert(merged.schema.map(f => (f.name, f.dataType)).toSet ==
+      Set("k" -> LongType, "s" -> StringType, "d" -> DoubleType))
+  }
+
+  test("in src/main only Parquet.scala reads parquet") {
+    val read = """read\s*\.\s*(?:\w+\([^()]*\)\s*\.\s*)*parquet\(""".r
+    // positive control: the one-line, the split-line and the schema'd form
+    Seq("spark.read.parquet(p)", "spark.read\n  .parquet(p)", "s.read.schema(x).parquet(p)")
+      .foreach(src => assert(read.findFirstIn(src).isDefined, src))
+    assert(read.findFirstIn("df.write.mode(\"overwrite\").parquet(p)").isEmpty)
+    val root = Paths.get("src", "main", "scala")
+    assert(Files.isDirectory(root), s"no $root under the working directory")
+    val readers = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => read.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .map(p => root.relativize(p).toString.replace('\\', '/')).toSet
+    assert(readers == Set("graft/sources/Parquet.scala"), readers.toString)
+  }
+}

@@ -670,39 +670,41 @@ class SourcesSpec extends AnyFunSuite {
     assert(VersionedTable.txnMaxes(dst)("writer") == 6L)
   }
 
-  test("VersionedTable: dir-schema cache is session-keyed and evicted when vacuum deletes the dir (ADVICE r12)") {
+  test("VersionedTable: each session reads a snapshot under its own parquet settings; overwrite + vacuum reads the new rows") {
     import spark.implicits._
     import graft.sources.VersionedTable
-    val t = Files.createTempDirectory("graft-schemacache").toString + "/t"
-    VersionedTable.commit(Seq((1L, "a")).toDF("k", "v"), t, "overwrite")
-    VersionedTable.commit(Seq((2L, "b")).toDF("k", "v"), t, "append")
-    // a multi-dir snapshot read pins (and caches) the newest dir's schema
-    assert(VersionedTable.read(spark, t).count() == 2L)
-    def keysFor(session: org.apache.spark.sql.SparkSession) = {
-      import scala.jdk.CollectionConverters._
-      val sid = VersionedTable.schemaCacheKey(session, "").dropRight(0)
-        .takeWhile(_ != ':')
-      VersionedTable.dirSchemaCache.keySet().asScala
-        .filter(k => k.contains(t) && k.startsWith(s"$sid:")).toSet
+    val t = Files.createTempDirectory("graft-vt-sessions").toString + "/t"
+    VersionedTable.commit(Seq((1L, 10L)).toDF("k", "ts"), t, "overwrite")
+    VersionedTable.commit(Seq((2L, 20L)).toDF("k", "ts"), t, "append")
+    // hand-built dirs: each commit's files become one written outside
+    // Spark, ts as TIMESTAMP(NANOS) and no Spark schema in the footer, so
+    // the schema a read takes depends on the session's nanosAsLong
+    val dirs = VersionedTable.snapshotClosure(t, Long.MaxValue)
+      .map(c => java.nio.file.Paths.get(t, c.dataDir))
+    dirs.zipWithIndex.foreach { case (dir, i) =>
+      Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-")).foreach(Files.delete)
+      TestSpark.writeNanosParquet(dir.resolve("part-0.parquet").toString, Seq((i + 1L, (i + 1L) * 10L)))
     }
-    assert(keysFor(spark).nonEmpty, "snapshot pinning populated no cache entry")
-    // SESSION-keyed: a second session (potentially different parquet-read
-    // configs) gets its own entry for the same immutable dir — schemas
-    // inferred under one session's configs never leak into another's
-    val s2 = spark.newSession()
-    assert(VersionedTable.read(s2, t).count() == 2L)
-    assert(keysFor(s2).nonEmpty && keysFor(s2) != keysFor(spark))
-    // EVICTED on vacuum: an overwrite makes the old dirs dead; vacuum
-    // deletes them and their cached schemas must not outlive the bytes
-    VersionedTable.commit(Seq((9L, "z")).toDF("k", "v"), t, "overwrite")
-    VersionedTable.vacuum(t, keepAfter = 2L, orphanGraceMs = 0L)
-    import scala.jdk.CollectionConverters._
-    val stale = VersionedTable.dirSchemaCache.keySet().asScala
-      .filter(_.contains(t))
-      .filterNot { k =>
-        val dir = k.substring(k.indexOf(':') + 1)
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))
-      }
-    assert(stale.isEmpty, s"cached schemas for vacuumed dirs: $stale")
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val on = spark.newSession(); on.conf.set(key, "true")
+    val off = spark.newSession(); off.conf.set(key, "false")
+    val snap = VersionedTable.read(on, t)
+    assert(snap.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(snap.orderBy("k").as[(Long, Long)].collect().toSeq == Seq((1L, 10L), (2L, 20L)))
+    // read after `on`, `off` fails exactly as Spark's own inference does
+    // under nanosAsLong=false: `on`'s schema does not carry over
+    def failure(body: => Any) = {
+      val e = intercept[Exception](body); e.getClass
+    }
+    assert(failure(VersionedTable.read(off, t).schema) ==
+      failure(off.read.parquet(dirs.map(_.toString): _*).schema))
+    // an overwrite (new schema) then vacuum: the read is the new rows
+    VersionedTable.commit(Seq((9L, "z")).toDF("k", "s"), t, "overwrite")
+    VersionedTable.commit(Seq((8L, "y")).toDF("k", "s"), t, "append")
+    VersionedTable.vacuum(t, keepAfter = 3L, orphanGraceMs = 0L)
+    assert(dirs.forall(d => !Files.exists(d)), "vacuum kept a dead dir")
+    for (s <- Seq(on, off)) assert(VersionedTable.read(s, t).orderBy("k")
+      .as[(Long, String)].collect().toSeq == Seq((8L, "y"), (9L, "z")))
   }
 }

@@ -62,6 +62,20 @@ object TestSpark {
     acc.get
   }
 
+  /** Writes `rows` as (`k`, `ts`) to one parquet file the way a writer
+    * outside Spark does: `ts` is int64 TIMESTAMP(NANOS, UTC-adjusted)
+    * and the footer carries no Spark schema, so the schema a read takes
+    * depends on the session's `nanosAsLong`. */
+  def writeNanosParquet(path: String, rows: Seq[(Long, Long)]): Unit = {
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 k; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path)).withType(schema).build()
+    try rows.foreach { case (k, ts) => w.write(groups.newGroup().append("k", k).append("ts", ts)) }
+    finally w.close()
+  }
+
   /** The reference data lake's bundled inputs (FIXTURES.md §1): read-only,
     * outside the checkout, and absent on machines that lack the copy.
     * Tests that read it skip with `assume(refExists(...))`. */
