@@ -36,8 +36,10 @@ object CrossVal {
     val fold = conv(substring(md5(concat_ws("_",
         idCols.map(c => col(c).cast("string")): _*)), 1, 8), 16, 10)
       .cast("long") % folds
-    // widened: the ~3-split parquet scan otherwise caps BOTH decimal
-    // aggregate passes at 3-way parallelism through the checkpoint
+    // widened: the parquet scan's few splits (one, for a listing under
+    // openCostInBytes, which Parquet.read claims as one partition) would
+    // otherwise cap BOTH decimal aggregate passes through the checkpoint;
+    // widened fans even a claimed scan out to Parallelism.shards
     // (graft.operators.Parallelism; sums are order-free exact decimals)
     val base = graft.operators.Parallelism.widened(
         df.filter(col(x1Col).isNotNull && col(x2Col).isNotNull

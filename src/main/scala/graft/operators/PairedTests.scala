@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Paired-sample tests — the audits a pipeline runs when the SAME units
@@ -76,22 +76,10 @@ object PairedTests {
   def friedman(df: DataFrame, blockCol: String, treatmentCol: String,
                valueCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // base feeds the k scalar, the completeness filter, AND the ranked
-    // join — materialize once (often an upstream aggregate)
-    val base = df.select(col(blockCol).as("__b"), col(treatmentCol).as("__t"),
-        col(valueCol).cast("double").as("__v"))
-      .filter(col("__b").isNotNull && col("__t").isNotNull && col("__v").isNotNull)
-      .localCheckpoint()
-    val kTotal = base.agg(countDistinct(col("__t")).as("__k"))
-    val complete = base.groupBy(col("__b"))
-      .agg(countDistinct(col("__t")).as("__kb"))
-      .crossJoin(broadcast(kTotal))
-      .filter(col("__kb") === col("__k"))
-      .select(col("__b"))
     // min-rank + tie size -> midrank; both windows are k-row bounded
     val wRank = Window.partitionBy(col("__b")).orderBy(col("__v"))
     val wTie = Window.partitionBy(col("__b"), col("__v"))
-    val ranked = base.join(complete, "__b")
+    val ranked = completeBlocks(df, blockCol, treatmentCol, "__v" -> col(valueCol).cast("double"))
       .withColumn("__r", rank().over(wRank).cast("double")
         + (count(lit(1)).over(wTie).cast("double") - 1) / 2)
     val colSums = ranked.groupBy(col("__t"))
@@ -132,18 +120,8 @@ object PairedTests {
     */
   def cochranQ(df: DataFrame, blockCol: String, treatmentCol: String,
                successCol: String): DataFrame = {
-    // same three-consumer shape as friedman — materialize base once
-    val base = df.select(col(blockCol).as("__b"), col(treatmentCol).as("__t"),
-        col(successCol).cast("boolean").cast("long").as("__x"))
-      .filter(col("__b").isNotNull && col("__t").isNotNull && col("__x").isNotNull)
-      .localCheckpoint()
-    val kTotal = base.agg(countDistinct(col("__t")).as("__k"))
-    val complete = base.groupBy(col("__b"))
-      .agg(countDistinct(col("__t")).as("__kb"))
-      .crossJoin(broadcast(kTotal))
-      .filter(col("__kb") === col("__k"))
-      .select(col("__b"))
-    val kept = base.join(complete, "__b").localCheckpoint()
+    val kept = completeBlocks(df, blockCol, treatmentCol,
+      "__x" -> col(successCol).cast("boolean").cast("long")).localCheckpoint()
     val colT = kept.groupBy(col("__t")).agg(sum(col("__x")).as("__C"))
       .agg(count(lit(1)).as("k"), sum(col("__C")).as("__sc"),
         sum(col("__C") * col("__C")).as("__scc"))
@@ -158,6 +136,27 @@ object PairedTests {
       .select(col("n"), col("k"),
         when(den === 0.0, lit(null).cast("double"))
           .otherwise(round(num / den + lit(1e-12), 6)).as("q_stat"))
+  }
+
+  /** The complete blocks of [[friedman]] and [[cochranQ]]: `df` as
+    * non-null (`__b` block, `__t` treatment, `value`) rows, kept only
+    * for blocks holding every treatment seen anywhere. The base feeds
+    * the k scalar, the completeness filter AND the join, so it is
+    * materialized once (often an upstream aggregate); the completeness
+    * filter is one block-sized count aggregate joined back. */
+  private def completeBlocks(df: DataFrame, blockCol: String, treatmentCol: String,
+                             value: (String, Column)): DataFrame = {
+    val (v, c) = value
+    val base = df.select(col(blockCol).as("__b"), col(treatmentCol).as("__t"), c.as(v))
+      .filter(col("__b").isNotNull && col("__t").isNotNull && col(v).isNotNull)
+      .localCheckpoint()
+    val kTotal = base.agg(countDistinct(col("__t")).as("__k"))
+    val complete = base.groupBy(col("__b"))
+      .agg(countDistinct(col("__t")).as("__kb"))
+      .crossJoin(broadcast(kTotal))
+      .filter(col("__kb") === col("__k"))
+      .select(col("__b"))
+    base.join(complete, "__b")
   }
 
   /** Wilcoxon signed-rank test over paired values: d = x − y per row,

@@ -32,6 +32,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (measured: q_cv_ols ran its checkpoint + two aggregate passes as
   * 3-task stages of ~1 s executor time each). Bytes-based splitting is
   * right at scale; it is blind to per-row CPU on small inputs.
+  * [[graft.sources.Parquet.read]] goes one step further on purpose: a
+  * listing of at most the session's `openCostInBytes` (4 MB by default)
+  * is claimed as ONE partition (`coalesce(1)`), so its aggregates and
+  * joins plan no exchange and the scan plus its narrow operators run as
+  * one task. Explicit counts still fan such a scan out: a
+  * `repartition(n, ...)` directly over the read drops the coalesce
+  * (`CollapseRepartition`), one over a projection of it is the
+  * exchange that spreads everything above it, and `widened` sees one
+  * planned partition and widens it to [[shards]].
   *
   * `widened` round-robin-repartitions a frame up to [[shards]] ONLY
   * when the planned partition count is below it — at production scale

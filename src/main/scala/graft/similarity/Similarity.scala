@@ -74,28 +74,11 @@ object Similarity {
     * for determinism.
     */
   def knnGraph(df: DataFrame, embCol: String, idCol: String,
-               bucketCol: String, k: Int, maxBucket: Int = 1000): DataFrame = {
-    import graft.operators.SubBuckets
-    requireIntegralId(df, idCol)
-    val base = SubBuckets.withMembership(
-        df.select(col(bucketCol).as("__bk"), col(idCol).cast("long").as("id"),
-          toDouble(col(embCol)).as("__e")),
-        Seq(col("__bk")), col("id"), maxBucket)
-      .withColumn("__n", norm(col("__e")))
-    val a = base.select(col("__bk"), col("__pass"), col("__sub"),
-      col("__sub0").as("__s0a"), col("id"), col("__e").as("__ea"), col("__n").as("__na"))
-    val b = base.select(col("__bk"), col("__pass"), col("__sub"),
-      col("__sub0").as("__s0b"), col("id").as("nbr"), col("__e").as("__eb"), col("__n").as("__nb"))
-    a.join(b, Seq("__bk", "__pass", "__sub"))
-      .filter(col("id") =!= col("nbr"))
-      .filter(SubBuckets.exactlyOnce(col("__pass"), col("__s0a"), col("__s0b")))
-      .select(col("id"), col("nbr"),
-        round(graft.functions.DotProduct.dotProduct(col("__ea"), col("__eb"))
-          / (col("__na") * col("__nb")), 6).as("cos_sim"))
+               bucketCol: String, k: Int, maxBucket: Int = 1000): DataFrame =
+    bucketCosines(df, embCol, idCol, bucketCol, maxBucket, "id", "nbr")(_ =!= _)
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("id")).orderBy(col("cos_sim").desc, col("nbr"))).cast("long"))
       .filter(col("rk") <= k)
-  }
 
   /** Deterministic hyperplane matrix (planes x dim), derived from a fixed
     * seed driver-side — no RNG state ships to executors; every plan
@@ -298,7 +281,17 @@ object Similarity {
     */
   def cosinePairs(df: DataFrame, embCol: String, idCol: String,
                   bucketCol: String, threshold: Double,
-                  maxBucket: Int = 1000): DataFrame = {
+                  maxBucket: Int = 1000): DataFrame =
+    bucketCosines(df, embCol, idCol, bucketCol, maxBucket, "id_a", "id_b")(_ < _)
+      .filter(col("cos_sim") >= threshold)
+
+  /** The sub-bucketed cosine self-join behind [[knnGraph]] and
+    * [[cosinePairs]]: every `(idA, idB, cos_sim)` pair of vectors that
+    * share a (sub-)bucket, kept by `keep(idA, idB)` and counted once
+    * across the stitching passes ([[graft.operators.SubBuckets]]). */
+  private def bucketCosines(df: DataFrame, embCol: String, idCol: String, bucketCol: String,
+                            maxBucket: Int, idA: String, idB: String)
+                           (keep: (Column, Column) => Column): DataFrame = {
     import graft.operators.SubBuckets
     requireIntegralId(df, idCol)
     val base = SubBuckets.withMembership(
@@ -307,16 +300,15 @@ object Similarity {
         Seq(col("__bk")), col("id"), maxBucket)
       .withColumn("__n", norm(col("__e")))
     val a = base.select(col("__bk"), col("__pass"), col("__sub"),
-      col("__sub0").as("__s0a"), col("id").as("id_a"), col("__e").as("__ea"), col("__n").as("__na"))
+      col("__sub0").as("__s0a"), col("id").as(idA), col("__e").as("__ea"), col("__n").as("__na"))
     val b = base.select(col("__bk"), col("__pass"), col("__sub"),
-      col("__sub0").as("__s0b"), col("id").as("id_b"), col("__e").as("__eb"), col("__n").as("__nb"))
+      col("__sub0").as("__s0b"), col("id").as(idB), col("__e").as("__eb"), col("__n").as("__nb"))
     a.join(b, Seq("__bk", "__pass", "__sub"))
-      .filter(col("id_a") < col("id_b"))
+      .filter(keep(col(idA), col(idB)))
       .filter(SubBuckets.exactlyOnce(col("__pass"), col("__s0a"), col("__s0b")))
-      .select(col("id_a"), col("id_b"),
+      .select(col(idA), col(idB),
         round(graft.functions.DotProduct.dotProduct(col("__ea"), col("__eb"))
           / (col("__na") * col("__nb")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
   }
 
   /** Embedding-space decontamination: for every corpus vector, its

@@ -2,14 +2,15 @@ package graft.sources
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 /** The one parquet reader of the engine: `spark.read.parquet` without
-  * the schema-inference job.
+  * the schema-inference job, and without an exchange job over a
+  * byte-light scan.
   *
   * Given no schema, `spark.read.parquet(path)` runs a one-task Spark job
   * to read one footer. This reader reads that footer on the driver
@@ -25,22 +26,44 @@ import org.apache.spark.sql.types.StructType
   * therefore takes the newest path's schema, which is the contract of
   * [[VersionedTable.readVersion]]: older dirs resolve by column name.
   *
+  * The one-partition claim: when the data files listed under EVERY path
+  * total no more than the session's `spark.sql.files.openCostInBytes`
+  * (read at call time) — Spark's own price for opening one file — the
+  * read is `coalesce(1)`. Such a listing has no scan parallelism worth a
+  * shuffle: `CoalesceExec(1)` reports `SinglePartition`, which satisfies
+  * the clustered distribution aggregates and sort-merge joins require,
+  * so no exchange is planned between the scan and them and AQE runs no
+  * query-stage job for one. Filters and column pruning still push into
+  * the scan. Explicit partition counts still fan a claimed scan out: a
+  * `repartition(n, ...)` directly over the read drops the coalesce
+  * (`CollapseRepartition`), one over a projection of it is the exchange
+  * that spreads all work above it, and
+  * [[graft.operators.Parallelism.widened]] widens its one partition to
+  * the shard count — so the operators' pinned fan-outs hold. A larger
+  * listing keeps Spark's split planning, so at scale the reader changes
+  * nothing.
+  *
   * The fallback: when the last path does not exist (or is a glob), holds
   * no data file, holds subdirectories (hive-style `k=v` partitions),
   * holds a `_metadata`/`_common_metadata` summary file, has a footer
   * that cannot be read, or `spark.sql.parquet.mergeSchema` is on, the
   * read is `spark.read.parquet(paths: _*)` itself — Spark's own
-  * inference, its results and its errors.
+  * inference, its results and its errors. A read that any of the listing
+  * rules sends to Spark for ANY of its paths makes no one-partition
+  * claim.
   *
-  * The reader keeps no state: a footer read costs a few milliseconds,
-  * and every read sees the files and session settings of its own call.
+  * The reader keeps no state: a listing and a footer read cost a few
+  * milliseconds, and every read sees the files and session settings of
+  * its own call.
   */
 object Parquet {
 
   def read(spark: SparkSession, paths: String*): DataFrame = {
     require(paths.nonEmpty, "Parquet.read needs a path")
-    footerSchema(spark, paths.last) match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+    dataFiles(spark, paths.last).flatMap(fs => footerSchema(spark, fs).map((fs, _))) match {
+      case Some((newest, s)) =>
+        val df = spark.read.schema(s).parquet(paths: _*)
+        if (byteLight(spark, newest, paths.init)) df.coalesce(1) else df
       case None => spark.read.parquet(paths: _*)
     }
   }
@@ -52,7 +75,9 @@ object Parquet {
   private val summaryFiles = Set(
     ParquetFileWriter.PARQUET_METADATA_FILE, ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
 
-  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+  /** The data files Spark's file index lists for `path`, or None when the
+    * read of `path` is Spark's own (see the fallback above). */
+  private def dataFiles(spark: SparkSession, path: String): Option[Seq[FileStatus]] = {
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
         path.exists("{}[]*?\\".contains(_))) return None
     val p = new Path(path)
@@ -62,8 +87,20 @@ object Parquet {
         if (top.isDirectory) fs.listStatus(p).toSeq.filter(f => FooterSchema.listed(f.getPath.getName))
         else Seq(top)
       if (entries.exists(f => f.isDirectory || summaryFiles(f.getPath.getName))) None
-      else entries.minByOption(_.getPath.toString)
-        .flatMap(f => Try(FooterSchema.of(spark, f)).toOption)
+      else Some(entries)
     }
+  }
+
+  private def footerSchema(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] =
+    files.minByOption(_.getPath.toString).flatMap(f => Try(FooterSchema.of(spark, f)).toOption)
+
+  /** Do `newest` and the data files of `older` total at most one file
+    * open? Lists the older paths only while the running total fits. */
+  private def byteLight(spark: SparkSession, newest: Seq[FileStatus], older: Seq[String]): Boolean = {
+    val limit = spark.sessionState.conf.filesOpenCostInBytes
+    def bytes(files: Seq[FileStatus]) = files.map(_.getLen).sum
+    older.view.map(dataFiles(spark, _))
+      .scanLeft(Option(bytes(newest)))((total, files) => for (t <- total; f <- files) yield t + bytes(f))
+      .forall(_.exists(_ <= limit))
   }
 }

@@ -35,10 +35,13 @@ class BucketingSpec extends AnyFunSuite {
       assert(joined.count() == Tables.lineitem(spark, d).count())
 
       // control: the same join over the raw (unbucketed) parquet DOES
-      // plan exchanges
-      val rawPlan = Tables.lineitem(spark, d)
-        .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
-        .queryExecution.executedPlan.toString
+      // plan exchanges, once the tables are read as split scans as
+      // inputs above one file open are (a one-partition read needs none)
+      val rawPlan = TestSpark.withSplitScans {
+        Tables.lineitem(spark, d)
+          .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
+          .queryExecution.executedPlan.toString
+      }
       assert(rawPlan.contains("Exchange"), s"control join should shuffle:\n$rawPlan")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)

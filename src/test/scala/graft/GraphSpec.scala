@@ -199,9 +199,11 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("gramMatrixAgg exchange carries one moment blob per partition, not entry rows") {
-    val df = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val q = EmbedStats.gramMatrixAgg(df, "embedding", dim = 64)
-    val plan = q.queryExecution.executedPlan.toString
+    // split scans: a one-partition read would need no exchange at all
+    val plan = TestSpark.withSplitScans {
+      val df = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      EmbedStats.gramMatrixAgg(df, "embedding", dim = 64).queryExecution.executedPlan.toString
+    }
     assert(plan.contains("ObjectHashAggregate") && plan.contains("partial_gram_agg"), plan)
     // the Generate (explode to entry rows) sits ABOVE the single-partition
     // exchange: entries exist only after the final merge

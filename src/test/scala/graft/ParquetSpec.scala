@@ -7,7 +7,11 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +19,10 @@ import graft.sources.Parquet
 
 /** [[graft.sources.Parquet]]: the driver-side footer reader gives the
   * schema Spark's own inference gives, starts no job, and hands every
-  * case it does not cover to `spark.read.parquet` unchanged.
+  * case it does not cover to `spark.read.parquet` unchanged. A listing
+  * of at most `openCostInBytes` reads as one partition, with no exchange
+  * under its aggregates and joins, while explicit repartitions still fan
+  * it out.
   */
 class ParquetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -30,6 +37,28 @@ class ParquetSpec extends AnyFunSuite {
 
   private def fresh(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** A directory of four parquet files, a few KB in all: above one
+    * split per file on a multi-core session, far below one file open. */
+  private def fourFiles(prefix: String): String = {
+    val dir = fresh(prefix) + "/t"
+    spark.range(0, 400).selectExpr("id % 7 AS k", "id AS v").repartition(4).write.parquet(dir)
+    assert(Files.list(Paths.get(dir)).iterator().asScala.count(_.toString.endsWith(".parquet")) == 4)
+    dir
+  }
+
+  private def listedBytes(dir: String): Long =
+    Files.list(Paths.get(dir)).iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(Files.size(_)).sum
+
+  /** The nodes of `df`'s AQE-final plan, after running it. */
+  private def finalPlan(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  private def shuffles(df: DataFrame): Int =
+    finalPlan(df).count(_.isInstanceOf[ShuffleExchangeExec])
 
   /** Jobs `body` starts: the ids between a start and an end marker job,
     * so events still queued from earlier work are not counted and every
@@ -62,9 +91,9 @@ class ParquetSpec extends AnyFunSuite {
 
   /** Same outcome as `spark.read.parquet`: an equal schema, or a failure
     * of the same class (and error condition, for Spark's own errors). */
-  private def assertSameSchema(mine: => org.apache.spark.sql.DataFrame,
-                               theirs: => org.apache.spark.sql.DataFrame): Unit = {
-    def outcome(df: => org.apache.spark.sql.DataFrame) = Try(df.schema).toEither.left.map { e =>
+  private def assertSameSchema(mine: => DataFrame,
+                               theirs: => DataFrame): Unit = {
+    def outcome(df: => DataFrame) = Try(df.schema).toEither.left.map { e =>
       (e.getClass.getName, e match {
         case t: org.apache.spark.SparkThrowable => Option(t.getCondition)
         case _ => None
@@ -132,6 +161,65 @@ class ParquetSpec extends AnyFunSuite {
     val merged = Parquet.read(session("spark.sql.parquet.mergeSchema" -> "true"), old, newest)
     assert(merged.schema.map(f => (f.name, f.dataType)).toSet ==
       Set("k" -> LongType, "s" -> StringType, "d" -> DoubleType))
+  }
+
+  test("a 4-file listing of a few KB reads as one partition; Spark's own read plans a split per file") {
+    val dir = fourFiles("graft-pq-one")
+    assert(listedBytes(dir) <= spark.sessionState.conf.filesOpenCostInBytes)
+    assert(Parquet.read(spark, dir).rdd.getNumPartitions == 1)
+    assert(spark.read.parquet(dir).rdd.getNumPartitions == 4) // local[8]: one split per file
+    assert(Parquet.read(spark, dir).orderBy("v").collect().toSeq ==
+      spark.read.parquet(dir).orderBy("v").collect().toSeq)
+  }
+
+  test("an aggregate and an equi-join over one-partition reads plan no shuffle exchange") {
+    val (a, b) = (fourFiles("graft-pq-agg-a"), fourFiles("graft-pq-agg-b"))
+    val agg = Parquet.read(spark, a).groupBy("k").count()
+    assert(shuffles(agg) == 0, agg.queryExecution.executedPlan)
+    assert(agg.orderBy("k").collect().toSeq ==
+      spark.read.parquet(a).groupBy("k").count().orderBy("k").collect().toSeq)
+    // no broadcast, so the join is a sort-merge join that needs both sides clustered
+    val s = session("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val join = Parquet.read(s, a).join(Parquet.read(s, b).withColumnRenamed("v", "w"), "k")
+    assert(shuffles(join) == 0, join.queryExecution.executedPlan)
+    assert(join.count() == s.read.parquet(a).join(s.read.parquet(b).withColumnRenamed("v", "w"), "k").count())
+  }
+
+  test("the size test reads openCostInBytes from the session: below the listing, Spark's splits and exchange stay") {
+    val dir = fourFiles("graft-pq-cost")
+    val bytes = listedBytes(dir)
+    val atLimit = session("spark.sql.files.openCostInBytes" -> bytes.toString)
+    assert(Parquet.read(atLimit, dir).rdd.getNumPartitions == 1)
+    val below = session("spark.sql.files.openCostInBytes" -> (bytes - 1).toString)
+    val split = below.read.parquet(dir).rdd.getNumPartitions
+    assert(split > 1 && Parquet.read(below, dir).rdd.getNumPartitions == split)
+    assert(shuffles(Parquet.read(below, dir).groupBy("k").count()) == 1)
+    // an older path that Spark lists on its own terms (a glob) voids the claim too
+    val older = fourFiles("graft-pq-cost-glob")
+    assert(Parquet.read(spark, s"$older/*.parquet", dir).rdd.getNumPartitions > 1)
+    assert(Parquet.read(spark, older, dir).rdd.getNumPartitions == 1)
+  }
+
+  test("explicit repartitions and Parallelism.widened still fan out a one-partition read") {
+    val df = Parquet.read(spark, fourFiles("graft-pq-fan"))
+    assert(df.rdd.getNumPartitions == 1)
+    val keyed = df.repartition(5, col("k"))
+    assert(keyed.rdd.getNumPartitions == 5)
+    assert(!finalPlan(keyed).exists(_.isInstanceOf[CoalesceExec]), keyed.queryExecution.executedPlan)
+    assert(df.repartition(3).rdd.getNumPartitions == 3)
+    val widened = graft.operators.Parallelism.widened(df)
+    assert(widened.rdd.getNumPartitions == graft.operators.Parallelism.shards(spark))
+    assert(widened.groupBy("k").count().collect().map(_.getLong(1)).sum == 400)
+  }
+
+  test("a filter over a one-partition read still pushes into the scan") {
+    val dir = fourFiles("graft-pq-push")
+    val df = Parquet.read(spark, dir).filter(col("k") === 3)
+    val plan = finalPlan(df)
+    assert(plan.exists(_.isInstanceOf[CoalesceExec]), df.queryExecution.executedPlan)
+    assert(df.queryExecution.executedPlan.toString.contains("PushedFilters: [IsNotNull(k), EqualTo(k,3)]"),
+      df.queryExecution.executedPlan)
+    assert(df.count() == spark.read.parquet(dir).filter(col("k") === 3).count())
   }
 
   test("in src/main only Parquet.scala reads parquet") {

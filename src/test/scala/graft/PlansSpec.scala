@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression guards on the physical plans of key queries — the scale
   * properties (pushdown, pruning, broadcast, codegen) that local-mode
-  * row counts can't see.
+  * row counts can't see. Guards on exchanges and codegen stages run
+  * over split scans (`scaleTest`): the test tables are small enough
+  * that [[graft.sources.Parquet.read]] would otherwise read each as one
+  * partition with no exchange above it.
   */
 class PlansSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -14,6 +17,14 @@ class PlansSpec extends AnyFunSuite {
 
   private def planOf(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+
+  /** A guard on the plan of inputs above one file open (exchange
+    * placement, shuffle volume, codegen stages): its tables read as split
+    * scans ([[TestSpark.withSplitScans]]). At the test tables' size a
+    * one-partition read plans no exchange to guard, and its `Coalesce`
+    * starts a new codegen stage. */
+  private def scaleTest(name: String)(body: => Any)(implicit pos: org.scalactic.source.Position): Unit =
+    test(name)(TestSpark.withSplitScans(body))
 
   test("PLANS.md annotations: one per query, each a SparkEntry query") {
     val names = Plans.Annotated.map(_._1)
@@ -47,7 +58,7 @@ class PlansSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p) // partial + final
   }
 
-  test("q_title_case / custom expressions stay inside WholeStageCodegen") {
+  scaleTest("q_title_case / custom expressions stay inside WholeStageCodegen") {
     val p = planOf("q_title_case")
     // whole-stage codegen renders as a "*(n)" stage prefix in toString
     assert(p.contains("*(1) Project"), p)
@@ -61,7 +72,7 @@ class PlansSpec extends AnyFunSuite {
     assert(!p.contains("ShuffleExchange") || p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("TopKPerGroup custom operator: equals the window form, prunes before the exchange") {
+  scaleTest("TopKPerGroup custom operator: equals the window form, prunes before the exchange") {
     GraftExtensions.register(spark)
     val orders = Tables.orders(spark, sf)
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
@@ -106,14 +117,14 @@ class PlansSpec extends AnyFunSuite {
     assert(!p.contains("Exchange"), p)
   }
 
-  test("q_ewma: one hash exchange + one sort on the key serve the trailing-frame window") {
+  scaleTest("q_ewma: one hash exchange + one sort on the key serve the trailing-frame window") {
     val p = planOf("q_ewma")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
     assert(!p.contains("rangepartitioning"), p) // never a global sort
     assert("\\bSort \\[".r.findAllIn(p).size == 1, p)
   }
 
-  test("q_skyline: stage-1 windows hash-partition by bucket; no dominance join in the plan") {
+  scaleTest("q_skyline: stage-1 windows hash-partition by bucket; no dominance join in the plan") {
     val p = planOf("q_skyline")
     assert(p.contains("Exchange hashpartitioning(__b"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
@@ -147,7 +158,7 @@ class PlansSpec extends AnyFunSuite {
     assert("SortMergeJoin".r.findAllIn(p).size == 1 && p.contains("FullOuter"), p)
   }
 
-  test("identical aggregate subplans reuse one exchange (self-join diamond)") {
+  scaleTest("identical aggregate subplans reuse one exchange (self-join diamond)") {
     val agg = Tables.customer(spark, sf)
       .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n"))
     // byte-identical subplan on both legs -> Spark computes the shuffle once
@@ -158,7 +169,7 @@ class PlansSpec extends AnyFunSuite {
       || plan.toLowerCase.contains("reused"), plan)
   }
 
-  test("unigramLogProb reuses the corpus token-count exchange for the total (no second pass)") {
+  scaleTest("unigramLogProb reuses the corpus token-count exchange for the total (no second pass)") {
     val docs = Tables.documents(spark, sf)
     val df = graft.text.Curation.unigramLogProb(docs, "text", "doc_id")
     df.queryExecution.toRdd.foreach(_ => ()) // AQE-final plan
@@ -207,7 +218,7 @@ class PlansSpec extends AnyFunSuite {
     assert(strat("shuffle_hash").contains("ShuffledHashJoin"))
   }
 
-  test("q_session_window: MergingSessions over a local sort, one exchange on user_id") {
+  scaleTest("q_session_window: MergingSessions over a local sort, one exchange on user_id") {
     val p = planOf("q_session_window")
     assert(p.contains("MergingSessions"), p)
     // partial agg BELOW the exchange: session fragments combine map-side
@@ -355,7 +366,7 @@ class PlansSpec extends AnyFunSuite {
         s"(edges=$nEdges, ids=$nIds, bound=$bound)")
   }
 
-  test("q_holt: shuffle records bounded by the hourly series, not the event corpus") {
+  scaleTest("q_holt: shuffle records bounded by the hourly series, not the event corpus") {
     val d01 = "/root/testdata/sf0.01"
     val nBuckets = Tables.events(spark, d01)
       .select(col("event_type"), expr("ts div 3600000000000").as("b"))
@@ -374,7 +385,7 @@ class PlansSpec extends AnyFunSuite {
       s"q_holt shuffled $shuffled records for $nBuckets series buckets (bound=$bound)")
   }
 
-  test("q_dedup_minhash: shuffle records bounded by banded docs + capped candidate pairs") {
+  scaleTest("q_dedup_minhash: shuffle records bounded by banded docs + capped candidate pairs") {
     val d01 = "/root/testdata/sf0.01"
     val docs = Tables.documents(spark, d01)
     val nDocs = docs.count()
@@ -395,7 +406,7 @@ class PlansSpec extends AnyFunSuite {
         s"(docs=$nDocs, candidates=$nCand, bound=$bound)")
   }
 
-  test("q_dedup_ngram: shuffle records bounded by shingle volume + DF-capped pairs") {
+  scaleTest("q_dedup_ngram: shuffle records bounded by shingle volume + DF-capped pairs") {
     val d01 = "/root/testdata/sf0.01"
     val docs = Tables.documents(spark, d01)
     val totTok = docs

@@ -26,10 +26,23 @@ object TestSpark {
     * shard count of [[graft.operators.RankedStats.withCumulative]] —
     * and restores the previous value afterwards. Keep every action that
     * should see `n` inside `body`. */
-  def withShufflePartitions[T](n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+  def withShufflePartitions[T](n: Int)(body: => T): T =
+    withConf("spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** Runs `body` with `spark.sql.files.openCostInBytes` at 1 byte, so
+    * [[graft.sources.Parquet.read]] claims no listing as one partition
+    * and every scan keeps Spark's splits — the plan shape of tables
+    * above one file open (4 MB by default). The test tables are far
+    * below it, so without this their aggregates, windows and joins plan
+    * no exchange at all; the guards on exchange placement and shuffle
+    * volume describe the plans of larger inputs. Keep the query's
+    * construction inside `body`: the reader decides at call time. */
+  def withSplitScans[T](body: => T): T =
+    withConf("spark.sql.files.openCostInBytes", "1")(body)
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toLong)
+    spark.conf.set(key, value)
     try body finally spark.conf.set(key, prev)
   }
 
