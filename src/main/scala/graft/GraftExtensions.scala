@@ -93,6 +93,10 @@ object GraftExtensions {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.ReuseProjectedExpensiveInFilter
     }
+    if (!spark.experimental.extraOptimizations.contains(graft.sources.Parquet.DropClaims)) {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.sources.Parquet.DropClaims
+    }
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKStrategy

@@ -831,7 +831,7 @@ object SparkEntry {
 
   /** Multimodal decode with a REAL codec: deterministic two-tone PNGs
     * (dimensions/colors planted from doc_id) are encoded AND decoded
-    * through `javax.imageio` inside the scan stage; the oracle computes
+    * through `javax.imageio` in one stage over the widened ids; the oracle computes
     * the planted values arithmetically, so it verifies the actual
     * encode→decode round trip — a fake decode cannot match. */
   private def qMultimodal(s: SparkSession, d: String): DataFrame = {

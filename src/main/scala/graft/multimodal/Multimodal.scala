@@ -191,9 +191,18 @@ object Codec {
   * of mapInPandas — partition-sized batches through a case-class
   * boundary), with a REAL image codec ([[Codec]], JDK `javax.imageio`).
   *
-  * Scale: encode/decode run inside the scan stage (no shuffle);
-  * partition sizes are controlled by `spark.sql.files.maxPartitionBytes`,
-  * so each task holds only its batch of payloads in memory. Frame
+  * Scale: PNG encode and decode cost CPU per row, not per scanned byte,
+  * so [[synthesizeImages]] and [[synthesizeVideos]] fan their ids out
+  * with [[graft.operators.Parallelism.widened]] before encoding: a
+  * byte-light id scan plans one split (or one partition, under
+  * [[graft.sources.Parquet.read]]'s one-partition claim) and would
+  * otherwise encode and decode on one task. WAV framing is a byte copy
+  * per row, cheaper than the exchange job widening adds (q_audio_decode
+  * at sf0.1 on 4 cores: 0.35-0.41 s unwidened, 0.46-0.47 s widened), so
+  * [[synthesizeAudio]] encodes in the scan's own partitions. A scan of
+  * more splits than the shard count is left as it is, so at scale the
+  * codecs run in the scan stage with no shuffle, and each task holds
+  * only its batch of payloads in memory. Frame
   * sampling parses the container framing and decodes ONLY the sampled
   * frames — decode cost scales with frames KEPT, not frames stored.
   *
@@ -213,6 +222,15 @@ object Multimodal {
   case class FrameFeatures(media_id: Long, n_frames: Long, frame_idx: Long,
                            width: Long, height: Long, mean_r: Double)
 
+  /** The ids a synthesizer encodes from; `widen` fans them out to the
+    * shard count (see Scale above). */
+  private def ids(df: DataFrame, idCol: String, widen: Boolean)
+                 (implicit spark: SparkSession): Dataset[Long] = {
+    import spark.implicits._
+    val id = df.select(col(idCol).cast("long").as("media_id"))
+    (if (widen) graft.operators.Parallelism.widened(id) else id).as[Long]
+  }
+
   /** Planted image parameters: even width 8..30, height 8..31, left and
     * right tones derived from the id. Per-channel means are exactly
     * (l+r)/2 — see [[Codec.encodePng]].
@@ -222,12 +240,11 @@ object Multimodal {
     ((id % 256).toInt, (id * 7 % 256).toInt, (id * 13 % 256).toInt),
     ((id * 3 % 256).toInt, (id * 11 % 256).toInt, (id * 17 % 256).toInt))
 
-  /** Deterministic PNG payload per id (real encode, scan-stage). */
+  /** Deterministic PNG payload per id (real encode, widened ids). */
   def synthesizeImages(df: DataFrame, idCol: String)
                       (implicit spark: SparkSession): Dataset[MediaRow] = {
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("media_id")).as[Long]
-      .mapPartitions(_.map { id =>
+    ids(df, idCol, widen = true).mapPartitions(_.map { id =>
         val (w, h, l, r) = imageParams(id)
         MediaRow(id, Codec.encodePng(w, h, l, r))
       })
@@ -273,8 +290,7 @@ object Multimodal {
   def synthesizeAudio(df: DataFrame, idCol: String)
                      (implicit spark: SparkSession): Dataset[MediaRow] = {
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("media_id")).as[Long]
-      .mapPartitions(_.map { id =>
+    ids(df, idCol, widen = false).mapPartitions(_.map { id =>
         val (amp, n, period) = audioParams(id)
         val samples = Array.tabulate(n)(i =>
           (if ((i / period) % 2 == 0) amp else -amp).toShort)
@@ -314,8 +330,7 @@ object Multimodal {
   def synthesizeVideos(df: DataFrame, idCol: String)
                       (implicit spark: SparkSession): Dataset[MediaRow] = {
     import spark.implicits._
-    df.select(col(idCol).cast("long").as("media_id")).as[Long]
-      .mapPartitions(_.map { id =>
+    ids(df, idCol, widen = true).mapPartitions(_.map { id =>
         val frames = (0 to (id % 30).toInt).map { f =>
           val tone = (((id + f) % 256).toInt, ((id * 5 + f) % 256).toInt, ((id * 9 + f) % 256).toInt)
           Codec.encodePng(8, 8, tone, tone)

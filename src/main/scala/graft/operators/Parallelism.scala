@@ -36,11 +36,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * listing of at most the session's `openCostInBytes` (4 MB by default)
   * is claimed as ONE partition (`coalesce(1)`), so its aggregates and
   * joins plan no exchange and the scan plus its narrow operators run as
-  * one task. Explicit counts still fan such a scan out: a
-  * `repartition(n, ...)` directly over the read drops the coalesce
-  * (`CollapseRepartition`), one over a projection of it is the
-  * exchange that spreads everything above it, and `widened` sees one
-  * planned partition and widens it to [[shards]].
+  * one task. A one-file listing that small is one split anyway; a
+  * multi-file one loses its per-file splits. Explicit counts still fan
+  * such a scan out: a `repartition(n, ...)` directly over the read
+  * drops the coalesce (`CollapseRepartition`), one over a projection of
+  * it is the exchange that spreads everything above it, and `widened`
+  * sees one planned partition and widens it to [[shards]] — which is
+  * why per-row CPU-dense work over a scan (the multimodal codecs,
+  * CrossVal's decimal passes) calls it.
   *
   * `widened` round-robin-repartitions a frame up to [[shards]] ONLY
   * when the planned partition count is below it — at production scale

@@ -5,7 +5,10 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan, Project, Repartition}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFileFormat}
 import org.apache.spark.sql.types.StructType
 
 /** The one parquet reader of the engine: `spark.read.parquet` without
@@ -28,20 +31,40 @@ import org.apache.spark.sql.types.StructType
   *
   * The one-partition claim: when the data files listed under EVERY path
   * total no more than the session's `spark.sql.files.openCostInBytes`
-  * (read at call time) — Spark's own price for opening one file — the
-  * read is `coalesce(1)`. Such a listing has no scan parallelism worth a
-  * shuffle: `CoalesceExec(1)` reports `SinglePartition`, which satisfies
-  * the clustered distribution aggregates and sort-merge joins require,
-  * so no exchange is planned between the scan and them and AQE runs no
-  * query-stage job for one. Filters and column pruning still push into
-  * the scan. Explicit partition counts still fan a claimed scan out: a
-  * `repartition(n, ...)` directly over the read drops the coalesce
-  * (`CollapseRepartition`), one over a projection of it is the exchange
-  * that spreads all work above it, and
+  * (read at call time), the read is `coalesce(1)`. The bound is Spark's
+  * own split rule: a file of at most `openCostInBytes` is never split,
+  * whatever the core count (unless `maxPartitionBytes` is set below
+  * it), so a one-file listing under it is one split anyway and loses
+  * no scan parallelism to the claim. A multi-file listing
+  * under it gets one split per file from Spark only because each file
+  * is charged one open; the claim reads it as the one split the same
+  * bytes make as one file. `CoalesceExec(1)` reports `SinglePartition`,
+  * which satisfies the clustered distribution aggregates and sort-merge
+  * joins require, so no exchange is planned between the scan and them
+  * and AQE runs no query-stage job for one. Filters and column pruning
+  * still push into the scan. Explicit partition counts still fan a
+  * claimed scan out: a `repartition(n, ...)` directly over the read
+  * drops the coalesce (`CollapseRepartition`), one over a projection of
+  * it is the exchange that spreads all work above it, and
   * [[graft.operators.Parallelism.widened]] widens its one partition to
   * the shard count — so the operators' pinned fan-outs hold. A larger
   * listing keeps Spark's split planning, so at scale the reader changes
   * nothing.
+  *
+  * The price of the claim: over a multi-file listing, the scan and the
+  * narrow operators above it run as one task, and `SinglePartition`
+  * carries on through every aggregate, window and join above the read
+  * until an explicit repartition, where AQE would have spread each
+  * exchange of more than `minPartitionSize` (1 MB) over several tasks.
+  * Per-row work whose cost
+  * does not follow the scanned bytes — a codec that expands an id into
+  * a payload — pins its own fan-out, as [[graft.multimodal.Multimodal]]
+  * does with `widened`. A claimed read that one plan reaches through
+  * two branches (a self-join, or one aggregate feeding three) would run
+  * the branches' shared work once per branch, and one exploded before
+  * its first exchange would put the expanded rows on one task;
+  * [[DropClaims]] drops both kinds of claim. Tuning
+  * `openCostInBytes` for file packing moves the claim's bound with it.
   *
   * The fallback: when the last path does not exist (or is a glob), holds
   * no data file, holds subdirectories (hive-style `k=v` partitions),
@@ -93,6 +116,56 @@ object Parquet {
 
   private def footerSchema(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] =
     files.minByOption(_.getPath.toString).flatMap(f => Try(FooterSchema.of(spark, f)).toOption)
+
+  /** Drops the one-partition claims whose exchanges a plan needs, in
+    * two cases the claim would otherwise put on one task:
+    *  - a shared claim: the same claimed scan, columns and filters
+    *    reached by two branches of a diamond or a self-join. Without an
+    *    exchange each branch reruns the scan and the work the branches
+    *    share, since an exchange is the only subplan Spark reuses across
+    *    branches (measured at sf0.1: q_cohen_kappa ran its language-id
+    *    UDF three times, 0.51 -> 1.05 s; q_jaccard_join 2.1 -> 4.4 s).
+    *    With the exchanges back, `ReuseExchange` runs it once;
+    *  - an expanded claim: a `Generate` (explode) over the claimed scan
+    *    through narrow operators. The exchange above it carries the
+    *    expanded rows, not the scan's, and AQE spreads them over the
+    *    cores (q_dedup_ngram: 0.41 -> 0.66 s on one task).
+    * Registered by [[graft.GraftExtensions.register]] in the optimizer
+    * batch after the final pushdown, where a claim sits right above its
+    * pruned scan. A claim is known by that shape, so a caller's own
+    * `coalesce(1)` right above a parquet scan is treated as one. */
+  object DropClaims extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = {
+      val claims = plan.collect { case r: Repartition if claim(r) => r.canonicalized }
+      val shared = claims.groupBy(identity).collect { case (c, n) if n.size > 1 => c }.toSet
+      val expanded = plan.collect { case g: Generate => narrowClaims(g.child) }.flatten
+        .map(_.canonicalized).toSet
+      if (shared.isEmpty && expanded.isEmpty) plan
+      else plan.transformUp {
+        case r: Repartition if claim(r) && (shared(r.canonicalized) || expanded(r.canonicalized)) => r.child
+      }
+    }
+
+    private def claim(r: Repartition): Boolean =
+      r.numPartitions == 1 && !r.shuffle && parquetScan(r.child)
+
+    private def parquetScan(p: LogicalPlan): Boolean = p match {
+      case Project(_, c) => parquetScan(c)
+      case Filter(_, c) => parquetScan(c)
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.fileFormat.isInstanceOf[ParquetFileFormat]
+        case _ => false
+      }
+      case _ => false
+    }
+
+    /** The claims `p` reaches through narrow operators only. */
+    private def narrowClaims(p: LogicalPlan): Seq[Repartition] = p match {
+      case r: Repartition if claim(r) => Seq(r)
+      case _: Project | _: Filter | _: Generate => narrowClaims(p.children.head)
+      case _ => Nil
+    }
+  }
 
   /** Do `newest` and the data files of `older` total at most one file
     * open? Lists the older paths only while the running total fits. */

@@ -35,9 +35,9 @@ class BucketingSpec extends AnyFunSuite {
       assert(joined.count() == Tables.lineitem(spark, d).count())
 
       // control: the same join over the raw (unbucketed) parquet DOES
-      // plan exchanges, once the tables are read as split scans as
-      // inputs above one file open are (a one-partition read needs none)
-      val rawPlan = TestSpark.withSplitScans {
+      // plan exchanges, once the tables are read one split per file with
+      // no one-partition claim (a claimed read needs none)
+      val rawPlan = TestSpark.withFileSplits {
         Tables.lineitem(spark, d)
           .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
           .queryExecution.executedPlan.toString

@@ -199,8 +199,8 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("gramMatrixAgg exchange carries one moment blob per partition, not entry rows") {
-    // split scans: a one-partition read would need no exchange at all
-    val plan = TestSpark.withSplitScans {
+    // file splits: a one-partition read would need no exchange at all
+    val plan = TestSpark.withFileSplits {
       val df = Tables.embeddings(spark, "/root/testdata/sf0.001")
       EmbedStats.gramMatrixAgg(df, "embedding", dim = 64).queryExecution.executedPlan.toString
     }

@@ -10,8 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.functions.{col, explode, lit, sequence}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -172,6 +172,17 @@ class ParquetSpec extends AnyFunSuite {
       spark.read.parquet(dir).orderBy("v").collect().toSeq)
   }
 
+  test("a one-file listing within the bound is one split in Spark's own read: the claim keeps its parallelism") {
+    val dir = fresh("graft-pq-onefile") + "/t"
+    spark.range(0, 400).selectExpr("id % 7 AS k", "id AS v").coalesce(1).write.parquet(dir)
+    // at the bound itself, the smallest openCostInBytes the claim accepts
+    val atLimit = session("spark.sql.files.openCostInBytes" -> listedBytes(dir).toString)
+    for (s <- Seq(spark, atLimit)) {
+      assert(s.read.parquet(dir).rdd.getNumPartitions == 1)
+      assert(Parquet.read(s, dir).rdd.getNumPartitions == 1)
+    }
+  }
+
   test("an aggregate and an equi-join over one-partition reads plan no shuffle exchange") {
     val (a, b) = (fourFiles("graft-pq-agg-a"), fourFiles("graft-pq-agg-b"))
     val agg = Parquet.read(spark, a).groupBy("k").count()
@@ -198,6 +209,25 @@ class ParquetSpec extends AnyFunSuite {
     val older = fourFiles("graft-pq-cost-glob")
     assert(Parquet.read(spark, s"$older/*.parquet", dir).rdd.getNumPartitions > 1)
     assert(Parquet.read(spark, older, dir).rdd.getNumPartitions == 1)
+  }
+
+  test("a one-partition read that two branches of one plan share is not claimed: its exchange is reused") {
+    val counts = Parquet.read(spark, fourFiles("graft-pq-shared")).groupBy("k").count()
+    assert(shuffles(counts) == 0) // one consumer: claimed
+    val self = counts.join(counts.withColumnRenamed("count", "c2"), "k")
+    val plan = finalPlan(self)
+    assert(!plan.exists(_.isInstanceOf[CoalesceExec]), self.queryExecution.executedPlan)
+    assert(plan.exists(_.isInstanceOf[ReusedExchangeExec]), self.queryExecution.executedPlan)
+    assert(self.collect().map(r => r.getLong(1) - r.getLong(2)).toSeq == Seq.fill(7)(0L))
+  }
+
+  test("a one-partition read exploded before its first aggregate is not claimed: the exchange carries the expanded rows") {
+    val dir = fourFiles("graft-pq-explode")
+    val grams = Parquet.read(spark, dir)
+      .select(explode(sequence(lit(0L), col("v") % 5)).as("g")).groupBy("g").count()
+    assert(!finalPlan(grams).exists(_.isInstanceOf[CoalesceExec]), grams.queryExecution.executedPlan)
+    assert(shuffles(grams) == 1)
+    assert(grams.collect().map(_.getLong(1)).sum == (0 until 400).map(_ % 5 + 1).sum)
   }
 
   test("explicit repartitions and Parallelism.widened still fan out a one-partition read") {

@@ -27,23 +27,29 @@ object TestSpark {
     * and restores the previous value afterwards. Keep every action that
     * should see `n` inside `body`. */
   def withShufflePartitions[T](n: Int)(body: => T): T =
-    withConf("spark.sql.shuffle.partitions", n.toString)(body)
+    withConf("spark.sql.shuffle.partitions" -> n.toString)(body)
 
-  /** Runs `body` with `spark.sql.files.openCostInBytes` at 1 byte, so
-    * [[graft.sources.Parquet.read]] claims no listing as one partition
-    * and every scan keeps Spark's splits — the plan shape of tables
-    * above one file open (4 MB by default). The test tables are far
-    * below it, so without this their aggregates, windows and joins plan
-    * no exchange at all; the guards on exchange placement and shuffle
-    * volume describe the plans of larger inputs. Keep the query's
-    * construction inside `body`: the reader decides at call time. */
-  def withSplitScans[T](body: => T): T =
-    withConf("spark.sql.files.openCostInBytes", "1")(body)
+  /** Runs `body` with Spark's own split planning of the fixture tables —
+    * one split per file, as Spark plans any file of at most
+    * `openCostInBytes` — and no listing claimed as one partition by
+    * [[graft.sources.Parquet.read]]: `openCostInBytes` at 1 byte voids
+    * the claim, and `minPartitionNum` at 1 keeps each file one split
+    * (it would otherwise be cut into per-core byte ranges). The fixtures
+    * are far below one file open, so without this their aggregates,
+    * windows and joins plan no exchange at all; the guards on exchange
+    * placement and shuffle volume describe the plans of scans that feed
+    * an exchange. Keep the query's construction inside `body`: the
+    * reader decides at call time. */
+  def withFileSplits[T](body: => T): T =
+    withConf("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1")(body)
 
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try body finally spark.conf.set(key, prev)
+  private def withConf[T](settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Total shuffle-WRITE RECORDS across every stage `body` runs —
