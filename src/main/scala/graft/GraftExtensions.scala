@@ -81,22 +81,11 @@ object GraftExtensions {
     if (spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold") == "10")
       spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold",
         graft.dedup.IncrementalDedup.MaxPayloadIdCollect)
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.CollapseTitleCase)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.CollapseTitleCase
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SimplifyGraftNullGuards)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SimplifyGraftNullGuards
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.ReuseProjectedExpensiveInFilter)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.ReuseProjectedExpensiveInFilter
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.sources.Parquet.DropClaims)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sources.Parquet.DropClaims
-    }
+    val rules = Seq(graft.plans.CollapseTitleCase, graft.plans.SimplifyGraftNullGuards,
+      graft.plans.ReuseProjectedExpensiveInFilter, graft.sources.Parquet.DropClaims,
+      graft.sources.CheckpointScope.ClaimOnePartition)
+    spark.experimental.extraOptimizations ++=
+      rules.filterNot(spark.experimental.extraOptimizations.contains)
     if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.TopKStrategy

@@ -62,12 +62,36 @@ object Decontaminate {
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("__df") <= maxBenchDf)
       .drop("__df")
-    val csh = corpus.select(col(idCol).cast("long").as("doc_id"),
-      explode(Dedup.shingles(lower(col(textCol)), n)).as("s"))
-    csh.join(broadcast(capped), "s")
+    overlapsWith(capped, corpus, textCol, idCol, n, minOverlap)
+  }
+
+  /** The (doc_id, bench_id, n_overlap) pairs of `corpus` docs sharing
+    * >= `minOverlap` distinct n-grams with the broadcast `(s, bench_id)`
+    * shingle table `benchSide`. */
+  private def overlapsWith(benchSide: DataFrame, corpus: DataFrame,
+                           textCol: String, idCol: String,
+                           n: Int, minOverlap: Int): DataFrame =
+    corpus.select(col(idCol).cast("long").as("doc_id"),
+        explode(Dedup.shingles(lower(col(textCol)), n)).as("s"))
+      .join(broadcast(benchSide), "s")
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).cast("long").as("n_overlap"))
       .filter(col("n_overlap") >= minOverlap)
+
+  /** [[flag]]'s verdict from overlap `pairs`: each doc's worst benchmark
+    * doc (highest overlap, then lowest bench id), with every clean
+    * `corpus` doc kept as nulls when `keepClean`. */
+  private def worstPerDoc(pairs: DataFrame, corpus: DataFrame, idCol: String,
+                          keepClean: Boolean): DataFrame = {
+    val worst = pairs.groupBy(col("doc_id"))
+      .agg(max(col("n_overlap")).as("max_overlap"),
+        min_by(col("bench_id"),
+          struct((-col("n_overlap")).as("neg"), col("bench_id"))).as("worst_bench_id"))
+      .withColumn("contaminated", lit(true))
+    if (!keepClean) worst
+    else corpus.select(col(idCol).cast("long").as("doc_id"))
+      .join(worst, Seq("doc_id"), "left")
+      .na.fill(Map("contaminated" -> false))
   }
 
   /** Per-corpus-doc verdict: worst overlapping benchmark doc and whether
@@ -78,20 +102,9 @@ object Decontaminate {
            textCol: String, idCol: String,
            benchTextCol: String, benchIdCol: String,
            n: Int = 3, minOverlap: Int = 2,
-           maxBenchDf: Int = 1000, keepClean: Boolean = true): DataFrame = {
-    val pairs = overlapPairs(corpus, bench, textCol, idCol,
-      benchTextCol, benchIdCol, n, minOverlap, maxBenchDf)
-    val worst = pairs.groupBy(col("doc_id"))
-      .agg(max(col("n_overlap")).as("max_overlap"),
-        // deterministic tie-break: highest overlap, then lowest bench id
-        min_by(col("bench_id"),
-          struct((-col("n_overlap")).as("neg"), col("bench_id"))).as("worst_bench_id"))
-      .withColumn("contaminated", lit(true))
-    if (!keepClean) worst
-    else corpus.select(col(idCol).cast("long").as("doc_id"))
-      .join(worst, Seq("doc_id"), "left")
-      .na.fill(Map("contaminated" -> false))
-  }
+           maxBenchDf: Int = 1000, keepClean: Boolean = true): DataFrame =
+    worstPerDoc(overlapPairs(corpus, bench, textCol, idCol,
+      benchTextCol, benchIdCol, n, minOverlap, maxBenchDf), corpus, idCol, keepClean)
 
   /** Build the PERSISTED benchmark fingerprint index — the ingest face
     * of decontamination: the capped `(s, bench_id)` shingle table is
@@ -112,12 +125,11 @@ object Decontaminate {
                       maxBenchDf: Int = 1000): Long = {
     val bsh = bench.select(col(idCol).cast("long").as("bench_id"),
       explode(Dedup.shingles(lower(col(textCol)), n)).as("s"))
-    val capped = bsh
+    val (capped, rows) = graft.sources.CheckpointScope.pinMeasured(bsh
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("__df") <= maxBenchDf)
-      .select(col("s"), col("bench_id"), lit(n).as("n"))
-      .localCheckpoint()
-    val files = math.max(1L, capped.count() / 400000L).toInt
+      .select(col("s"), col("bench_id"), lit(n).as("n")), count(lit(1)))
+    val files = math.max(1L, rows / 400000L).toInt
     graft.sources.VersionedTable.commit(
       (if (files <= 1) capped.coalesce(1)
        else capped.repartitionByRange(files, col("s")))
@@ -162,21 +174,7 @@ object Decontaminate {
         s"mixed shingle widths in $table: ${mm.getInt(0)}..${mm.getInt(1)} — rebuild")
       Integer.valueOf(mm.getInt(0))
     })
-    val csh = corpus.select(col(idCol).cast("long").as("doc_id"),
-      explode(Dedup.shingles(lower(col(textCol)), n)).as("s"))
-    val pairs = csh
-      .join(broadcast(idx.select(col("s"), col("bench_id"))), "s")
-      .groupBy(col("doc_id"), col("bench_id"))
-      .agg(count(lit(1)).cast("long").as("n_overlap"))
-      .filter(col("n_overlap") >= minOverlap)
-    val worst = pairs.groupBy(col("doc_id"))
-      .agg(max(col("n_overlap")).as("max_overlap"),
-        min_by(col("bench_id"),
-          struct((-col("n_overlap")).as("neg"), col("bench_id"))).as("worst_bench_id"))
-      .withColumn("contaminated", lit(true))
-    if (!keepClean) worst
-    else corpus.select(col(idCol).cast("long").as("doc_id"))
-      .join(worst, Seq("doc_id"), "left")
-      .na.fill(Map("contaminated" -> false))
+    worstPerDoc(overlapsWith(idx.select(col("s"), col("bench_id")), corpus,
+      textCol, idCol, n, minOverlap), corpus, idCol, keepClean)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.CheckpointScope
 import graft.sources.CheckpointScope.{generations, unchanged}
 
 /** Deduplication operators for a 100 TB training-data pipeline. Four
@@ -233,8 +234,8 @@ object Dedup {
                            maxBucket: Int = 1000,
                            maxCandidatesPerDoc: Int = 100): (DataFrame, Int) = {
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    val sigs = minhashSignatures(df, textCol, idCol, k).localCheckpoint()
-    val nDocs = sigs.count()
+    val (sigs, nDocs) =
+      CheckpointScope.pinMeasured(minhashSignatures(df, textCol, idCol, k), count(lit(1)))
     val budget = maxCandidatesPerDoc.toLong * nDocs
     val start = deriveMinhashBanding(k, minJaccard, recallTarget)
     val ladder = (1 to k).filter(k % _ == 0).filter(_ >= start)
@@ -451,8 +452,7 @@ object Dedup {
     require(radii.forall(r => 64 % (r + 1) == 0),
       s"each radius+1 must divide the 64-bit signature (got $radii)")
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    val sigs = simhash(df, textCol, idCol).localCheckpoint()
-    val nDocs = sigs.count()
+    val (sigs, nDocs) = CheckpointScope.pinMeasured(simhash(df, textCol, idCol), count(lit(1)))
     val budget = maxCandidatesPerDoc.toLong * nDocs
     val probed = collection.mutable.Map.empty[Int, DataFrame]
     def verifiedAt(r: Int): DataFrame = probed.getOrElseUpdate(r, {

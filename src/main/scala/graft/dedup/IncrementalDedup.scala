@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Parquet, VersionedTable}
+import graft.sources.{CheckpointScope, Parquet, VersionedTable}
 
 /** Incremental corpus dedup against a persisted signature index —
   * the 100 TB operating mode. A production corpus is not deduped by
@@ -697,11 +697,9 @@ object IncrementalDedup {
 
   /** Ingest-side bump: replace THIS writer's file. Single-owner, so the
     * write needs no compare-and-swap — monotonicity of the global max
-    * falls out of per-writer ownership. The value may be lower than the
-    * file's previous content only from the same writer's own
-    * tighten-after-commit step (pre-commit bound nRows ≥ post-commit
-    * observed max), which keeps the drift between compactions
-    * O(Σ batch maxes), not O(Σ batch rows).
+    * falls out of per-writer ownership. Each bump adds the batch's exact
+    * max (observed before its commit), which keeps the drift between
+    * compactions O(Σ batch maxes), not O(Σ batch rows).
     */
   private[graft] def bumpOwnHint(tokenFreqTable: String, bound: Long): Unit =
     writeLongFile(maxCntHintDir(tokenFreqTable).resolve(hintWriterId.get()),
@@ -1234,7 +1232,8 @@ object IncrementalDedup {
                    threshold: Double, batchId: Long, n: Int = 3,
                    txnApp: Option[String] = None,
                    txn: Option[Long] = None): DataFrame = {
-    val rows = indexRows(batch, textCol, idCol, threshold, n).localCheckpoint()
+    val (rows, nRows) =
+      CheckpointScope.pinMeasured(indexRows(batch, textCol, idCol, threshold, n), count(lit(1)))
 
     // Replay detection ([[VersionedTable.txnPin]]): this app's highest
     // committed txn covers ours → the append already happened. The
@@ -1288,39 +1287,26 @@ object IncrementalDedup {
     // partials COMMIT happens here, before the pair pass — same
     // crash-safe order as before (counts land ahead of the index; a
     // failed ingest retries with the txn guard, and an untagged retry
-    // merely over-counts, the performance-safe direction) — so the
-    // batch's max token count falls out of the commit's own write via
-    // observe(): zero extra jobs on the ingest path. The sidecar hint
-    // is bumped BEFORE the commit with the trivial bound (cnt ≤ batch
-    // rows: a token appears at most once per doc prefix) and tightened
-    // to the observed max right after — hint ≥ truth at every crash
-    // point.
-    // checkpointed: the SAME materialized counts serve the tf commit,
-    // the replay-path max agg, AND batchPairs' semi-join build side /
-    // hot-detection batchFreq — without this the explode+groupBy over
-    // the batch's prefix tokens re-ran inside each consumer (up to 3x
-    // O(batch-tokens) on the hot path)
-    val bc = batchTokenCounts(rows).localCheckpoint()
+    // merely over-counts, the performance-safe direction). The batch's
+    // max token count is observed on the counts' own checkpoint job, so
+    // the sidecar hint is bumped to its exact new value BEFORE the
+    // commit — hint ≥ truth at every crash point — at no extra job.
+    // checkpointed: the SAME materialized counts serve the tf commit
+    // AND batchPairs' semi-join build side / hot-detection batchFreq —
+    // without this the explode+groupBy over the batch's prefix tokens
+    // re-ran inside each consumer (up to 3x O(batch-tokens) on the hot
+    // path)
+    val (bc, batchMax) = CheckpointScope.pinMeasured(batchTokenCounts(rows),
+      coalesce(max(col("cnt")), lit(0L)))
     val hint = readMaxCntHint(tf)
-    val nRows = rows.count() // local scan of the checkpoint
-    val batchMax: Long =
-      if (!tfReplayed) {
-        // per-writer hint file ([[bumpOwnHint]]): monotonic across
-        // concurrent writers — a racer can only RAISE the global max
-        (if (tfVer < 0) Some(nRows) else hint.map(_ + nRows))
-          .foreach(bumpOwnHint(tf, _))
-        val obs = org.apache.spark.sql.Observation()
-        VersionedTable.commit(
-          bc.observe(obs, coalesce(max(col("cnt")), lit(0L)).as("mx"))
-            .withColumn("batch", lit(batchId)),
-          tf, "append", txn, txnApp, expectedVersion = None)
-        val mx = obs.getAsJava.get("mx").asInstanceOf[Long]
-        (if (tfVer < 0) Some(mx) else hint.map(_ + mx))
-          .foreach(bumpOwnHint(tf, _))
-        mx
-      } else { // replay: no commit to observe — one tiny agg instead
-        bc.agg(coalesce(max(col("cnt")), lit(0L))).head().getLong(0)
-      }
+    if (!tfReplayed) {
+      // per-writer hint file ([[bumpOwnHint]]): monotonic across
+      // concurrent writers — a racer can only RAISE the global max
+      (if (tfVer < 0) Some(batchMax) else hint.map(_ + batchMax))
+        .foreach(bumpOwnHint(tf, _))
+      VersionedTable.commit(bc.withColumn("batch", lit(batchId)),
+        tf, "append", txn, txnApp, expectedVersion = None)
+    }
     val hotIn = HotInputs(batchFreq = Some(bc),
       batchMaxFreq = Some(batchMax),
       indexMaxCnt = if (snap.isEmpty) Some(0L) else hint)
@@ -1569,20 +1555,20 @@ object IncrementalDedup {
       val sp = spark; import sp.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("id_new", "id_old", "jaccard")
     }
-    val rows = indexRows(probe, textCol, idCol, threshold, n).localCheckpoint()
-    val bc = batchTokenCounts(rows).localCheckpoint()
-    val nRows = rows.count()
+    val (rows, nRows) =
+      CheckpointScope.pinMeasured(indexRows(probe, textCol, idCol, threshold, n), count(lit(1)))
+    // the batch max rides the counts' checkpoint job: no commit here
+    val (bc, batchMax) = CheckpointScope.pinMeasured(batchTokenCounts(rows),
+      coalesce(max(col("cnt")), lit(0L)))
     val snap = VersionedTable.readVersion(spark, indexTable, ver)
       .select(col("id"), col("sz"), col("sh"), col("shh"), col("prefix"))
     val pt = postingsTable(indexTable)
     val nb = readPostingsBuckets(pt).getOrElse(DefaultPostingsBuckets)
     val is = indexSideFor(spark, indexTable, ver, snap, bc, nRows, pt, nb)
-    // read-only hot inputs: no commit to observe, so the batch max is
-    // one tiny agg over the checkpointed counts; the maintained count
-    // table serves index-side frequencies exactly as in ingest
+    // read-only hot inputs: the maintained count table serves
+    // index-side frequencies exactly as in ingest
     val tf = tokenFreqTable(indexTable)
     val hint = readMaxCntHint(tf)
-    val batchMax = bc.agg(coalesce(max(col("cnt")), lit(0L))).head().getLong(0)
     val hotIn = HotInputs(batchFreq = Some(bc),
       batchMaxFreq = Some(batchMax), indexMaxCnt = hint)
     val provablyCold = hint.exists(_ + batchMax <= DefaultHotTokenCap)

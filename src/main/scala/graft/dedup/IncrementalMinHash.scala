@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Parquet, VersionedTable}
+import graft.sources.{CheckpointScope, Parquet, VersionedTable}
 
 /** Incremental MinHash-LSH dedup index — the APPROXIMATE-candidate
   * member of the incremental ingest family (exact AllPairs prefix
@@ -215,8 +215,8 @@ object IncrementalMinHash {
                    txn: Option[Long] = None): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     pinGeometry(indexTable, k, bands)
-    val sigs = Dedup.minhashSignatures(batch, textCol, idCol, k)
-      .localCheckpoint()
+    val (sigs, nRows) = CheckpointScope.pinMeasured(
+      Dedup.minhashSignatures(batch, textCol, idCol, k), count(lit(1)))
     val docs = batch.select(col(idCol).cast("long").as("__id"),
       col(textCol).as("__text"))
 
@@ -225,7 +225,6 @@ object IncrementalMinHash {
     val ver = pin.readVersion
 
     val bb = bandRows(sigs, k, bands).localCheckpoint()
-    val nRows = sigs.count()
 
     // ---- within-batch pairs: banded candidates + exact verify -------
     val withinEdges = Dedup.jaccardOnPairs(docs, "__text", "__id",
@@ -291,12 +290,12 @@ object IncrementalMinHash {
       .getOrElse(throw new IllegalStateException(
         s"no pinned geometry at ${geometryPath(indexTable)} — " +
           "lookup probes an ingested index, which always pins one")))
-    val sigs = Dedup.minhashSignatures(probe, textCol, idCol, k)
-      .localCheckpoint()
+    val (sigs, nRows) = CheckpointScope.pinMeasured(
+      Dedup.minhashSignatures(probe, textCol, idCol, k), count(lit(1)))
     val docs = probe.select(col(idCol).cast("long").as("__id"),
       col(textCol).as("__text"))
     val bb = bandRows(sigs, k, bands).localCheckpoint()
-    probeIndex(spark, indexTable, ver, bb, sigs.count(), bands, docs,
+    probeIndex(spark, indexTable, ver, bb, nRows, bands, docs,
       docStore, textCol, idCol, threshold, n)._2
   }
 

@@ -32,18 +32,42 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (measured: q_cv_ols ran its checkpoint + two aggregate passes as
   * 3-task stages of ~1 s executor time each). Bytes-based splitting is
   * right at scale; it is blind to per-row CPU on small inputs.
-  * [[graft.sources.Parquet.read]] goes one step further on purpose: a
-  * listing of at most the session's `openCostInBytes` (4 MB by default)
-  * is claimed as ONE partition (`coalesce(1)`), so its aggregates and
-  * joins plan no exchange and the scan plus its narrow operators run as
-  * one task. A one-file listing that small is one split anyway; a
-  * multi-file one loses its per-file splits. Explicit counts still fan
-  * such a scan out: a `repartition(n, ...)` directly over the read
-  * drops the coalesce (`CollapseRepartition`), one over a projection of
-  * it is the exchange that spreads everything above it, and `widened`
-  * sees one planned partition and widens it to [[shards]] — which is
-  * why per-row CPU-dense work over a scan (the multimodal codecs,
-  * CrossVal's decimal passes) calls it.
+  *
+  * The byte-light rule goes the other way on purpose, for frames too
+  * small for any split to pay: a frame that holds at most the session's
+  * `spark.sql.files.openCostInBytes` (4 MB by default) is claimed as ONE
+  * partition (`SinglePartition`), so its aggregates, windows and
+  * sort-merge joins plan no exchange and AQE runs no query-stage job for
+  * one. One partition holds every key's rows already, so a claim changes
+  * plans, never results. Two kinds of frame are claimed:
+  *  - a parquet read whose listed data files total at most the bound:
+  *    [[graft.sources.Parquet.read]] returns it `coalesce(1)`. The bound
+  *    is Spark's own split rule — a file of at most `openCostInBytes` is
+  *    never split, whatever the core count — so a one-file listing loses
+  *    no scan parallelism; a multi-file one loses its per-file splits.
+  *    [[graft.sources.Parquet.DropClaims]] drops a claim two branches of
+  *    one plan share (only an exchange is reused across branches) or an
+  *    explode sits above;
+  *  - a checkpoint of one partition whose blocks store at most the bound,
+  *    as the block manager counts them:
+  *    [[graft.sources.CheckpointScope.ClaimOnePartition]]. Spark plans a
+  *    checkpoint as `UnknownPartitioning`, and the optimizer's size
+  *    estimate of one is its lineage's, not its data's. A shared
+  *    checkpoint keeps its claim: re-reading it is a block read.
+  * The price: the frame and the narrow operators above it run as one
+  * task, and `SinglePartition` carries on through every aggregate,
+  * window and join above it until an explicit repartition, where AQE
+  * would have spread an exchange of more than `minPartitionSize` (1 MB)
+  * over several tasks. Per-row work whose cost does not follow the
+  * frame's bytes — a codec that expands an id into a payload — pins its
+  * own fan-out. Explicit counts still fan a claimed frame out: a
+  * `repartition(n, ...)` directly over a claimed read drops the coalesce
+  * (`CollapseRepartition`), one over a projection or a checkpoint is the
+  * exchange that spreads all work above it, and `widened` sees one
+  * planned partition and widens it to [[shards]] — which is why per-row
+  * CPU-dense work (the multimodal codecs, CrossVal's decimal passes)
+  * calls it. Tuning `openCostInBytes` moves both claims with it; at one
+  * byte neither is made.
   *
   * `widened` round-robin-repartitions a frame up to [[shards]] ONLY
   * when the planned partition count is below it — at production scale

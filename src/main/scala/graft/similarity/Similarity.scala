@@ -246,9 +246,9 @@ object Similarity {
     import org.apache.spark.sql.types.BinaryType
 
     requireIntegralId(df, idCol)
-    val drop = cosinePairs(df, embCol, idCol, bucketCol, threshold)
-      .select(col("id_b").as("__drop")).distinct().localCheckpoint()
-    val nDrop = drop.count()
+    val (drop, nDrop) = graft.sources.CheckpointScope.pinMeasured(
+      cosinePairs(df, embCol, idCol, bucketCol, threshold)
+        .select(col("id_b").as("__drop")).distinct(), count(lit(1)))
     if (nDrop == 0L) (drop, None)
     else {
       val capacity = math.max(1024L, nDrop + (nDrop >> 2))

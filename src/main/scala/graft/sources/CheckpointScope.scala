@@ -3,8 +3,12 @@ package graft.sources
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.bridge
 
 /** Deterministic lifecycle for per-query and per-batch `localCheckpoint`
   * blocks. Spark frees a checkpoint's blocks only when the application
@@ -68,7 +72,11 @@ object CheckpointScope {
     * Pin: each step's output is `localCheckpoint`ed — eager, so it is
     * computed once for all its readers, and lineage-cutting, since an
     * update reading the previous generation twice would double its plan
-    * every step. At cluster scale: a reliable `checkpoint()`.
+    * every step. At cluster scale: a reliable `checkpoint()`. A
+    * generation of one partition within the byte-light rule of
+    * [[graft.operators.Parallelism]] plans as one partition
+    * ([[ClaimOnePartition]]): the next step's aggregates and joins over
+    * it plan no exchange.
     *
     * Release: once generation g is materialized, generation g−1 (a pinned
     * `init` included) and the frames step g pinned via [[Step.pin]] are
@@ -102,6 +110,38 @@ object CheckpointScope {
   def unchanged[A](start: A)(measure: DataFrame => A): (DataFrame, Int) => Boolean = {
     var prev = start
     (g, _) => { val m = measure(g); val same = m == prev; prev = m; same }
+  }
+
+  /** `df.localCheckpoint()` and one integral aggregate `metric` over its
+    * rows (a count, a coalesced max), observed on the checkpoint's own
+    * job: the value of a frame that is pinned anyway costs no second job. */
+  def pinMeasured(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val obs = Observation()
+    val pinned = df.observe(obs, metric.as("v")).localCheckpoint()
+    (pinned, obs.get("v").asInstanceOf[Number].longValue)
+  }
+
+  /** Claims `SinglePartition` for a byte-light checkpoint (the rule of
+    * [[graft.operators.Parallelism]]): a `LogicalRDD` whose RDD is
+    * checkpointed, has one partition and stores at most the session's
+    * `spark.sql.files.openCostInBytes`. Without the claim, every
+    * aggregate, window and sort-merge join over a pinned micro-batch
+    * frame plans an exchange that AQE runs as its own job.
+    *
+    * The size is the block manager's (memory plus disk), read without a
+    * job; the optimizer's estimate of a checkpoint is its lineage's, not
+    * its data's (`Long.MaxValue` over 19-272 KB ingest-batch frames).
+    * Registered by [[graft.GraftExtensions.register]]. */
+  object ClaimOnePartition extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+      case r: LogicalRDD if r.outputPartitioning != SinglePartition && byteLight(r) =>
+        r.makeCopy(Array(r.output, r.rdd, SinglePartition, r.outputOrdering,
+          Boolean.box(r.isStreaming), r.stream))
+    }
+
+    private def byteLight(r: LogicalRDD): Boolean =
+      r.rdd.isCheckpointed && r.rdd.getNumPartitions == 1 &&
+        bridge.storedBytes(r.rdd.sparkContext, r.rdd.id).exists(_ <= conf.filesOpenCostInBytes)
   }
 
   /** Unpersist the blocks behind a pinned frame; others are left alone. */

@@ -31,40 +31,13 @@ import org.apache.spark.sql.types.StructType
   *
   * The one-partition claim: when the data files listed under EVERY path
   * total no more than the session's `spark.sql.files.openCostInBytes`
-  * (read at call time), the read is `coalesce(1)`. The bound is Spark's
-  * own split rule: a file of at most `openCostInBytes` is never split,
-  * whatever the core count (unless `maxPartitionBytes` is set below
-  * it), so a one-file listing under it is one split anyway and loses
-  * no scan parallelism to the claim. A multi-file listing
-  * under it gets one split per file from Spark only because each file
-  * is charged one open; the claim reads it as the one split the same
-  * bytes make as one file. `CoalesceExec(1)` reports `SinglePartition`,
-  * which satisfies the clustered distribution aggregates and sort-merge
-  * joins require, so no exchange is planned between the scan and them
-  * and AQE runs no query-stage job for one. Filters and column pruning
-  * still push into the scan. Explicit partition counts still fan a
-  * claimed scan out: a `repartition(n, ...)` directly over the read
-  * drops the coalesce (`CollapseRepartition`), one over a projection of
-  * it is the exchange that spreads all work above it, and
-  * [[graft.operators.Parallelism.widened]] widens its one partition to
-  * the shard count — so the operators' pinned fan-outs hold. A larger
-  * listing keeps Spark's split planning, so at scale the reader changes
-  * nothing.
-  *
-  * The price of the claim: over a multi-file listing, the scan and the
-  * narrow operators above it run as one task, and `SinglePartition`
-  * carries on through every aggregate, window and join above the read
-  * until an explicit repartition, where AQE would have spread each
-  * exchange of more than `minPartitionSize` (1 MB) over several tasks.
-  * Per-row work whose cost
-  * does not follow the scanned bytes — a codec that expands an id into
-  * a payload — pins its own fan-out, as [[graft.multimodal.Multimodal]]
-  * does with `widened`. A claimed read that one plan reaches through
-  * two branches (a self-join, or one aggregate feeding three) would run
-  * the branches' shared work once per branch, and one exploded before
-  * its first exchange would put the expanded rows on one task;
-  * [[DropClaims]] drops both kinds of claim. Tuning
-  * `openCostInBytes` for file packing moves the claim's bound with it.
+  * (read at call time), the read is `coalesce(1)` — the byte-light rule
+  * of [[graft.operators.Parallelism]], which states what the claim buys,
+  * what it costs and how explicit partition counts still fan a claimed
+  * read out. `CoalesceExec(1)` reports `SinglePartition`; filters and
+  * column pruning still push into the scan. [[DropClaims]] drops a
+  * claim whose exchange a plan needs. A larger listing keeps Spark's
+  * split planning, so at scale the reader changes nothing.
   *
   * The fallback: when the last path does not exist (or is a glob), holds
   * no data file, holds subdirectories (hive-style `k=v` partitions),

@@ -31,6 +31,14 @@ object bridge {
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
 
+  /** The bytes the block manager stores for RDD `id`, in memory and on
+    * disk, or None when none of its blocks is stored
+    * (`getRDDStorageInfo` is private[spark]). Asks the driver's block
+    * manager master: starts no job.
+    */
+  def storedBytes(sc: org.apache.spark.SparkContext, id: Int): Option[Long] =
+    sc.getRDDStorageInfo(_.id == id).headOption.map(i => i.memSize + i.diskSize)
+
   /** The optimizer rules a SparkSessionExtensions instance would inject
     * (buildOptimizerRules is private[sql]) — lets tests pin WHICH rules
     * ride the class-extension path vs the extraOptimizations path.

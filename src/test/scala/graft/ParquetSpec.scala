@@ -1,12 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -60,35 +58,6 @@ class ParquetSpec extends AnyFunSuite {
   private def shuffles(df: DataFrame): Int =
     finalPlan(df).count(_.isInstanceOf[ShuffleExchangeExec])
 
-  /** Jobs `body` starts: the ids between a start and an end marker job,
-    * so events still queued from earlier work are not counted and every
-    * job of `body` has been seen once the end marker's end arrives. */
-  private def jobsDuring(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.parquetspec.marker"
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]
-    val ended = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add((e.jobId, e.properties != null && e.properties.getProperty(key) != null))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (starts.asScala.exists { case (id, m) => m && id == e.jobId } &&
-            starts.asScala.count(_._2) == 2) ended.countDown()
-    }
-    def marker(): Unit = {
-      sc.setLocalProperty(key, "1")
-      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(key, null)
-    }
-    sc.addSparkListener(l)
-    try {
-      marker(); body; marker()
-      assert(ended.await(60, TimeUnit.SECONDS), "end marker job never ended on the listener")
-      val all = starts.asScala.toSeq
-      val Seq(from, to) = all.filter(_._2).map(_._1).sorted
-      all.count { case (id, m) => !m && id > from && id < to }
-    } finally sc.removeSparkListener(l)
-  }
-
   /** Same outcome as `spark.read.parquet`: an equal schema, or a failure
     * of the same class (and error condition, for Spark's own errors). */
   private def assertSameSchema(mine: => DataFrame,
@@ -122,10 +91,10 @@ class ParquetSpec extends AnyFunSuite {
     TestSpark.writeNanosParquet(s"$nanos/part-0.parquet", Seq((1L, 10L)))
     val paths = Tables.names.map(n => s"$sf/$n.parquet") :+ nanos
     val s = session(nanosAsLong -> "true")
-    assert(jobsDuring(paths.foreach(p => Parquet.read(s, p).schema)) == 0)
-    assert(jobsDuring(paths.foreach(p => Parquet.schemaOf(s, p))) == 0)
+    assert(TestSpark.jobsDuring(paths.foreach(p => Parquet.read(s, p).schema)) == 0)
+    assert(TestSpark.jobsDuring(paths.foreach(p => Parquet.schemaOf(s, p))) == 0)
     // positive control: the counter sees the inference job the reader avoids
-    assert(jobsDuring(s.read.parquet(paths.head).schema) == 1)
+    assert(TestSpark.jobsDuring(s.read.parquet(paths.head).schema) == 1)
   }
 
   test("a missing path and an empty directory fail as spark.read.parquet fails") {

@@ -31,25 +31,61 @@ object TestSpark {
 
   /** Runs `body` with Spark's own split planning of the fixture tables —
     * one split per file, as Spark plans any file of at most
-    * `openCostInBytes` — and no listing claimed as one partition by
-    * [[graft.sources.Parquet.read]]: `openCostInBytes` at 1 byte voids
-    * the claim, and `minPartitionNum` at 1 keeps each file one split
-    * (it would otherwise be cut into per-core byte ranges). The fixtures
-    * are far below one file open, so without this their aggregates,
-    * windows and joins plan no exchange at all; the guards on exchange
-    * placement and shuffle volume describe the plans of scans that feed
-    * an exchange. Keep the query's construction inside `body`: the
-    * reader decides at call time. */
+    * `openCostInBytes` — and no byte-light one-partition claim
+    * ([[graft.operators.Parallelism]]): `openCostInBytes` at 1 byte voids
+    * the claims of [[graft.sources.Parquet.read]] and of
+    * [[graft.sources.CheckpointScope.ClaimOnePartition]], and
+    * `minPartitionNum` at 1 keeps each file one split (it would otherwise
+    * be cut into per-core byte ranges). The fixtures are far below one
+    * file open, so without this their aggregates, windows and joins plan
+    * no exchange at all; the guards on exchange placement and shuffle
+    * volume describe the plans of scans that feed an exchange. Keep the
+    * query's construction and its run inside `body`: the reader decides
+    * at call time, the checkpoint rule when the plan is optimized. */
   def withFileSplits[T](body: => T): T =
     withConf("spark.sql.files.openCostInBytes" -> "1", "spark.sql.files.minPartitionNum" -> "1")(body)
 
-  private def withConf[T](settings: (String, String)*)(body: => T): T = {
+  /** Runs `body` with `settings` on the shared session, restoring the
+    * previous values afterwards. */
+  def withConf[T](settings: (String, String)*)(body: => T): T = {
     val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
     settings.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** Jobs `body` starts: the ids between a start and an end marker job,
+    * so events still queued from earlier work are not counted and every
+    * job of `body` has been seen once the end marker's end arrives. */
+  def jobsDuring(body: => Any): Int = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.testspark.marker"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add((e.jobId, e.properties != null && e.properties.getProperty(key) != null))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (starts.asScala.exists { case (id, m) => m && id == e.jobId } &&
+            starts.asScala.count(_._2) == 2) ended.countDown()
+    }
+    def marker(): Unit = {
+      sc.setLocalProperty(key, "1")
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      marker(); body; marker()
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "end marker job never ended on the listener")
+      val all = starts.asScala.toSeq
+      val Seq(from, to) = all.filter(_._2).map(_._1).sorted
+      all.count { case (id, m) => !m && id > from && id < to }
+    } finally sc.removeSparkListener(l)
   }
 
   /** Total shuffle-WRITE RECORDS across every stage `body` runs —
